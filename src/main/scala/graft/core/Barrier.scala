@@ -21,9 +21,10 @@ import org.apache.spark.storage.StorageLevel
   *
   * Lifecycle: barrier blocks are NOT free — SCALING.md measured a later
   * query inflating 2× at 16× data purely from accumulated barrier storage.
-  * Long-lived sessions that run many queries back-to-back (Bench, Scaling,
-  * a notebook) must call [[releaseAll]] between queries; per-query driver
-  * runs (Verify) get release for free when the session stops.
+  * Long-lived sessions that run many queries back-to-back (perfbench,
+  * Scaling, Inspect, a notebook) must call [[releaseAll]] between
+  * queries; per-query driver runs (Verify) get release for free when the
+  * session stops.
   *
   * OWNERSHIP — tracking is per-thread, release is caller-scoped. Every
   * `apply` records the blocks it created in the CALLING THREAD's scope, and
@@ -59,12 +60,15 @@ object Barrier {
     * manager, so on a REAL cluster an executor/block loss mid-query is
     * unrecoverable — the right default there is the `persist(DISK_ONLY)`
     * mode, which keeps lineage and recomputes only lost blocks. Local
-    * masters keep the faster single-JVM localCheckpoint (an executor loss
-    * IS the JVM dying; there is nothing to recover to). An explicit conf
-    * always wins — this only picks the unset-conf default.
+    * masters (`local`, `local[n]`) keep the faster single-JVM
+    * localCheckpoint (an executor loss IS the JVM dying; there is nothing
+    * to recover to). `local-cluster[...]` runs separate executor JVMs, so
+    * it gets `persist` like any cluster. An explicit conf always wins —
+    * this only picks the unset-conf default.
     */
   private[graft] def defaultMode(master: String): String =
-    if (master.startsWith("local")) "localCheckpoint" else "persist"
+    if (master == "local" || master.startsWith("local[")) "localCheckpoint"
+    else "persist"
 
   private final class Scope {
     val persisted = scala.collection.mutable.ListBuffer.empty[DataFrame]
@@ -88,16 +92,7 @@ object Barrier {
     // releaseAll — sweeping here bounds that growth at the next barrier
     // creation from ANY thread
     sweepDead(df.sparkSession)
-    materialize(df, myScope())
-  }
-
-  /** Materialize one barrier, registering its blocks in `scope` (which may
-    * belong to a thread other than the one running the job — see [[all]]).
-    * Scope mutation is monitor-guarded, so cross-thread registration is
-    * safe as long as the owning thread stays alive, which [[all]]'s caller
-    * does by construction.
-    */
-  private def materialize(df: DataFrame, scope: Scope): DataFrame =
+    val scope = myScope()
     df.sparkSession.conf.getOption(ConfKey)
       .getOrElse(defaultMode(df.sparkSession.sparkContext.master)) match {
       case "persist" =>
@@ -119,39 +114,6 @@ object Barrier {
         scope.synchronized { scope.ckptRddIds ++= ids }
         out
     }
-
-  /** Materialize several INDEPENDENT barriers CONCURRENTLY (guide §2.6:
-    * actions are only sequential because driver code calls them
-    * sequentially; a query whose plan needs two unrelated relations
-    * materialized was paying their job tails back to back). Each input
-    * materializes on its own thread while every created block registers
-    * in the CALLING thread's scope, so the create/release-on-one-thread
-    * ownership contract is unchanged — `releaseAll` on the caller drops
-    * them all, and the short-lived workers own nothing a sweep could
-    * reclaim. Spark's scheduler interleaves the jobs (FIFO: later legs
-    * back-fill cores the first leg's tail frees). Result order matches
-    * input order; the first failure rethrows after every worker settles.
-    */
-  def all(dfs: Seq[DataFrame]): Seq[DataFrame] = dfs match {
-    case Seq() => Seq.empty
-    case Seq(one) => Seq(apply(one))
-    case _ =>
-      dfs.headOption.foreach(df => sweepDead(df.sparkSession))
-      val scope = myScope()
-      val results = new Array[Either[Throwable, DataFrame]](dfs.size)
-      val threads = dfs.zipWithIndex.map { case (df, i) =>
-        val t = new Thread(() => {
-          results(i) =
-            try Right(materialize(df, scope))
-            catch { case e: Throwable => Left(e) }
-        }, s"graft-barrier-all-$i")
-        t.setDaemon(true)
-        t.start()
-        t
-      }
-      threads.foreach(_.join())
-      results.collectFirst { case Left(e) => e }.foreach(throw _)
-      results.map(_.toOption.get).toSeq
   }
 
   /** `df.barrier()` chain syntax at call sites. */

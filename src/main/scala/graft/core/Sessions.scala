@@ -40,7 +40,7 @@ object Sessions {
         RocksDbProvider)
     // cluster-profile reuse barrier (persist(DISK_ONLY) instead of
     // localCheckpoint — see core.Barrier): SPARK_GRAFT_BARRIER=persist
-    // lets the whole Verify/Bench surface run under the cluster tier
+    // lets the whole Verify/perfbench surface run under the cluster tier
     sys.env.get("SPARK_GRAFT_BARRIER").foreach(m => b.config(Barrier.ConfKey, m))
     // prefix-sum bucket-count override (TextAnalysis.prefixBuckets) —
     // output-invariant by design; the env hook lets the whole

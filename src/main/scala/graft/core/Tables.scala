@@ -95,7 +95,7 @@ object Tables {
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val stamp = pathStamp(spark, path)
-    val raw = if (name == "events") {
+    if (name == "events") {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val r = read(spark, path, stamp)
       // ns-fixture: ts arrives as a nanos long (convert); derived copies
@@ -105,24 +105,20 @@ object Tables {
           org.apache.spark.sql.functions.expr("ts div 1000")))
       else r
     } else read(spark, path, stamp)
-    spread(raw, name, stamp.map(_._2).getOrElse(Seq.empty))
   }
 
-  /** (cacheKey, totalBytes) for a parquet path — one filesystem listing,
-    * shared by the schema cache and the ingest-spread decision below. The
+  /** Schema-cache key for a parquet path — one filesystem listing. The
     * key folds in EVERY data file's (name, length, mtime) — not just the
     * totals (ADVICE r17: a rewrite preserving total bytes within one mtime
     * tick must still miss) — so a path REWRITTEN mid-session (spec
     * fixtures regenerate into the same tmp dir) never serves a stale
     * schema; fixture files themselves are immutable for a session's life.
     * Directory listings skip `_`/`.`-prefixed entries (_SUCCESS,
-    * .crc) to match Spark's own data-file filter — counting them would
-    * pad the openCost math and perturb the split estimate.
+    * .crc) to match Spark's own data-file filter.
     * None = path unreadable; the plain reader surfaces the real error.
     * Only NonFatal errors downgrade — OOM/interrupts propagate.
     */
-  private def pathStamp(spark: SparkSession, path: String)
-      : Option[(String, Seq[Long])] =
+  private def pathStamp(spark: SparkSession, path: String): Option[String] =
     try {
       val p = new org.apache.hadoop.fs.Path(path)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -134,11 +130,10 @@ object Tables {
             !n.startsWith("_") && !n.startsWith(".")
           })
         else Seq(st)
-      val lens = files.map(_.getLen)
       val sig = files.map(f =>
         s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
         .mkString(",")
-      Some((s"$path#$sig", lens))
+      Some(s"$path#$sig")
     } catch { case scala.util.control.NonFatal(_) => None }
 
   /** Read a parquet path with the SESSION-CACHED inferred schema
@@ -159,9 +154,9 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   private def read(spark: SparkSession, path: String,
-      stamp: Option[(String, Seq[Long])]): DataFrame =
+      stamp: Option[String]): DataFrame =
     stamp match {
-      case Some((key, _)) =>
+      case Some(key) =>
         // bound the cache (ADVICE r17): every rewrite strands its old
         // entry, so a long session regenerating fixtures could grow this
         // without limit; schemas are tiny but the keys embed file lists.
@@ -173,83 +168,6 @@ object Tables {
         spark.read.schema(sch).parquet(path)
       case None => spark.read.parquet(path)
     }
-
-  /** Scale-adaptive ingest spread (OPTIMIZATION r17) — the codec
-    * parallelism floor of `Multimodal.spreadToCores` (VERDICT r14 #4)
-    * generalized to the shared batch read path, because EVERY per-row
-    * operator above a scan inherits the scan's split count, and a parquet
-    * scan can never be more parallel than its ROW GROUPS (the bench
-    * fixtures are ONE row group per table, so scan-rooted stages ran on
-    * 1 of the session's cores).
-    *
-    * The r17 paired A/B (4 interleaved pairs per query, quiet window)
-    * showed a BLANKET spread is a net loss: the extra exchange + AQE
-    * stage costs ~0.2–0.4 s, which only pays when the task(s) it
-    * re-deals hold enough input to keep the freed cores busy —
-    * lineitem-rooted queries won (q1 −0.36 s, j1 −0.12 s median at
-    * 3.7 MB/split) while every query rooted in a ≤2 MB single-split
-    * table lost (+0.05..+0.7 s). Hence the firing conditions:
-    *  (a) the scan would plan fewer splits than defaultParallelism
-    *      (computed from file bytes via the FilePartition split math —
-    *      no planning pass); at 100 TB every fact table has orders of
-    *      magnitude more splits than the cluster has cores, so the
-    *      production plan is untouched;
-    *  (b) each saved split carries ≥ spark.graft.scanSpreadMinSplitBytes
-    *      (default 3 MiB) — the per-task-economics bar the A/B measured:
-    *      below it the re-deal's fixed cost exceeds the freed compute;
-    *  (c) the relation is ≤ spark.graft.scanSpreadMaxBytes (default
-    *      1 GiB): a mid-size table scanning in few splits is better
-    *      served by fixing its file layout (guide §6) than a reshuffle.
-    *
-    * Partitioning is a DETERMINISTIC hash over ALL of the table's columns
-    * (r18, VERDICT r17 #6: the r17 lead-key hash silently under-delivered
-    * on a low-cardinality or skewed lead column — a constant key would
-    * re-deal everything into ONE partition; the full row hash is
-    * shape-proof for any table whose rows are mostly distinct, which every
-    * declared fixture table is). Deterministic hash, not round-robin —
-    * round-robin re-deals rows when a task retries (SPARK-38388), and
-    * its sort-before-repartition pays a per-partition sort this narrow
-    * exchange doesn't need. Pruning and pushdown pass through a
-    * Repartition node, so the scan below keeps PushedFilters/ReadSchema
-    * (plan-asserted in OperatorsSpec). Disable with
-    * spark.graft.scanSpread=false (the A/B hook).
-    */
-  private def spread(df: DataFrame, name: String,
-      fileLens: Seq[Long]): DataFrame = {
-    val s = df.sparkSession
-    def confLong(k: String, d: Long): Long =
-      s.conf.getOption(k).map(v => v.trim.toLongOption.getOrElse(
-        sys.error(s"$k must be an integer, got '$v'"))).getOrElse(d)
-    val enabled = s.conf.getOption("spark.graft.scanSpread")
-      .map(v => v.trim.toBooleanOption.getOrElse(
-        sys.error(s"spark.graft.scanSpread must be a boolean, got '$v'")))
-      .getOrElse(true)
-    if (!enabled || fileLens.isEmpty || !schemas.contains(name)) return df
-    val len = fileLens.sum
-    val cores = s.sparkContext.defaultParallelism
-    val maxBytes = confLong("spark.graft.scanSpreadMaxBytes", 1L << 30)
-    val minSplit = confLong("spark.graft.scanSpreadMinSplitBytes", 3L << 20)
-    if (len == 0 || len > maxBytes) return df
-    // FilePartition.maxSplitBytes math, driver-side, PER FILE (a parquet
-    // file splits into ceil(len/maxSplitBytes) pieces; small files can
-    // only pack together, never split further — so Σ per-file splits is
-    // the scan's parallelism ceiling, and row groups can only lower it:
-    // firing on it is conservative). The openCost term charges each file
-    // the same padding FilePartition uses when sizing bytesPerCore.
-    // one conf source (ADVICE r17): read the split knobs from THIS df's
-    // session, not the thread-local active one — multi-session callers
-    // (BenchServer threads, suite-vs-query sessions) can differ
-    val sqlc = s.sessionState.conf
-    val openCost = sqlc.filesOpenCostInBytes
-    val padded = len + openCost * fileLens.size
-    val maxSplitBytes = math.min(sqlc.filesMaxPartitionBytes,
-      math.max(openCost, padded / math.max(cores, 1)))
-    val splits = fileLens
-      .map(l => ((l + maxSplitBytes - 1) / maxSplitBytes).toInt).sum
-    if (splits >= cores || len / math.max(splits, 1) < minSplit) return df
-    df.repartition(cores, schemas(name).fields.map(f =>
-      org.apache.spark.sql.functions.col(f.name)): _*)
-  }
 
   /** Streaming read of the same table — identical downstream transforms.
     * (Kafka source analog, ref FlinkSourceUtil.java:24-56; in production

@@ -158,11 +158,11 @@ object Multimodal extends OpModule {
     * compute-bound, so its task count must track CORES, not the scan's
     * split count — yet it inherits the latter: the bench fixture's
     * documents table is one ~600 KB file = ONE split, so every codec
-    * query ran serially on 1 of 32 threads (measured by MmDiag), which
-    * is both a 32× parallelism loss and the source of the
-    * mm_decode_features bench instability (a single-task stage has zero
-    * cross-task averaging, so one thread's scheduling jitter IS the
-    * query time; spread 1.9× even on a quiet host, 4× under load).
+    * query ran serially on 1 of 32 threads, which is both a 32×
+    * parallelism loss and the source of the mm_decode_features bench
+    * instability (a single-task stage has zero cross-task averaging, so
+    * one thread's scheduling jitter IS the query time; spread 1.9× even
+    * on a quiet host, 4× under load).
     * When the input already carries >= defaultParallelism splits — any
     * real corpus, where files.maxPartitionBytes controls sizing — this
     * is a no-op and NO shuffle is added; below it, the thin
@@ -175,29 +175,7 @@ object Multimodal extends OpModule {
     val s = df.sparkSession
     val cores = s.sparkContext.defaultParallelism
     val n = df.queryExecution.toRdd.getNumPartitions
-    if (n >= cores) return df
-    // Work-per-task bar (r18, VERDICT r17 #5): the r14 floor re-dealt ANY
-    // sub-cores input to ALL cores, which over-spreads tiny inputs — the
-    // 8-core driver run beat the 32-core run (ratio 0.67) because 32
-    // tasks of ~18 KB each are scheduling overhead, not parallelism.
-    // Like the ingest spread's per-split bar, the target task count is
-    // input-size-derived: enough tasks that each holds
-    // >= codecMinBytesPerTask of payload (decode cost tracks payload
-    // bytes), capped at cores. 0 disables the bar (always spread to
-    // cores). At production split counts (n >= cores) this whole floor
-    // is a no-op either way.
-    val minPer = s.conf.getOption("spark.graft.codecMinBytesPerTask")
-      .map(v => v.trim.toLongOption.getOrElse(sys.error(
-        "spark.graft.codecMinBytesPerTask must be an integer, got '" + v +
-          "'"))).getOrElse(32L << 10)
-    val target =
-      if (minPer <= 0) cores
-      else {
-        // driver-side estimate from the scan's file bytes — no data pass
-        val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-        (bytes / minPer).min(BigInt(cores)).max(BigInt(1)).toInt
-      }
-    if (n < target) df.repartition(target, col("doc_id")) else df
+    if (n < cores) df.repartition(cores, col("doc_id")) else df
   }
 
   /** The (doc_id, payload) relation every codec stage decodes — factored

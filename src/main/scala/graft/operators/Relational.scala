@@ -56,14 +56,12 @@ object Relational extends OpModule {
     // Column chains per row per side.
     "q_join_size_sketches" -> ((s, dir) => {
       graft.plans.GraftFunctions.register(s)
-      // the two fact-side key relations are independent — materialize
-      // their barriers CONCURRENTLY (r18, guide §2.6) instead of paying
-      // the two job tails back to back
-      val Seq(ca, cb) = graft.core.Barrier.all(Seq(
+      val Seq(ca, cb) = Seq(
         t(s, dir, "orders")
           .select(col("o_orderkey").cast("string").as("k")),
         t(s, dir, "lineitem")
-          .select(col("l_orderkey").cast("string").as("k"))))
+          .select(col("l_orderkey").cast("string").as("k")))
+        .map(graft.core.Barrier(_))
       def sketch(side: org.apache.spark.sql.DataFrame, p: String) =
         side.select(expr("agms_signs(k)").as("sg"))
           .agg(sum(element_at(col("sg"), 1)).as(s"${p}0"),
@@ -122,16 +120,16 @@ object Relational extends OpModule {
     // join and shuffling ~the matching tenth: prune_ppm IS the shuffle
     // saved.
     "j9_bloom_semijoin" -> ((s, dir) => {
-      // dim side and fact side are independent — concurrent barriers
-      // (r18, guide §2.6); dimSel serves bitmap + truth + join side,
-      // fact is counted, probed, and ground-truth joined
-      val Seq(dimSel, fact) = graft.core.Barrier.all(Seq(
+      // dimSel serves bitmap + truth + join side; fact is counted,
+      // probed, and ground-truth joined
+      val Seq(dimSel, fact) = Seq(
         t(s, dir, "part").filter(col("p_size") >= 46)
           .select(col("p_partkey")),
         t(s, dir, "lineitem")
           .select(col("l_partkey"),
             expr("CAST(conv(substring(md5(CAST(l_partkey AS STRING)), " +
-              "1, 15), 16, 10) AS BIGINT)").as("fpl"))))
+              "1, 15), 16, 10) AS BIGINT)").as("fpl")))
+        .map(graft.core.Barrier(_))
       val bitmap = TextAnalysis.bloomBitmapFromFps(
         dimSel.select(md5(col("p_partkey").cast("string")).as("fp")))
       val pass = fact.join(broadcast(bitmap), lit(true))
@@ -173,17 +171,14 @@ object Relational extends OpModule {
           "l_orderkey"),
         ("part_lineitem", "part", "p_partkey", "lineitem", "l_partkey"),
         ("customer_orders", "customer", "c_custkey", "orders", "o_custkey"))
-      // the three legs' SIX key-count rollups are independent, as are the
-      // six MCV cuts over them — materialize each tier's barriers
-      // CONCURRENTLY (r18, guide §2.6) instead of twelve sequential job
-      // tails
-      val counts = graft.core.Barrier.all(legs.flatMap {
+      val counts = legs.flatMap {
         case (_, ta, ka, tb, kb) => Seq(
           t(s, dir, ta).groupBy(col(ka).as("k")).agg(count(lit(1)).as("c")),
           t(s, dir, tb).groupBy(col(kb).as("k")).agg(count(lit(1)).as("c")))
-      })
-      val mcvs = graft.core.Barrier.all(counts.map(c =>
-        c.orderBy(col("c").desc, col("k").asc).limit(32)))
+      }.map(graft.core.Barrier(_))
+      val mcvs = counts
+        .map(_.orderBy(col("c").desc, col("k").asc).limit(32))
+        .map(graft.core.Barrier(_))
       def one(name: String, ca: org.apache.spark.sql.DataFrame,
           cb: org.apache.spark.sql.DataFrame,
           ma: org.apache.spark.sql.DataFrame,
@@ -257,11 +252,9 @@ object Relational extends OpModule {
             expr("(max_per_key * n_keys * 1000000) DIV n_rows")
               .as("hot_ratio_ppm"))
       }
-      // the two relation reports are independent — their histogram
-      // barriers materialize CONCURRENTLY (r18, guide §2.6)
-      val Seq(cumL, cumE) = graft.core.Barrier.all(Seq(
+      val Seq(cumL, cumE) = Seq(
         cumOf("l_orderkey", t(s, dir, "lineitem")),
-        cumOf("user_id", t(s, dir, "events"))))
+        cumOf("user_id", t(s, dir, "events"))).map(graft.core.Barrier(_))
       report("lineitem", "l_orderkey", cumL)
         .unionByName(report("events", "user_id", cumE))
     }),

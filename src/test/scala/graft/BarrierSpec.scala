@@ -96,50 +96,17 @@ class BarrierSpec extends SparkSpec {
       "orphaned blocks of a dead thread must be reclaimed")
   }
 
-  test("all(): concurrent barriers register in the CALLER's scope") {
-    graft.core.Barrier.releaseAll(spark)
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val docs = graft.core.Tables.load(spark, sfDir, "documents")
-    val outs = graft.core.Barrier.all(Seq(
-      docs.select("doc_id"),
-      docs.groupBy("source")
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))))
-    // results are real materialized barriers in input order
-    assert(outs.size === 2)
-    assert(outs(0).columns.toSeq === Seq("doc_id"))
-    assert(outs(1).columns.toSeq === Seq("source", "n"))
-    assert(outs(0).count() === docs.count())
-    assert(spark.sparkContext.getPersistentRDDs.size > before.size,
-      "all() should have parked barrier blocks")
-    // ownership is the CALLING thread's: our releaseAll drops every block
-    // even though the jobs ran on worker threads
-    graft.core.Barrier.releaseAll(spark)
-    assert(spark.sparkContext.getPersistentRDDs.keySet === before,
-      "caller releaseAll must drop all()'s blocks")
-  }
-
-  test("all() matches sequential barriers result-for-result") {
-    graft.core.Barrier.releaseAll(spark)
-    val docs = graft.core.Tables.load(spark, sfDir, "documents")
-    def legs = Seq(
-      docs.select("doc_id"),
-      docs.select("source"))
-    val seqOut = legs.map(graft.core.Barrier(_)).map(_.collect().toSeq)
-    val parOut = graft.core.Barrier.all(legs).map(_.collect().toSeq)
-    assert(parOut.map(_.sortBy(_.toString)) ===
-      seqOut.map(_.sortBy(_.toString)))
-    graft.core.Barrier.releaseAll(spark)
-  }
-
   test("defaultMode: localCheckpoint on local masters, persist otherwise") {
     // VERDICT r17 #3: lineage truncation makes an executor loss
     // unrecoverable on a real cluster, so the unset-conf default must
     // flip to the lineage-keeping persist path off-local
     assert(graft.core.Barrier.defaultMode("local[32]") === "localCheckpoint")
     assert(graft.core.Barrier.defaultMode("local[*]") === "localCheckpoint")
+    assert(graft.core.Barrier.defaultMode("local") === "localCheckpoint")
+    // local-cluster runs separate executor JVMs: an executor can be lost
+    // while the driver lives, so it keeps lineage like any cluster
     assert(graft.core.Barrier.defaultMode("local-cluster[2,1,1024]")
-      === "localCheckpoint")
+      === "persist")
     assert(graft.core.Barrier.defaultMode("yarn") === "persist")
     assert(graft.core.Barrier.defaultMode("spark://host:7077") === "persist")
     assert(graft.core.Barrier.defaultMode("k8s://https://host") === "persist")

@@ -16,10 +16,20 @@ import org.scalatest.funsuite.AnyFunSuite
 class BoundedWindowLintSpec extends AnyFunSuite {
 
   test("every unpartitioned Window.orderBy site declares its bound") {
-    val root = java.nio.file.Paths.get("src/main/scala")
+    // anchor to the build (the directory holding build.sbt above this
+    // suite's compiled classes), not to whatever cwd the JVM started in
+    val classes = java.nio.file.Paths.get(
+      getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    val base = Iterator.iterate(classes)(_.getParent).takeWhile(_ != null)
+      .find(d => java.nio.file.Files.exists(d.resolve("build.sbt")))
+      .getOrElse(fail(s"no build.sbt above $classes"))
+    val root = base.resolve("src/main/scala")
     val bad = scala.collection.mutable.ListBuffer.empty[String]
-    java.nio.file.Files.walk(root).forEach { p =>
+    var scanned = 0
+    val walk = java.nio.file.Files.walk(root)
+    try walk.forEach { p =>
       if (p.toString.endsWith(".scala")) {
+        scanned += 1
         val lines = java.nio.file.Files.readAllLines(p)
         for (i <- 0 until lines.size()) {
           val l = lines.get(i)
@@ -35,7 +45,8 @@ class BoundedWindowLintSpec extends AnyFunSuite {
           }
         }
       }
-    }
+    } finally walk.close()
+    assert(scanned > 0, s"no .scala files under $root")
     assert(bad.isEmpty,
       "unpartitioned Window.orderBy without a bounded-window: declaration " +
         "within 4 lines above:\n" + bad.mkString("\n"))

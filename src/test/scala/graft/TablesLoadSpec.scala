@@ -1,110 +1,12 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.core.Tables
 
-/** The r17 ingest-path internals: the session schema cache and the
-  * scale-adaptive scan spread in `Tables.load` (OPTIMIZATION_r17.md #1/#2).
-  * Both are METADATA-level — neither may ever change what a query returns,
-  * and the spread may only fire when the per-task-economics conditions
-  * hold. The conf knobs let the tests force both sides of every branch on
-  * sf-sized fixtures.
+/** The r17 ingest-path internal: the session schema cache in
+  * `Tables.load` (OPTIMIZATION_r17.md #1). It is METADATA-level — it may
+  * never change what a query returns.
   */
 class TablesLoadSpec extends SparkSpec {
-
-  private def withConf(kv: (String, String)*)(body: => Unit): Unit = {
-    val old = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
-    kv.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body finally old.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None)    => spark.conf.unset(k)
-    }
-  }
-
-  private def ingestExchanges(df: org.apache.spark.sql.DataFrame): Int =
-    "REPARTITION_BY_NUM".r
-      .findAllIn(df.queryExecution.executedPlan.toString).length
-
-  test("spread fires only past the per-split byte bar, never changes rows") {
-    val plain = withConfValue("spark.graft.scanSpread", "false") {
-      Tables.load(spark, sfDir, "documents")
-    }
-    // sf0.001 documents is far below 3 MiB/split: default conf must not fire
-    val deflt = Tables.load(spark, sfDir, "documents")
-    assert(ingestExchanges(deflt) === 0,
-      "sub-bar table must not spread under the default MinSplitBytes")
-    // force the bar down: the same table must now spread to cores ...
-    withConf("spark.graft.scanSpreadMinSplitBytes" -> "1") {
-      val forced = Tables.load(spark, sfDir, "documents")
-      assert(ingestExchanges(forced) === 1, "forced spread must add " +
-        "exactly the one REPARTITION_BY_NUM ingest exchange")
-      // ... with identical content (order-independent): the spread is a
-      // partitioning change only. Signature = count + DECIMAL sum of
-      // per-row hashes over null-sentineled casts (ADVICE r17: a bare
-      // bit_xor cancels rows duplicated an even number of times and
-      // concat_ws silently drops nulls; sum distinguishes multiplicity
-      // and the sentinel distinguishes null from absent).
-      def sig(df: org.apache.spark.sql.DataFrame)
-          : (Long, java.math.BigDecimal) = {
-        val cols = df.columns.map(c =>
-          coalesce(col(c).cast("string"), lit("∅")))
-        val r = df.select(count(lit(1)),
-          sum(xxhash64(concat_ws("|", cols: _*)).cast("decimal(38,0)")))
-          .collect()(0)
-        (r.getLong(0), r.getDecimal(1))
-      }
-      assert(sig(forced) === sig(plain), "spread changed the relation")
-      // the kill switch wins over everything
-      withConf("spark.graft.scanSpread" -> "false") {
-        assert(ingestExchanges(Tables.load(spark, sfDir, "documents")) === 0,
-          "scanSpread=false must disable the spread")
-      }
-    }
-    // a typo'd conf fails naming its key (the repo's conf discipline)
-    withConf("spark.graft.scanSpreadMinSplitBytes" -> "3mb") {
-      val e = intercept[RuntimeException] {
-        Tables.load(spark, sfDir, "documents")
-      }
-      assert(e.getMessage.contains("scanSpreadMinSplitBytes"), e.getMessage)
-    }
-  }
-
-  private def withConfValue[T](k: String, v: String)(body: => T): T = {
-    val old = spark.conf.getOption(k)
-    spark.conf.set(k, v)
-    try body finally old match {
-      case Some(x) => spark.conf.set(k, x)
-      case None    => spark.conf.unset(k)
-    }
-  }
-
-  test("spread stays even under a degenerate (constant) lead column") {
-    // VERDICT r17 #6: the r17 spread hashed the table's LEAD column only —
-    // a constant lead key would re-deal every row into ONE partition,
-    // silently losing the parallelism it promises. r18 hashes ALL columns,
-    // so distinct rows spread regardless of any one column's cardinality.
-    import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("tables_spread_degenerate").toString
-    (1 to 2048).map(i => (42L, s"text $i", "en", s"s$i", i.toLong))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    withConf("spark.graft.scanSpreadMinSplitBytes" -> "1") {
-      val spreadDf = Tables.load(spark, dir, "documents")
-      assert(ingestExchanges(spreadDf) === 1, "spread must fire")
-      val perPart = spreadDf
-        .groupBy(spark_partition_id().as("p"))
-        .agg(count(lit(1)).as("n"))
-        .collect()
-      val cores = spark.sparkContext.defaultParallelism
-      assert(perPart.length > math.max(2, cores / 2),
-        s"constant lead column must not collapse the spread: " +
-          s"${perPart.length} non-empty partitions of $cores")
-      assert(perPart.map(_.getLong(1)).max <= 2048 / 2,
-        "no partition may hold the bulk of a degenerate-lead-key table")
-    }
-  }
 
   test("schema cache serves the inferred schema and re-infers on rewrite") {
     import spark.implicits._
