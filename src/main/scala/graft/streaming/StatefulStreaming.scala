@@ -373,52 +373,6 @@ object StatefulStreaming {
         org.apache.spark.sql.functions.lit(0L).as("doc_id")), n)
       .select("gfp").distinct()
 
-  /** Streaming NEAR-DUP ingest dedup, for `foreachBatch` — the self-dedup
-    * sibling of [[nearDupGateBatch]] (which gates against a fixed
-    * benchmark): admit only documents that do not near-dup-match anything
-    * ALREADY ADMITTED, across micro-batches, at MinHash+Jaccard fidelity.
-    *
-    * Per batch: derive band signatures once (barriered), drop docs that
-    * match the signature STORE (everything admitted by PRIOR batches),
-    * GREEDY keep-first within the batch (lower doc_id wins; a doc whose
-    * only matches were themselves dropped is admitted —
-    * `Dedup.greedyDroppedDocs` over the `Dedup.verifiedPairs` relation,
-    * seeded with the store drops so a store-eliminated doc can't block an
-    * in-batch sibling; both tiers therefore share one semantics: admit iff
-    * no match against anything ADMITTED), then write the admitted docs'
-    * signatures under this batch's store directory. Idempotent under
-    * micro-batch replay by construction: the
-    * store is one Overwrite-mode directory per batchId and the current
-    * batch's directory is excluded from the read (see inline comments).
-    * The store partitions by hash(sig) bucket, which is part of the join
-    * key. Exact-fp tier with watermark-bounded state: [[dedupIngest]];
-    * this tier's state is the admitted signature set — the irreducible
-    * cost of exact-horizon near-dup ingest.
-    *
-    * COMPACTION bounds the store's directory count over a long-lived
-    * stream: once the prior `__batch=*` directories exceed
-    * `compactThreshold`, they are rewritten together with the previous
-    * generation into one bucketed `__gen=<N>` directory, so steady-state
-    * listing is O(compactThreshold) directories and each batch reads one
-    * compacted generation plus a bounded tail of recent batch dirs — not
-    * one directory per batch since job start. Superseded inputs are NOT
-    * deleted in the same batch: the returned `admitted` relation's
-    * lineage (kept for fault recovery under the persist barrier mode)
-    * still reaches their files until the caller's write completes, so
-    * the compaction only drops an `_OBSOLETE` tombstone into each input
-    * and the NEXT batch — when nothing can reference them any more —
-    * reaps tombstoned dirs before reading. Replay stays idempotent
-    * through a crash at ANY point: the new generation is fully written
-    * BEFORE any tombstone, a replayed batch that sees both reads
-    * duplicate signatures — harmless (drops feed a distinct/anti-join) —
-    * and the compaction itself dedupes on (doc_id, band), so a
-    * half-finished predecessor never doubles the store. The current
-    * batch's own directory is never compacted (it must stay excludable
-    * on replay).
-    *
-    * Returns the admitted subset of `batch`. Callers release barrier
-    * blocks after writing (`Barrier.releaseAll`).
-    */
   /** IVF ANN index maintenance — the per-micro-batch ingest of a
     * production vector index: assign each arriving vector to the FIXED
     * coarse centroids (one narrow broadcast-argmax pass, the same
@@ -444,8 +398,58 @@ object StatefulStreaming {
     Sinks.upsert(batch.sparkSession, assigned, "vec_id", "__seq", storeDir)
   }
 
+  /** Hash buckets of the near-dup signature store's `__bucket` partition
+    * column — part of the on-disk layout, so fixed for a store's life. */
+  private val SigBuckets = 16
+
+  /** Streaming NEAR-DUP ingest dedup, for `foreachBatch` — the self-dedup
+    * sibling of [[nearDupGateBatch]] (which gates against a fixed
+    * benchmark): admit only documents that do not near-dup-match anything
+    * ALREADY ADMITTED, across micro-batches, at MinHash+Jaccard fidelity.
+    *
+    * Per batch: derive band signatures once (barriered), drop docs that
+    * match the signature STORE (everything admitted by PRIOR batches),
+    * GREEDY keep-first within the batch (lower doc_id wins; a doc whose
+    * only matches were themselves dropped is admitted —
+    * `Dedup.greedyDroppedDocs` over the `Dedup.verifiedPairs` relation,
+    * seeded with the store drops so a store-eliminated doc can't block an
+    * in-batch sibling; both tiers therefore share one semantics: admit iff
+    * no match against anything ADMITTED), then write the admitted docs'
+    * signatures as this batch's contribution to the shared
+    * [[BatchStore]] format. Idempotent under micro-batch replay by
+    * construction: the contribution Overwrites its own `batchId`
+    * directory and the read takes only contributions with STRICTLY
+    * earlier ids (plus the live generations, which fold only ids below
+    * the batch that compacted them), so a replayed batch neither
+    * self-matches against its own failed attempt nor sees later batches.
+    * The store partitions by hash(sig) bucket, which is part of the join
+    * key. Exact-fp tier with watermark-bounded state: [[dedupIngest]];
+    * this tier's state is the admitted signature set — the irreducible
+    * cost of exact-horizon near-dup ingest.
+    *
+    * COMPACTION bounds the store's directory count over a long-lived
+    * stream: once the prior batch directories exceed `compactThreshold`,
+    * they are rewritten together with the previous generation into one
+    * bucketed generation ([[BatchStore.compacting]]), so steady-state
+    * listing is O(compactThreshold) directories and each batch reads one
+    * compacted generation plus a bounded tail of recent batch dirs — not
+    * one directory per batch since job start. Superseded inputs are NOT
+    * deleted in the same batch: the returned `admitted` relation's
+    * lineage (kept for fault recovery under the persist barrier mode)
+    * still reaches their files until the caller's write completes, so
+    * the compaction only tombstones each input and the NEXT batch — when
+    * nothing can reference them any more — reaps them before reading.
+    * Replay stays idempotent through a crash at ANY point: the new
+    * generation is fully written BEFORE any tombstone, a replayed batch
+    * that sees both reads duplicate signatures — harmless (drops feed a
+    * distinct/anti-join) — and the fold dedupes on (doc_id, band), so a
+    * half-finished predecessor never doubles the store.
+    *
+    * Returns the admitted subset of `batch`. Callers release barrier
+    * blocks after writing (`Barrier.releaseAll`).
+    */
   def nearDupIngestBatch(batch: DataFrame, storeDir: String, batchId: Long,
-      buckets: Int = 16, compactThreshold: Int = 16,
+      compactThreshold: Int = 16,
       timer: (String, Double) => Unit = (_, _) => ()): DataFrame = {
     import graft.core.Barrier.BarrierOps
     def phase[A](name: String)(body: => A): A = {
@@ -460,95 +464,18 @@ object StatefulStreaming {
     // gate lineage; "probe" executes the store read + both drop joins)
     val b = phase("gates")(batch.barrier()) // read by sig pass AND anti-join
     val sigs = phase("sigs")(graft.operators.Dedup.bandedSigs(b).barrier())
-    // Prior batches' admitted signatures. The store is one directory PER
-    // micro-batch (`__batch=<id>`, written with Overwrite below) and the
-    // current batch's own directory is EXCLUDED from the read — so a
-    // REPLAYED batch neither self-matches against its own failed attempt
-    // nor double-appends: replay is idempotent end to end. Hadoop
-    // FileSystem, not java.io.File — the store lives on the cluster FS.
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val allDirs =
-      if (fs.exists(root))
-        fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      else Array.empty[org.apache.hadoop.fs.Path]
-    // reap dirs a prior batch's compaction tombstoned: their content lives
-    // in the generation written before the tombstone, the stream runs one
-    // batch at a time, and any replay reads that generation — so nothing
-    // can reference them any more
-    val (deadDirs, liveDirs) = allDirs.partition(p =>
-      fs.exists(new org.apache.hadoop.fs.Path(p, "_OBSOLETE")))
-    deadDirs.foreach(p => fs.delete(p, true))
-    val batchDirs = liveDirs.filter(p => p.getName.startsWith("__batch=") &&
-      p.getName != s"__batch=$batchId")
-    val genDirs = liveDirs.filter(_.getName.startsWith("__gen="))
-    // an explicit data probe, not a broad AnalysisException catch: a dir
-    // holding only _SUCCESS is EMPTY (skip it), but a genuine read/schema
-    // failure must fail the batch loudly — swallowing it would admit the
-    // whole batch undeduped and let the compaction below destroy the store
-    def hasData(d: org.apache.hadoop.fs.Path): Boolean = {
-      val it = fs.listFiles(d, true)
-      val dPath = d.toUri.getPath
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next()
-        // mirror Spark's hidden-path rule exactly on EVERY path segment
-        // below d, not just the leaf: a crashed write leaves part files
-        // under `_temporary/...` — Spark's file index hides that whole
-        // subtree, so counting those files here would read a data-less
-        // dir and fail schema inference. Spark's rule ('_'-prefixed is
-        // hidden UNLESS it contains '=', '.'-prefixed always hidden)
-        // keeps partition dirs like `__bucket=5` visible
-        var p = f.getPath
-        var hidden = f.getLen <= 0
-        while (!hidden && p != null && p.toUri.getPath != dPath) {
-          val nm = p.getName
-          hidden = (nm.startsWith("_") && !nm.contains("=")) ||
-            nm.startsWith(".")
-          p = p.getParent
-        }
-        found = !hidden
-      }
-      found
-    }
-    // ONE recursive listing per dir, shared by the self-heal below and
-    // the reads: on an object store the gen trees are the bulk of the
-    // store, and re-listing them per use would double the per-batch
-    // listing cost the compaction exists to bound
-    val (liveGenDirs, deadGenDirs) = genDirs.partition(hasData)
-    val liveBatchDirs = batchDirs.filter(hasData)
-    // self-heal a crash DURING a compaction's generation write: a gen dir
-    // with no visible data (only a `_temporary` tree) is definitively dead
-    // — the stream runs one batch at a time, so no writer can be mid-write
-    // here — and nothing else would ever clean it. Tombstone it now; the
-    // reaper above deletes it next batch. (Partial BATCH dirs need no
-    // healing: a replay Overwrites the same directory.)
-    deadGenDirs.foreach { p =>
-      fs.create(new org.apache.hadoop.fs.Path(p, "_OBSOLETE"), true).close()
-    }
-    // gen and batch dirs carry different partition-path shapes, so each
-    // family reads under its own discovery (same basePath) and the select
-    // normalizes both to the one schema the joins need
-    // dirs arrive pre-filtered to data-bearing ones (the single hasData
-    // pass above)
-    def readDirs(nonEmpty: Array[org.apache.hadoop.fs.Path])
-        : Option[DataFrame] = {
-      if (nonEmpty.isEmpty) None
-      else Some(spark.read.option("basePath", storeDir)
-        .parquet(nonEmpty.map(_.toString).toIndexedSeq: _*)
-        .select(col("doc_id"), col("band"), col("sig"), col("toks"),
-          col("__bucket")))
-    }
-    val seen = (readDirs(liveGenDirs), readDirs(liveBatchDirs)) match {
-      case (Some(g), Some(bd)) => Some(g.unionByName(bd))
-      case (g, bd) => g.orElse(bd)
-    }
+    // prior batches' admitted signatures; an explicit data probe, not a
+    // broad AnalysisException catch: a genuine read/schema failure must
+    // fail the batch loudly — swallowing it would admit the whole batch
+    // undeduped and let the compaction below destroy the store
+    val store = BatchStore.compacting(spark, storeDir, batchId,
+      Seq("doc_id", "band", "sig", "toks", "__bucket"))
     // vs-store matches: same (band, sig) + Jaccard verify. __bucket =
     // pmod(hash(sig)) is a partition column of the store and part of the
     // join key, so the scan is eligible for dynamic partition pruning and
     // at scale both sides arrive bucketed by the signature hash.
-    val bucketOf = pmod(hash(col("sig")), lit(buckets))
-    val vsStore = seen.map { sn =>
+    val bucketOf = pmod(hash(col("sig")), lit(SigBuckets))
+    val vsStore = store.prior.map { sn =>
       sigs.withColumn("__b", bucketOf)
         .join(sn.select(col("band").as("s_band"), col("sig").as("s_sig"),
             col("toks").as("s_toks"), col("__bucket").as("s_bucket")),
@@ -567,37 +494,16 @@ object StatefulStreaming {
       timer = timer)
     val admitted = phase("probe")(
       b.join(dropped, Seq("doc_id"), "left_anti").barrier())
-    // persist the admitted signatures under this batch's directory
-    // (Overwrite: a replay rewrites the same dir), partitioned by the
-    // signature-hash bucket the vs-store join keys on
-    phase("sig_write")(
+    // persist the admitted signatures as this batch's contribution,
+    // partitioned by the signature-hash bucket the vs-store join keys on
+    phase("sig_write")(BatchStore.write(
       sigs.join(admitted.select(col("doc_id")), "doc_id")
         .select(col("doc_id"), col("band"), col("sig"), col("toks"),
-          bucketOf.as("__bucket"))
-        .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .partitionBy("__bucket").parquet(s"$storeDir/__batch=$batchId"))
-    // COMPACTION (see Scaladoc): fold the prior batch dirs + old
-    // generations into one new bucketed generation, THEN tombstone the
-    // inputs — deletion waits for the next batch because the admitted
-    // relation returned above still holds lineage over these files under
-    // the persist barrier mode (an executor loss between here and the
-    // caller's write would recompute through them). A crash in between
-    // leaves both generations readable: duplicate signatures are harmless
-    // to the drop joins, and the (doc_id, band) dedupe collapses them at
-    // the next fold. The current batch's dir is never an input: replay
-    // must keep excluding it.
-    if (batchDirs.length > compactThreshold) phase("compact") {
-      val nextGen = genDirs.map(_.getName.stripPrefix("__gen=").toLong)
-        .foldLeft(0L)(math.max) + 1
-      seen.foreach { sn => // None = all inputs empty: tombstone only
-        sn.dropDuplicates("doc_id", "band")
-          .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .partitionBy("__bucket").parquet(s"$storeDir/__gen=$nextGen")
-      }
-      (genDirs ++ batchDirs).foreach { p =>
-        fs.create(new org.apache.hadoop.fs.Path(p, "_OBSOLETE"), true)
-          .close()
-      }
+          bucketOf.as("__bucket")), storeDir, batchId, "__bucket"))
+    // COMPACTION (see Scaladoc); the (doc_id, band) dedupe collapses the
+    // duplicates a crash between generation write and tombstones leaves
+    if (store.due(compactThreshold)) phase("compact") {
+      store.compact(_.dropDuplicates("doc_id", "band"), "__bucket")
     }
     admitted
   }
@@ -612,9 +518,10 @@ object StatefulStreaming {
     * contributions: doc_ids are globally unique across batches, so
     * distinct-doc counts ADD across directories and the cumulative count
     * is one sum-aggregate over the store — no per-key driver state, no
-    * text in the store. The current batch's own directory is excluded
-    * from the read and Overwrite-rewritten, so replay is idempotent
-    * (same contract as [[nearDupIngestBatch]]'s signature store).
+    * text in the store. The cumulative count reads only contributions of
+    * STRICTLY earlier batches and this batch's own directory is
+    * Overwrite-rewritten ([[BatchStore]]), so replay is idempotent, even
+    * a late replay after later batches committed.
     *
     * Arrival-horizon contract (same class as [[asOfStream]]): a doc
     * admitted BEFORE its line crossed the threshold keeps that line —
@@ -626,6 +533,7 @@ object StatefulStreaming {
     */
   def lineDedupIngestBatch(batch: DataFrame, storeDir: String,
       batchId: Long, maxDocs: Int = 2): DataFrame = {
+    import org.apache.spark.sql.types._
     import graft.core.Barrier.BarrierOps
     val spark = batch.sparkSession
     val b = batch.barrier() // read by the line pass and the final join
@@ -637,24 +545,14 @@ object StatefulStreaming {
     val contrib = lines.groupBy(col("lfp"))
       .agg(countDistinct(col("doc_id")).as("nd"))
       .barrier() // read by the cumulative sum and the store write
-    val root = new org.apache.hadoop.fs.Path(storeDir)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val priorDirs =
-      (if (fs.exists(root))
-        fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
-      else Array.empty[org.apache.hadoop.fs.Path])
-        .filter(p => p.getName.startsWith("__batch=") &&
-          p.getName != s"__batch=$batchId")
-        .filter(p => fs.listFiles(p, true).hasNext)
-    val total = (if (priorDirs.isEmpty) contrib
-      else contrib.unionByName(
-        spark.read.parquet(priorDirs.map(_.toString).toIndexedSeq: _*)
-          .select(col("lfp"), col("nd"))))
+    val prior = BatchStore.readPrior(spark, storeDir, batchId,
+      StructType(Seq(StructField("lfp", StringType),
+        StructField("nd", LongType))))
+    val total = contrib.unionByName(prior)
       .groupBy(col("lfp")).agg(sum(col("nd")).as("nd"))
     // hot lines are boilerplate — tiny by definition → broadcast anti
     val hot = total.filter(col("nd") > maxDocs).select(col("lfp"))
-    contrib.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__batch=$batchId")
+    BatchStore.write(contrib, storeDir, batchId)
     val cleaned = lines
       .join(org.apache.spark.sql.functions.broadcast(hot),
         Seq("lfp"), "left_anti")
@@ -672,154 +570,36 @@ object StatefulStreaming {
         (col("n_lines") - coalesce(col("n_kept"), lit(0L))).as("n_dropped"))
   }
 
-  /** Streaming PACK-INDEX maintenance, for `foreachBatch` — the
-    * incremental tier of `corpus_pack_sequences`: an admitted micro-batch
-    * appends its documents to the global concatenate-and-slice pack index
-    * WITHOUT recomputing the global prefix-sum. The already-indexed
-    * corpus contributes exactly ONE number — its total token count — so
-    * per batch the engine runs the distributed prefix-sum over the BATCH
-    * only and shifts it by that base.
+  /** Streaming PACK maintenance, for `foreachBatch` — the incremental
+    * tier of both `corpus_pack_sequences` (the concatenate-and-slice pack
+    * index) and `corpus_pack_tokens` (the training batches on disk), over
+    * ONE tokenize pass and ONE shifted prefix-sum per admitted
+    * micro-batch:
     *
-    * State is the lineDedupIngestBatch discipline: a per-batch directory
-    * of 1-row (toks_total) meta contributions under `__meta/`; the base
-    * offset is their sum — O(batches) rows, never the corpus — and the
-    * batch's own dirs are excluded from the read and Overwrite-rewritten,
-    * so replay is idempotent. The emitted index rows are also persisted
-    * per batch (`__batch=N/`) as the loader-facing product; ingest order
-    * = doc order by the admission contract (arrival order = id order in
-    * the soak), under which the maintained index is row-identical to the
-    * batch `corpus_pack_sequences` over the same docs (pinned in
-    * StreamingSpec).
-    */
-  /** Store dirs under `root` named `__batch=<id>` with id strictly below
-    * `batchId` and at least one file — the shared "state strictly before
-    * this batch" read of the pack ingest tiers. Base/carry must come from
-    * strictly-earlier batches (streaming batch ids are monotonic), NOT
-    * merely "all but own": a batch replayed after later batches have
-    * committed must still see the state it saw live, or the rewrite
-    * would shift offsets.
-    */
-  /** True when the dir holds an actual data file — a zero-row write can
-    * leave only _SUCCESS, and reading such a dir fails schema inference.
-    */
-  private def hasDataFile(spark: SparkSession,
-      p: org.apache.hadoop.fs.Path): Boolean = {
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(p, true)
-    var found = false
-    while (it.hasNext && !found)
-      found = it.next().getPath.getName.startsWith("part-")
-    found
-  }
-
-  /** Every `__batch=<id>` dir under `root` with id strictly below
-    * `batchId`, WRITTEN OR NOT (an existing dir with no data file is a
-    * real state: "this batch's contribution was empty"). */
-  private def allPriorBatchDirs(spark: SparkSession, root: String,
-      batchId: Long): Seq[org.apache.hadoop.fs.Path] = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (if (fs.exists(rootPath))
-      fs.listStatus(rootPath).filter(_.isDirectory).map(_.getPath)
-    else Array.empty[org.apache.hadoop.fs.Path])
-      // toLongOption: a stray non-numeric `__batch=<garbage>` dir (partial
-      // copy, editor temp) must be skipped, not NumberFormatException the
-      // stream from inside foreachBatch
-      .filter(p => p.getName.startsWith("__batch=") &&
-        p.getName.stripPrefix("__batch=").toLongOption.exists(_ < batchId))
-      .toIndexedSeq
-  }
-
-  private def priorBatchDirs(spark: SparkSession, root: String,
-      batchId: Long): Seq[org.apache.hadoop.fs.Path] =
-    // for SUMMED contributions (meta) an empty dir and a missing one
-    // mean the same thing — skip part-less dirs
-    allPriorBatchDirs(spark, root, batchId)
-      .filter(p => hasDataFile(spark, p))
-
-  /** ONE scalar: the token total of batches strictly before `batchId`,
-    * summed from the 1-row per-batch meta contributions. A 1-row driver
-    * fetch over an O(batches) relation — bounded by design, the same
-    * class as Sinks' touched-bucket lists.
-    */
-  private def packBase(spark: SparkSession, storeDir: String,
-      batchId: Long): Long = {
-    val prior = priorBatchDirs(spark, s"$storeDir/__meta", batchId)
-    if (prior.isEmpty) 0L
-    else spark.read.parquet(prior.map(_.toString): _*)
-      .agg(coalesce(sum(col("toks_total")), lit(0L))).first().getLong(0)
-  }
-
-  /** The batch's own distributed prefix-sum shifted by the global base —
-    * the incremental tier's whole trick: no plan node ever touches the
-    * already-indexed corpus. */
-  private def shiftedPackIndex(counts: DataFrame, base: Long,
-      L: Long): DataFrame =
-    graft.operators.TextAnalysis.packIndexFromCounts(counts, L)
-      .withColumn("start_tok", col("start_tok") + lit(base))
-      .withColumn("cum", col("start_tok") + col("toks"))
-      .select(col("doc_id"), col("toks"), col("start_tok"),
-        expr(s"start_tok div $L").as("pack_first"),
-        expr(s"(cum - 1) div $L").as("pack_last"),
-        expr(s"start_tok % $L").as("offset_in_pack"))
-
-  private def writeMeta(counts: DataFrame, storeDir: String,
-      batchId: Long): Unit =
-    counts.agg(coalesce(sum(col("toks")), lit(0L)).as("toks_total"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__meta/__batch=$batchId")
-
-  def packIndexIngestBatch(batch: DataFrame, storeDir: String,
-      batchId: Long, L: Long = 512L): DataFrame = {
-    import graft.core.Barrier.BarrierOps
-    val spark = batch.sparkSession
-    val counts = batch
-      .select(col("doc_id"),
-        graft.functions.Text.bpeishTokenCount(col("text")).cast("long")
-          .as("toks"))
-      .filter(col("toks") > 0L)
-      .barrier() // read by the local index, the meta write
-    val base = packBase(spark, storeDir, batchId)
-    val shifted = shiftedPackIndex(counts, base, L)
-      .barrier() // read by the index write AND returned to the caller
-    writeMeta(counts, storeDir, batchId)
-    shifted.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__batch=$batchId")
-    shifted
-  }
-
-  /** Streaming PACK MATERIALIZATION, for `foreachBatch` — the incremental
-    * tier of `corpus_pack_tokens` (the actual training batches on disk):
-    * each admitted micro-batch materializes ONLY the packs it completes —
-    * O(batch) work regardless of corpus size — and carries the one
-    * incomplete trailing pack's pieces as state to the next batch.
+    *   - the INDEX: the already-indexed corpus contributes exactly ONE
+    *     number — its total token count — so the engine runs the
+    *     distributed prefix-sum over the BATCH only and shifts it by that
+    *     base. The base sums the 1-row (toks_total) `__meta`
+    *     contributions — O(batches) rows, never the corpus. The shifted
+    *     rows persist as this batch's contribution at the store root;
+    *   - the PACKS: only the packs this batch completes materialize —
+    *     O(batch) work regardless of corpus size — into `packs`, and the
+    *     one incomplete trailing pack's (pack_id, pack_offset, piece) rows
+    *     carry to the next batch under `__carry`, bounded by L tokens.
     *
-    * State is the [[packIndexIngestBatch]] discipline twice over: the
-    * 1-row `__meta/` token-total contributions give the global base
-    * offset, and `__carry/__batch=N` holds the (pack_id, pack_offset,
-    * piece) rows of the trailing partial pack AFTER batch N — bounded by
-    * L tokens, read from the LATEST batch id strictly below this one, so
-    * a replay after later commits reproduces exactly the packs it wrote
-    * live (Overwrite + strictly-earlier reads = idempotent, the store
-    * contract everywhere in this file). Completed packs land in
-    * `packs/__batch=N`; ingest order = doc order by the admission
-    * contract, under which the union of all batch dirs plus the final
-    * carry is row-identical to batch `materializePacks` over the same
-    * docs (pinned in StreamingSpec).
-    */
-  def packMaterializeIngestBatch(batch: DataFrame, storeDir: String,
-      batchId: Long, L: Long = 512L): DataFrame =
-    packIngestBatch(batch, storeDir, batchId, L, writeIndex = false)._2
-
-  /** Index AND materialization tiers over ONE tokenize pass and ONE
-    * shifted prefix-sum — what a production ingest runs per trigger (the
-    * soak's shape): the shifted index persists to `__batch=N`, completed
-    * packs to `packs/__batch=N`, the trailing carry to `__carry/__batch=N`,
-    * one shared `__meta` base store. Returns (index, completed packs).
+    * Every read takes state of STRICTLY earlier batches ([[BatchStore]]),
+    * and every write Overwrites this batch's own directories, so a replay
+    * — even after later batches committed — reproduces exactly the index
+    * rows and packs it wrote live. Ingest order = doc order by the
+    * admission contract (arrival order = id order in the soak), under
+    * which the union of the index contributions is row-identical to
+    * batch `corpus_pack_sequences`, and the union of completed packs plus
+    * the final carry to batch `materializePacks` over the same docs
+    * (both pinned in StreamingSpec). Returns (index, completed packs).
     */
   def packIngestBatch(batch: DataFrame, storeDir: String,
-      batchId: Long, L: Long = 512L, writeIndex: Boolean = true)
-      : (DataFrame, DataFrame) = {
+      batchId: Long, L: Long = 512L): (DataFrame, DataFrame) = {
+    import org.apache.spark.sql.types._
     import graft.core.Barrier.BarrierOps
     val spark = batch.sparkSession
     val toks = batch
@@ -829,39 +609,44 @@ object StatefulStreaming {
       .filter(col("toks") > 0L)
       .barrier() // read by the index, the slice join, the meta write
     val counts = toks.select(col("doc_id"), col("toks"))
-    val base = packBase(spark, storeDir, batchId)
-    val batchToks = counts.agg(coalesce(sum(col("toks")), lit(0L)))
-      .first().getLong(0)
-    val shifted = shiftedPackIndex(counts, base, L)
+    // ONE scalar: a 1-row driver fetch over an O(batches) relation —
+    // bounded by design, the same class as Sinks' touched-bucket lists
+    val base = BatchStore.readPrior(spark, s"$storeDir/__meta", batchId,
+        StructType(Seq(StructField("toks_total", LongType))))
+      .agg(coalesce(sum(col("toks_total")), lit(0L))).first().getLong(0)
+    val meta = counts.agg(coalesce(sum(col("toks")), lit(0L)).as("toks_total"))
+    val batchToks = meta.first().getLong(0)
+    // the batch's own prefix-sum shifted by the global base: no plan node
+    // ever touches the already-indexed corpus
+    val shifted = graft.operators.TextAnalysis.packIndexFromCounts(counts, L)
+      .withColumn("start_tok", col("start_tok") + lit(base))
+      .withColumn("cum", col("start_tok") + col("toks"))
+      .select(col("doc_id"), col("toks"), col("start_tok"),
+        expr(s"start_tok div $L").as("pack_first"),
+        expr(s"(cum - 1) div $L").as("pack_last"),
+        expr(s"start_tok % $L").as("offset_in_pack"))
       .barrier() // read by the span derivation AND the index write
-    if (writeIndex)
-      shifted.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$storeDir/__batch=$batchId")
+    BatchStore.write(shifted, storeDir, batchId)
     val spans = graft.operators.TextAnalysis.packSpansFrom(shifted, L)
     val pieces = graft.operators.TextAnalysis
       .packPieces(toks.select(col("doc_id"), col("toklist")), spans)
     // carry is REPLACEMENT state, not a summed contribution: the LATEST
-    // prior carry dir wins even when it is empty (a batch that ended
-    // exactly on a pack boundary wrote an empty carry, which must SHADOW
-    // older non-empty carries — falling back to one would re-inject
-    // already-packed pieces); only read it when it holds data
-    val carried = allPriorBatchDirs(spark, s"$storeDir/__carry", batchId)
-      .sortBy(_.getName.stripPrefix("__batch=").toLong).lastOption
-      .filter(p => hasDataFile(spark, p))
-      .map(p => pieces.unionByName(spark.read.parquet(p.toString)))
-      .getOrElse(pieces)
+    // prior carry wins even when it is empty (a batch that ended exactly
+    // on a pack boundary wrote an empty carry, which must SHADOW older
+    // non-empty carries — falling back to one would re-inject
+    // already-packed pieces)
+    val carried = BatchStore.latestPrior(spark, s"$storeDir/__carry", batchId)
+      .map(pieces.unionByName(_)).getOrElse(pieces)
     val all = carried.barrier() // read by the full split AND the carry
     // packs strictly below the post-batch boundary are COMPLETE (exactly
     // L tokens); the boundary pack (if any tokens) is the next carry
     val boundary = (base + batchToks) / L
     val full = graft.operators.TextAnalysis
       .assemblePacks(all.filter(col("pack_id") < boundary))
-    writeMeta(counts, storeDir, batchId)
-    full.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/packs/__batch=$batchId")
-    all.filter(col("pack_id") >= boundary)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__carry/__batch=$batchId")
+    BatchStore.write(meta, s"$storeDir/__meta", batchId)
+    BatchStore.write(full, s"$storeDir/packs", batchId)
+    BatchStore.write(all.filter(col("pack_id") >= boundary),
+      s"$storeDir/__carry", batchId)
     (shifted, full)
   }
 
@@ -890,16 +675,14 @@ object StatefulStreaming {
       .groupBy(col("doc_id"), col("dl"), col("tok"))
       .agg(count(lit(1)).as("tf"))
       .barrier() // read by the posting write AND the df rollup
-    tf.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/postings/__batch=$batchId")
+    BatchStore.write(tf, s"$storeDir/postings", batchId)
     // tf rows are distinct (doc, tok) pairs → count = this batch's df
-    tf.groupBy(col("tok")).agg(count(lit(1)).cast("long").as("df"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__df/__batch=$batchId")
-    toks.agg(count(lit(1)).cast("long").as("n_docs"),
-        coalesce(sum(col("dl").cast("long")), lit(0L)).as("t_tokens"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__meta/__batch=$batchId")
+    BatchStore.write(
+      tf.groupBy(col("tok")).agg(count(lit(1)).cast("long").as("df")),
+      s"$storeDir/__df", batchId)
+    BatchStore.write(toks.agg(count(lit(1)).cast("long").as("n_docs"),
+        coalesce(sum(col("dl").cast("long")), lit(0L)).as("t_tokens")),
+      s"$storeDir/__meta", batchId)
     tf
   }
 
@@ -924,12 +707,12 @@ object StatefulStreaming {
       StructField("df", LongType)))
     val metaSchema = StructType(Seq(StructField("n_docs", LongType),
       StructField("t_tokens", LongType)))
-    val post = storeRead(spark, s"$storeDir/postings", postSchema)
+    val post = BatchStore.readAll(spark, s"$storeDir/postings", postSchema)
       .filter(col("tok").isin(terms: _*))
-    val dfr = storeRead(spark, s"$storeDir/__df", dfSchema)
+    val dfr = BatchStore.readAll(spark, s"$storeDir/__df", dfSchema)
       .filter(col("tok").isin(terms: _*))
       .groupBy(col("tok")).agg(sum(col("df")).as("df"))
-    val stats = storeRead(spark, s"$storeDir/__meta", metaSchema)
+    val stats = BatchStore.readAll(spark, s"$storeDir/__meta", metaSchema)
       .agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
         coalesce(sum(col("t_tokens")), lit(0L)).as("t_tokens"))
     graft.operators.TextAnalysis.bm25TopK(post, dfr, stats, k)
@@ -952,12 +735,10 @@ object StatefulStreaming {
       .select(explode(graft.functions.Text.bpeishTokens(col("text")))
         .as("tok"))
       .barrier() // read by the cell sketch AND the exact-count twin
-    graft.operators.TextAnalysis.cmsCellsOf(toks)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__cells/__batch=$batchId")
-    graft.operators.TextAnalysis.cmsExactOf(toks)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__counts/__batch=$batchId")
+    BatchStore.write(graft.operators.TextAnalysis.cmsCellsOf(toks),
+      s"$storeDir/__cells", batchId)
+    BatchStore.write(graft.operators.TextAnalysis.cmsExactOf(toks),
+      s"$storeDir/__counts", batchId)
   }
 
   /** Heavy-hitter report off the maintained CMS store: cells and exact
@@ -975,9 +756,9 @@ object StatefulStreaming {
     val cntSchema = StructType(Seq(StructField("fp", LongType),
       StructField("exact_count", LongType),
       StructField("token", StringType)))
-    val cells = storeRead(spark, s"$storeDir/__cells", cellSchema)
+    val cells = BatchStore.readAll(spark, s"$storeDir/__cells", cellSchema)
       .groupBy(col("j"), col("b")).agg(sum(col("c")).as("c"))
-    val exact = storeRead(spark, s"$storeDir/__counts", cntSchema)
+    val exact = BatchStore.readAll(spark, s"$storeDir/__counts", cntSchema)
       .groupBy(col("fp")).agg(sum(col("exact_count")).as("exact_count"),
         min(col("token")).as("token"))
     graft.operators.TextAnalysis.cmsReport(cells, exact)
@@ -994,9 +775,8 @@ object StatefulStreaming {
     */
   def noveltyIngestBatch(batch: DataFrame, storeDir: String,
       batchId: Long): Unit =
-    graft.operators.TextAnalysis.docGramsOf(batch)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/grams/__batch=$batchId")
+    BatchStore.write(graft.operators.TextAnalysis.docGramsOf(batch),
+      s"$storeDir/grams", batchId)
 
   /** Streaming KMV (bottom-k) sketch maintenance — the tier that shows
     * WHY a 100 TB overlap report is a sketch problem: each micro-batch
@@ -1014,9 +794,8 @@ object StatefulStreaming {
       batch.select(col("doc_id"), col("text")))
       .join(batch.select(col("doc_id"), col("source")), "doc_id")
       .select(col("source"), col("gfp")).distinct()
-    graft.operators.Dedup.kmvSketchOf(items)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/sk/__batch=$batchId")
+    BatchStore.write(graft.operators.Dedup.kmvSketchOf(items),
+      s"$storeDir/sk", batchId)
   }
 
   /** Overlap estimates off the maintained sketch store: distinct-union
@@ -1029,7 +808,7 @@ object StatefulStreaming {
   def kmvEstimatesFrom(spark: SparkSession,
       storeDir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val merged = storeRead(spark, s"$storeDir/sk", StructType(Seq(
+    val merged = BatchStore.readAll(spark, s"$storeDir/sk", StructType(Seq(
       StructField("source", StringType), StructField("gfp", LongType))))
       .distinct()
     graft.operators.Dedup.kmvEstimatesOf(
@@ -1052,17 +831,15 @@ object StatefulStreaming {
     */
   def cdcIngestBatch(batch: DataFrame, storeDir: String,
       batchId: Long): Unit =
-    graft.operators.Dedup.cdcPerFp(
-      batch.select(col("source"), col("text")))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/ch/__batch=$batchId")
+    BatchStore.write(graft.operators.Dedup.cdcPerFp(
+      batch.select(col("source"), col("text"))), s"$storeDir/ch", batchId)
 
   /** The chunk-reuse report off the maintained store: sum the per-batch
     * (source, fp) contributions back to corpus counts, then run the
     * SAME `Dedup.cdcReportOf` tail as the batch query. */
   def cdcReportFrom(spark: SparkSession, storeDir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val merged = storeRead(spark, s"$storeDir/ch", StructType(Seq(
+    val merged = BatchStore.readAll(spark, s"$storeDir/ch", StructType(Seq(
       StructField("source", StringType), StructField("fp", StringType),
       StructField("n_occ", LongType), StructField("nchars", IntegerType))))
       .groupBy(col("source"), col("fp"))
@@ -1082,11 +859,9 @@ object StatefulStreaming {
     */
   def f2IngestBatch(batch: DataFrame, storeDir: String,
       batchId: Long): Unit =
-    graft.operators.TextAnalysis.f2Counters(
+    BatchStore.write(graft.operators.TextAnalysis.f2Counters(
       batch.select(explode(graft.functions.Text.tokenize(col("text")))
-        .as("tok")))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/x/__batch=$batchId")
+        .as("tok"))), s"$storeDir/x", batchId)
 
   /** F2 estimate off the maintained counter store: column-wise sums of
     * the per-batch contributions, then the SAME estimator fold as the
@@ -1097,7 +872,7 @@ object StatefulStreaming {
     import org.apache.spark.sql.types._
     val schema = StructType(StructField("n_occurrences", LongType) +:
       (0 until 16).map(j => StructField(s"x$j", LongType)))
-    val merged = storeRead(spark, s"$storeDir/x", schema)
+    val merged = BatchStore.readAll(spark, s"$storeDir/x", schema)
       .agg(sum(col("n_occurrences")).as("n_occurrences"),
         (0 until 16).map(j => sum(col(s"x$j")).as(s"x$j")): _*)
     graft.operators.TextAnalysis.f2EstimateOf(merged)
@@ -1117,7 +892,7 @@ object StatefulStreaming {
       storeDir: String): DataFrame = {
     import org.apache.spark.sql.types._
     graft.operators.TextAnalysis.noveltyReport(
-      storeRead(spark, s"$storeDir/grams", StructType(Seq(
+      BatchStore.readAll(spark, s"$storeDir/grams", StructType(Seq(
         StructField("doc_id", LongType),
         StructField("gfp", LongType)))))
   }
@@ -1139,10 +914,9 @@ object StatefulStreaming {
       c: Int = 16): DataFrame = {
     val spark = batch.sparkSession
     graft.plans.GraftFunctions.register(spark)
-    batch.filter(col("vec_id") < c)
-      .select(col("vec_id"), col("embedding"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__cents/__batch=$batchId")
+    BatchStore.write(batch.filter(col("vec_id") < c)
+      .select(col("vec_id"), col("embedding")),
+      s"$storeDir/__cents", batchId)
     val cents = ivfCentsFrom(spark, storeDir)
     val nCents = cents.count()
     require(nCents == c,
@@ -1153,8 +927,7 @@ object StatefulStreaming {
       batch.select(col("vec_id"), col("embedding")),
       cents.select(col("vec_id").cast("int").as("cid"),
         col("embedding").as("cv")))
-    assigned.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/lists/__batch=$batchId")
+    BatchStore.write(assigned, s"$storeDir/lists", batchId)
     assigned
   }
 
@@ -1191,14 +964,13 @@ object StatefulStreaming {
     val spark = batch.sparkSession
     graft.plans.GraftFunctions.register(spark)
     val vecs = batch.select(col("vec_id"), col("embedding"))
-    vecs.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/vecs/__batch=$batchId")
+    BatchStore.write(vecs, s"$storeDir/vecs", batchId)
     val sigs = graft.functions.Vectors
       .lshSignaturesAgg(vecs, "vec_id", "embedding", bits, 4)
       .select(col("vec_id"), explode(col("sigs")).as("sig"))
-    sigs.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/sigs/__batch=$batchId")
-    val storeSigs = storeRead(spark, s"$storeDir/sigs", graphSigSchema)
+    BatchStore.write(sigs, s"$storeDir/sigs", batchId)
+    val storeSigs =
+      BatchStore.readAll(spark, s"$storeDir/sigs", graphSigSchema)
     val storeVecs = graphVecsFrom(spark, storeDir)
     val newPairs = sigs.select(col("sig"), col("vec_id").as("va"))
       .join(storeSigs.select(col("sig"), col("vec_id").as("vb")), "sig")
@@ -1244,7 +1016,7 @@ object StatefulStreaming {
   private def graphVecsFrom(spark: SparkSession,
       storeDir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    storeRead(spark, s"$storeDir/vecs", StructType(Seq(
+    BatchStore.readAll(spark, s"$storeDir/vecs", StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)))))
   }
@@ -1606,7 +1378,7 @@ object StatefulStreaming {
   private def ivfCentsFrom(spark: SparkSession,
       storeDir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    storeRead(spark, s"$storeDir/__cents", StructType(Seq(
+    BatchStore.readAll(spark, s"$storeDir/__cents", StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)))))
   }
@@ -1623,7 +1395,7 @@ object StatefulStreaming {
       nProbe: Int = 4): DataFrame = {
     import org.apache.spark.sql.types._
     graft.plans.GraftFunctions.register(spark)
-    val assigned = storeRead(spark, s"$storeDir/lists", StructType(Seq(
+    val assigned = BatchStore.readAll(spark, s"$storeDir/lists", StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),
       StructField("cluster", IntegerType))))
@@ -1657,15 +1429,13 @@ object StatefulStreaming {
       col("xi").as("xa"))
     val b = cells.select(col("vec_id"), col("dim").as("dim_b"),
       col("xi").as("xb"))
-    a.join(b, "vec_id")
-      .groupBy(col("dim_a"), col("dim_b"))
-      .agg(sum(col("xa") * col("xb")).as("g_raw"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__gram/__batch=$batchId")
-    cells.groupBy(col("dim"))
-      .agg(sum(col("xi")).as("sx"), count(lit(1)).as("n"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__sums/__batch=$batchId")
+    BatchStore.write(a.join(b, "vec_id")
+        .groupBy(col("dim_a"), col("dim_b"))
+        .agg(sum(col("xa") * col("xb")).as("g_raw")),
+      s"$storeDir/__gram", batchId)
+    BatchStore.write(cells.groupBy(col("dim"))
+        .agg(sum(col("xi")).as("sx"), count(lit(1)).as("n")),
+      s"$storeDir/__sums", batchId)
   }
 
   /** Centered Gram off the maintained store: contributions sum, means
@@ -1678,12 +1448,12 @@ object StatefulStreaming {
     */
   def pcaGramFrom(spark: SparkSession, storeDir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    val gram = storeRead(spark, s"$storeDir/__gram", StructType(Seq(
+    val gram = BatchStore.readAll(spark, s"$storeDir/__gram", StructType(Seq(
       StructField("dim_a", LongType), StructField("dim_b", LongType),
       StructField("g_raw", LongType))))
       .groupBy(col("dim_a"), col("dim_b"))
       .agg(sum(col("g_raw")).as("g_raw"))
-    val sums = storeRead(spark, s"$storeDir/__sums", StructType(Seq(
+    val sums = BatchStore.readAll(spark, s"$storeDir/__sums", StructType(Seq(
       StructField("dim", LongType), StructField("sx", LongType),
       StructField("n", LongType))))
       .groupBy(col("dim"))
@@ -1760,12 +1530,10 @@ object StatefulStreaming {
       .groupBy(col("word")).agg(count(lit(1)).as("wf"))
       .withColumn("len", length(col("word")).cast("long"))
       .barrier() // read by the word write AND the gram contribution
-    words.select(col("word"), col("wf"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__words/__batch=$batchId")
-    graft.operators.TextAnalysis.wordpieceGrams(words)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__grams/__batch=$batchId")
+    BatchStore.write(words.select(col("word"), col("wf")),
+      s"$storeDir/__words", batchId)
+    BatchStore.write(graft.operators.TextAnalysis.wordpieceGrams(words),
+      s"$storeDir/__grams", batchId)
   }
 
   /** Segmentation off the maintained statistics: summed gram
@@ -1775,12 +1543,12 @@ object StatefulStreaming {
       storeDir: String): DataFrame = {
     import org.apache.spark.sql.types._
     import graft.core.Barrier.BarrierOps
-    val words = storeRead(spark, s"$storeDir/__words", StructType(Seq(
+    val words = BatchStore.readAll(spark, s"$storeDir/__words", StructType(Seq(
       StructField("word", StringType), StructField("wf", LongType))))
       .groupBy(col("word")).agg(sum(col("wf")).as("wf"))
       .withColumn("len", length(col("word")).cast("long"))
       .barrier()
-    val grams = storeRead(spark, s"$storeDir/__grams", StructType(Seq(
+    val grams = BatchStore.readAll(spark, s"$storeDir/__grams", StructType(Seq(
       StructField("piece", StringType), StructField("freq", LongType))))
       .groupBy(col("piece")).agg(sum(col("freq")).as("freq"))
       .barrier()
@@ -1801,32 +1569,18 @@ object StatefulStreaming {
       storeDir: String): DataFrame = {
     import org.apache.spark.sql.types._
     import graft.core.Barrier.BarrierOps
-    val words = storeRead(spark, s"$storeDir/__words", StructType(Seq(
+    val words = BatchStore.readAll(spark, s"$storeDir/__words", StructType(Seq(
       StructField("word", StringType), StructField("wf", LongType))))
       .groupBy(col("word")).agg(sum(col("wf")).as("wf"))
       .withColumn("len", length(col("word")).cast("long"))
       .barrier()
-    val grams = storeRead(spark, s"$storeDir/__grams", StructType(Seq(
+    val grams = BatchStore.readAll(spark, s"$storeDir/__grams", StructType(Seq(
       StructField("piece", StringType), StructField("freq", LongType))))
       .groupBy(col("piece")).agg(sum(col("freq")).as("freq"))
       .barrier()
     val model = graft.operators.TextAnalysis.unigramModelFrom(words, grams)
     graft.operators.TextAnalysis.unigramViterbi(words,
       graft.operators.TextAnalysis.unigramScore(model))
-  }
-
-  /** Schema-pinned read of every `__batch=*` contribution under `root`;
-    * a NEVER-INGESTED store (no dirs at all) is an empty relation, not a
-    * PATH_NOT_FOUND error — searching/scoring before the first ingest is
-    * a clean no-result. */
-  private def storeRead(spark: SparkSession, root: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val rootPath = new org.apache.hadoop.fs.Path(root)
-    val fs = rootPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(rootPath))
-      spark.read.schema(schema).parquet(s"$root/__batch=*")
-    else spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
   }
 
   /** Streaming bigram-LM MODEL MAINTENANCE — the text_bigram_lm twin of
@@ -1844,19 +1598,14 @@ object StatefulStreaming {
       .barrier() // the train split AND the caller read it
     val train = graft.operators.TextAnalysis.lmTrainSplit(bg)
       .barrier() // four count rollups read it
-    train.groupBy(col("w1"), col("w2"))
-      .agg(count(lit(1)).as("cb"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__cb/__batch=$batchId")
-    train.groupBy(col("w1")).agg(count(lit(1)).as("cu1"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__cw1/__batch=$batchId")
-    train.groupBy(col("w2")).agg(count(lit(1)).as("cu2"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__cw2/__batch=$batchId")
-    train.agg(count(lit(1)).as("tb"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/__meta/__batch=$batchId")
+    BatchStore.write(train.groupBy(col("w1"), col("w2"))
+      .agg(count(lit(1)).as("cb")), s"$storeDir/__cb", batchId)
+    BatchStore.write(train.groupBy(col("w1")).agg(count(lit(1)).as("cu1")),
+      s"$storeDir/__cw1", batchId)
+    BatchStore.write(train.groupBy(col("w2")).agg(count(lit(1)).as("cu2")),
+      s"$storeDir/__cw2", batchId)
+    BatchStore.write(train.agg(count(lit(1)).as("tb")),
+      s"$storeDir/__meta", batchId)
     bg
   }
 
@@ -1873,12 +1622,12 @@ object StatefulStreaming {
     def summed(sub: String, keys: Seq[String], cnt: String): DataFrame = {
       val schema = StructType(
         keys.map(StructField(_, StringType)) :+ StructField(cnt, LongType))
-      storeRead(spark, s"$storeDir/$sub", schema)
+      BatchStore.readAll(spark, s"$storeDir/$sub", schema)
         .groupBy(keys.map(col): _*)
         .agg(sum(col(cnt)).as(cnt))
     }
     val metaSchema = StructType(Seq(StructField("tb", LongType)))
-    val tb = storeRead(spark, s"$storeDir/__meta", metaSchema)
+    val tb = BatchStore.readAll(spark, s"$storeDir/__meta", metaSchema)
       .agg(coalesce(sum(col("tb")), lit(0L)).as("tb"))
     graft.operators.TextAnalysis.bigramLmScore(
       graft.operators.TextAnalysis.bigramsOf(docs),
@@ -1900,7 +1649,7 @@ object StatefulStreaming {
     import org.apache.spark.sql.types._
     val schema = StructType(Seq(StructField("w1", StringType),
       StructField("w2", StringType), StructField("cb", LongType)))
-    val cb = storeRead(spark, s"$storeDir/__cb", schema)
+    val cb = BatchStore.readAll(spark, s"$storeDir/__cb", schema)
       .groupBy(col("w1"), col("w2")).agg(sum(col("cb")).as("cb"))
     graft.operators.TextAnalysis.knScore(
       graft.operators.TextAnalysis.bigramsOf(docs), cb)
@@ -1937,8 +1686,7 @@ object StatefulStreaming {
   def rateAnomalyIngestBatch(batch: DataFrame, storeDir: String,
       batchId: Long): DataFrame = {
     val c = graft.operators.Stateful.rateAnomalyCounts(batch)
-    c.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/counts/__batch=$batchId")
+    BatchStore.write(c, s"$storeDir/counts", batchId)
     c
   }
 
@@ -1955,7 +1703,7 @@ object StatefulStreaming {
     val schema = StructType(Seq(StructField("event_type", StringType),
       StructField("window_start", StringType),
       StructField("cnt", LongType)))
-    val counts = storeRead(spark, s"$storeDir/counts", schema)
+    val counts = BatchStore.readAll(spark, s"$storeDir/counts", schema)
       .groupBy(col("event_type"), col("window_start"))
       .agg(sum(col("cnt")).as("cnt"))
     graft.operators.Stateful.rateAnomalyFlag(counts)
@@ -1965,9 +1713,9 @@ object StatefulStreaming {
     * twin: per batch, route + gate each doc with the SAME shared
     * `TextAnalysis.routedVerdicts`, then keep-first dedup within (lane,
     * fp) ACROSS batches via an admitted-signature store. Prior
-    * signatures are read from strictly-earlier `__batch=` dirs only and
-    * this batch's contribution Overwrites its own dir, so replaying a
-    * batch is idempotent (the packIndexIngestBatch discipline). Arrival
+    * signatures are read from strictly-earlier batches only and this
+    * batch's contribution Overwrites its own dir, so replaying a batch
+    * is idempotent (the [[BatchStore]] replay rule). Arrival
     * order defines keep-first across batches — in-order feeds reproduce
     * the batch pipeline exactly (pinned in StreamingSpec); within a
     * batch the smaller doc_id wins, same as batch. O(batch) routing
@@ -1984,12 +1732,8 @@ object StatefulStreaming {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("fp",
         org.apache.spark.sql.types.StringType)))
-    val priorDirs = priorBatchDirs(spark, s"$storeDir/sigs", batchId)
-    val prior =
-      if (priorDirs.isEmpty) spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], sigSchema)
-      else spark.read.schema(sigSchema)
-        .parquet(priorDirs.map(_.toString): _*).distinct()
+    val prior = BatchStore.readPrior(spark, s"$storeDir/sigs", batchId,
+      sigSchema).distinct()
     val v = graft.operators.TextAnalysis.routedVerdicts(batch)
       .barrier() // read by the admission cut AND the verdict attach
     val w = Window.partitionBy(col("lane"), col("fp"))
@@ -1999,16 +1743,14 @@ object StatefulStreaming {
       .filter(col("rn") === 1)
       .join(prior, Seq("lane", "fp"), "left_anti")
       .barrier() // read by the sig write AND the verdict attach
-    admitted.select(col("lane"), col("fp"))
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/sigs/__batch=$batchId")
+    BatchStore.write(admitted.select(col("lane"), col("fp")),
+      s"$storeDir/sigs", batchId)
     val verdict = v
       .join(admitted.select(col("doc_id"), lit(true).as("kept0")),
         Seq("doc_id"), "left")
       .select(col("doc_id"), col("lane"), col("passed"),
         coalesce(col("kept0"), lit(false)).as("kept"))
-    verdict.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-      .parquet(s"$storeDir/verdicts/__batch=$batchId")
+    BatchStore.write(verdict, s"$storeDir/verdicts", batchId)
     verdict
   }
 
@@ -2019,7 +1761,7 @@ object StatefulStreaming {
     val schema = StructType(Seq(StructField("doc_id", LongType),
       StructField("lane", StringType), StructField("passed", BooleanType),
       StructField("kept", BooleanType)))
-    storeRead(spark, s"$storeDir/verdicts", schema)
+    BatchStore.readAll(spark, s"$storeDir/verdicts", schema)
   }
 
   case class AsOfEvent(user_id: Long, tsMicros: Long, side: Int, id: Long,

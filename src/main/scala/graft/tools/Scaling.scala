@@ -514,12 +514,8 @@ object Scaling {
         if (f.exists()) println(f"[soak] k=$k store=$s%-10s " +
           f"${du(f) / 1024.0 / 1024.0}%8.2f MiB")
       }
-      val sig = new java.io.File(work, "sig_store")
-      val (gens, live) = Option(sig.listFiles()).map { fs =>
-        (fs.count(d => d.isDirectory && d.getName.startsWith("__gen=")),
-          fs.count(d => d.isDirectory &&
-            !new java.io.File(d, "_OBSOLETE").exists()))
-      }.getOrElse((0, 0))
+      val (gens, live) =
+        graft.streaming.BatchStore.census(spark, s"$work/sig_store")
       println(s"[soak] k=$k sig_store generations=$gens live_dirs=$live")
       val packs = new java.io.File(work, "packs")
       // an all-rejected run leaves no data files — report 0, don't die

@@ -649,6 +649,14 @@ class StreamingSpec extends SparkSpec {
       assert(out2 === Map(3L -> 1L, 4L -> 0L),
         s"crossing batch must strip the now-hot line: $out2")
       graft.core.Barrier.releaseAll(spark)
+      // LATE replay of batch 0 after batch 1 committed: the count reads
+      // strictly-earlier batches only, so batch 1's banner doc cannot
+      // push the total past maxDocs and strip docs 1 and 2
+      val lateReplay = dropped(
+        StatefulStreaming.lineDedupIngestBatch(b1, store, 0L))
+      assert(lateReplay === out1,
+        s"late replay must be idempotent: $lateReplay")
+      graft.core.Barrier.releaseAll(spark)
       // single-batch parity with the batch operator: all occurrences in
       // ONE batch -> every doc stripped, including an all-banner doc
       // cleaning to the empty fingerprint
@@ -681,7 +689,7 @@ class StreamingSpec extends SparkSpec {
           .between(loId, hiId))
       }
       val outs = batches.zipWithIndex.map { case (b, i) =>
-        val out = StatefulStreaming.packIndexIngestBatch(b, store, i.toLong)
+        val out = StatefulStreaming.packIngestBatch(b, store, i.toLong)._1
           .collect()
         graft.core.Barrier.releaseAll(spark)
         out
@@ -706,7 +714,7 @@ class StreamingSpec extends SparkSpec {
       // base sums strictly-earlier batches only, so even a late retry
       // reproduces the rows it emitted live and cannot shift any offset
       val replay = StatefulStreaming
-        .packIndexIngestBatch(batches(1), store, 1L).collect()
+        .packIngestBatch(batches(1), store, 1L)._1.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
           r.getLong(4), r.getLong(5))).toSet
       graft.core.Barrier.releaseAll(spark)
@@ -1224,7 +1232,7 @@ class StreamingSpec extends SparkSpec {
       }
       val fulls = batches.zipWithIndex.map { case (b, i) =>
         val out = StatefulStreaming
-          .packMaterializeIngestBatch(b, store, i.toLong).collect()
+          .packIngestBatch(b, store, i.toLong)._2.collect()
         graft.core.Barrier.releaseAll(spark)
         out
       }
@@ -1250,7 +1258,7 @@ class StreamingSpec extends SparkSpec {
       // and carry read strictly-earlier state, so the retry writes the
       // same completed packs it wrote live
       val replay = StatefulStreaming
-        .packMaterializeIngestBatch(batches(1), store, 1L).collect()
+        .packIngestBatch(batches(1), store, 1L)._2.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
       graft.core.Barrier.releaseAll(spark)
       assert(replay === fulls(1)
@@ -1265,21 +1273,21 @@ class StreamingSpec extends SparkSpec {
     try {
       // "w " * n tokenizes to exactly n bpeish tokens
       def doc(id: Long, n: Int) = (id, Seq.fill(n)("w").mkString(" "))
-      val f0 = StatefulStreaming.packMaterializeIngestBatch(
-        Seq(doc(1, 300)).toDF("doc_id", "text"), store, 0L).collect()
+      val f0 = StatefulStreaming.packIngestBatch(
+        Seq(doc(1, 300)).toDF("doc_id", "text"), store, 0L)._2.collect()
       graft.core.Barrier.releaseAll(spark)
       assert(f0.isEmpty, "300 tokens complete no pack")
       // batch 1 lands EXACTLY on the pack boundary (300 + 724 = 2·512):
       // packs 0..1 complete, carry is EMPTY
-      val f1 = StatefulStreaming.packMaterializeIngestBatch(
-        Seq(doc(2, 724)).toDF("doc_id", "text"), store, 1L).collect()
+      val f1 = StatefulStreaming.packIngestBatch(
+        Seq(doc(2, 724)).toDF("doc_id", "text"), store, 1L)._2.collect()
       graft.core.Barrier.releaseAll(spark)
       assert(f1.map(_.getLong(0)).sorted.toSeq === Seq(0L, 1L))
       assert(f1.forall(_.getLong(1) === 512L))
       // batch 2 must see the EMPTY carry — falling back to batch 0's
       // stale carry would re-emit a bogus incomplete "pack 0"
-      val f2 = StatefulStreaming.packMaterializeIngestBatch(
-        Seq(doc(3, 100)).toDF("doc_id", "text"), store, 2L).collect()
+      val f2 = StatefulStreaming.packIngestBatch(
+        Seq(doc(3, 100)).toDF("doc_id", "text"), store, 2L)._2.collect()
       graft.core.Barrier.releaseAll(spark)
       assert(f2.isEmpty,
         s"stale carry re-injected: packs ${f2.map(_.getLong(0)).toList}")
