@@ -1,37 +1,32 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sink library — the K1-K7 surface of the reference re-expressed for
   * Spark's micro-batch model. The reference writes to Kafka/Doris/HBase;
-  * the portable analog here is keyed/partitioned parquet directories, with
-  * the Kafka-specific wiring isolated in option builders (no Kafka broker
-  * in this environment).
+  * the portable analog here is keyed/partitioned parquet directories (no
+  * Kafka broker in this environment).
   *
   * K1 exactly-once topic sink     (ref FlinkSinkUtil.java:31-42)
   * K2 dynamic-topic routing       (ref FlinkSinkUtil.java:44-60)
-  * K3/K4 serving-table append     (ref FlinkSinkUtil.java:63-86)
+  * K3/K4 Doris serving tables     (ref FlinkSinkUtil.java:63-86)
   * K5 upsert latest-per-key       (ref SQLUtil.java:54-62)
   * K6 dim MERGE put/delete        (ref DimHBaseSinkFunction.java:33-70)
   * K7 dim DDL on config change    (ref DimApp.java:112-178, HBaseUtil.java:69-122)
   *
   * Exactly-once: Spark's file sinks are exactly-once per micro-batch via
-  * the write-ahead commit log; for Kafka the same effect needs an
-  * idempotent/keyed consumer or foreachBatch+transactional producer —
-  * documented at the option builder. Scale: every writer below is a
-  * distributed `DataFrame` write; no collect, no driver loops.
+  * the write-ahead commit log; the keyed stores (K3-K6, the DWS and DIM
+  * layers) are written from foreachBatch and are replay-idempotent — the
+  * same batch merged twice leaves the same store — which makes
+  * micro-batch retries exactly-once in effect. Scale: every write is a
+  * distributed `DataFrame` write, and each keyed merge runs three bounded
+  * driver collects: the touched bucket ids and the present bucket ids
+  * (both at most the bucket count) and the batch's distinct keys (capped
+  * by `spark.graft.keyedSplitMaxKeys`).
   */
 object Sinks {
-
-  /** K1: options for an exactly-once-style Kafka topic sink. */
-  def kafkaSinkOptions(bootstrap: String, topic: String): Map[String, String] =
-    Map(
-      "kafka.bootstrap.servers" -> bootstrap,
-      "topic" -> topic,
-      // idempotent producer: the at-least-once → effectively-once bridge
-      "kafka.enable.idempotence" -> "true",
-      "kafka.transaction.timeout.ms" -> (15 * 60 * 1000).toString)
 
   /** K2: dynamic routing — the `sink_table` column becomes the partition
     * (for Kafka: rename to `topic` and omit the fixed topic option; the
@@ -39,10 +34,6 @@ object Sinks {
     */
   def writeRouted(df: DataFrame, outDir: String): Unit =
     df.write.mode(SaveMode.Append).partitionBy("sink_table").parquet(outDir)
-
-  /** K3/K4: append to a date-partitioned serving table. */
-  def writeServing(df: DataFrame, outDir: String): Unit =
-    df.write.mode(SaveMode.Append).partitionBy("cur_date").parquet(outDir)
 
   /** Hash-bucket partition column of the keyed stores (K5/K6). The store
     * is laid out as `dir/__bucket=N/...`; a micro-batch reads and rewrites
@@ -64,19 +55,22 @@ object Sinks {
     * `buckets` argument still wins over the conf.
     */
   val DefaultBuckets: Int = -1
+  // a NEW store reads the conf exactly once (its count is then
+  // marker-pinned), so a mid-stream conf change only affects stores
+  // created after it, never an existing one
   private def requestedBuckets(spark: SparkSession, buckets: Int): Int =
     if (buckets > 0) buckets
-    else spark.conf.getOption("spark.graft.storeBuckets") match {
-      case None => 16
-      case Some(raw) =>
-        // validate here, at store-creation time, so a typo'd conf fails
-        // with its name rather than a NumberFormatException from deep
-        // inside a merge; a NEW store reads the conf exactly once (its
-        // count is then marker-pinned), so a mid-stream conf change
-        // only affects stores created after it, never an existing one
-        raw.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
-          s"spark.graft.storeBuckets must be a positive int, got '$raw'"))
-    }
+    else positiveIntConf(spark, "spark.graft.storeBuckets", 16)
+
+  /** A positive-int `spark.graft.*` conf, validated where it is read so a
+    * typo'd value fails naming its key rather than with a
+    * NumberFormatException from deep inside a merge.
+    */
+  private def positiveIntConf(spark: SparkSession, key: String,
+      default: Int): Int =
+    spark.conf.getOption(key).fold(default)(raw =>
+      raw.trim.toIntOption.filter(_ > 0).getOrElse(
+        sys.error(s"$key must be a positive int, got '$raw'")))
 
   /** The store's bucket count is LAYOUT, not a per-call knob: it is
     * pinned in a `_graft_buckets` marker on first write and reused on
@@ -115,6 +109,14 @@ object Sinks {
     }
   }
 
+  /** `df` plus the store's bucket column: `keyCol` hashed into the
+    * store's marker-pinned bucket count (created on first use).
+    */
+  private def withBucket(spark: SparkSession, df: DataFrame, keyCol: String,
+      dir: String, buckets: Int): DataFrame =
+    df.withColumn(BucketCol, pmod(hash(col(keyCol)),
+      lit(resolveBuckets(dir, requestedBuckets(spark, buckets)))))
+
   /** Read a keyed store back without its internal bucket column. */
   def readStore(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(dir).drop(BucketCol)
@@ -127,7 +129,6 @@ object Sinks {
     */
   def upsert(spark: SparkSession, incoming: DataFrame, keyCol: String,
       seqCol: String, dir: String, buckets: Int = DefaultBuckets): Unit = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(keyCol)).orderBy(col(seqCol).desc)
     mergeTouchedKeyed(spark, incoming, keyCol, dir, buckets)(changed =>
       changed.withColumn("__rn", row_number().over(w))
@@ -144,14 +145,10 @@ object Sinks {
     * per deployment like `storeBuckets`.
     */
   private def keyedSplitMaxKeys(spark: SparkSession): Int =
-    spark.conf.getOption("spark.graft.keyedSplitMaxKeys") match {
-      case None => 1000000
-      case Some(raw) => raw.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
-        s"spark.graft.keyedSplitMaxKeys must be a positive int, got '$raw'"))
-    }
+    positiveIntConf(spark, "spark.graft.keyedSplitMaxKeys", 1000000)
 
   /** Diagnostic: how many keyed merges fell back to the unsplit path this
-    * JVM (bulk-backfill gate above). Test hook + soak observability only.
+    * JVM (bulk-backfill gate above). A test hook: SinksSpec reads it.
     */
   private[graft] val keyedSplitFallbacks = new java.util.concurrent.atomic.AtomicLong
 
@@ -255,23 +252,27 @@ object Sinks {
         "evicted mid-merge)")
     }
 
-  /** [[mergeTouched]] for PER-KEY merges: `merge` receives only the rows
-    * of keys present in the batch (stored ∪ incoming); stored rows of
-    * every other key in the touched buckets bypass it unchanged. Correct
-    * whenever merge is a per-key function — its output for key k depends
-    * only on k's rows — and the store already holds each key's merged
-    * state (both hold for keep-newest; a merge that mixes keys must use
-    * [[mergeTouched]]). Same persist discipline; the broadcasts read the
-    * cached batch, so the incoming lineage still executes exactly once
-    * (LineageExecGuard covers this path).
+  /** The one keyed-merge body every bucketed store runs through. It
+    * buckets the incoming rows by `keyCol` and persists them: the batch
+    * lineage feeds several actions below, and inside a streaming
+    * foreachBatch that lineage is the micro-batch's whole stateful plan
+    * (measured 2–4 s per re-execution in the r15 soak DWS stages), so it
+    * must execute once. It then reads ONLY the touched buckets' stored
+    * rows, splits them around the batch's keys ([[splitByBatchKeys]]),
+    * hands `merge` the rows `combine(stored rows of the changed keys,
+    * batch)` returns — or the batch alone on a fresh bucket set — and
+    * dynamically overwrites just the touched buckets with the merged rows
+    * plus the untouched keys' stored rows. Everything from bucket
+    * discovery on sits inside the try, so the persisted blocks are
+    * released on every failure path too (a leak here accumulates across
+    * a long-running streaming driver's batches).
     */
-  def mergeTouchedKeyed(spark: SparkSession, incoming: DataFrame,
-      keyCol: String, dir: String, buckets: Int = DefaultBuckets)(
+  private def mergeKeyed(site: String, spark: SparkSession,
+      incoming: DataFrame, keyCol: String, dir: String, buckets: Int,
+      combine: (DataFrame, DataFrame) => DataFrame)(
       merge: DataFrame => DataFrame): Unit = {
     val (src, guardAcc) = guarded(spark, incoming)
-    val inc = src.withColumn(BucketCol,
-      pmod(hash(col(keyCol)), lit(resolveBuckets(dir, requestedBuckets(spark, buckets)))))
-      .persist()
+    val inc = withBucket(spark, src, keyCol, dir, buckets).persist()
     var release: () => Unit = () => ()
     try {
       val touched = touchedBuckets(inc)
@@ -279,67 +280,51 @@ object Sinks {
         case Some(ex) => splitByBatchKeys(spark, ex, inc, keyCol) match {
           case Some((chEx, pass, rel)) =>
             release = rel
-            (chEx.unionByName(inc, allowMissingColumns = false), Some(pass))
-          case None => // bulk-backfill gate: the pre-r16 unsplit merge
-            (ex.unionByName(inc, allowMissingColumns = false), None)
+            (combine(chEx, inc), Some(pass))
+          case None => // bulk-backfill gate: every stored row re-merges
+            (combine(ex, inc), None)
         }
         case None => (inc, None)
       }
       val merged = merge(changed)
       overwriteTouched(passthrough.fold(merged)(merged.unionByName(_)),
         touched, dir)
-      assertExecutedOnce("mergeTouchedKeyed", inc, guardAcc)
+      assertExecutedOnce(site, inc, guardAcc)
     } finally { release(); inc.unpersist(); () }
   }
 
-  /** The generic touched-bucket read-merge-rewrite [[upsert]]
-    * specializes: bucket the incoming rows by `keyCol`, read ONLY the
-    * touched buckets' existing rows, hand (existing ∪ incoming) to
-    * `merge`, and dynamically overwrite just those buckets. Public so
-    * streaming tiers whose per-key state is a LIST rather than one
-    * newest row (the kNN-graph top-K lists) can run their own merge —
-    * e.g. rank-and-keep-K per key — under the same discipline: O(touched
+  /** The keyed store merge for PER-KEY state: `merge` receives only the
+    * rows of keys present in the batch (stored ∪ incoming); stored rows
+    * of every other key in the touched buckets bypass it unchanged.
+    * Correct whenever merge is a per-key function — its output for key k
+    * depends only on k's rows — and the store already holds each key's
+    * merged state. Public so streaming tiers whose per-key state is a
+    * LIST rather than one newest row (the kNN-graph top-K lists, the
+    * SimHash pair and containment tiers) run their own merge — e.g.
+    * rank-and-keep-K per key — under the same discipline: O(touched
     * buckets) IO per batch, replay-idempotent whenever `merge` is a
     * function of the unioned SET. `merge` must preserve every column
-    * (the internal bucket column rides along).
+    * (the internal bucket column rides along). The incoming lineage
+    * executes exactly once (LineageExecGuard covers this path).
     */
-  def mergeTouched(spark: SparkSession, incoming: DataFrame,
+  def mergeTouchedKeyed(spark: SparkSession, incoming: DataFrame,
       keyCol: String, dir: String, buckets: Int = DefaultBuckets)(
-      merge: DataFrame => DataFrame): Unit = {
-    // the incoming lineage executes TWICE below — the touched-bucket
-    // discovery collect and the overwrite's localCheckpoint — and inside
-    // a streaming foreachBatch that lineage is the micro-batch's whole
-    // stateful plan (complete-mode state read + agg), measured 2–4 s per
-    // re-execution in the r15 soak DWS stages. A self-contained persist
-    // makes the batch plan run once; released before returning.
-    val (src, guardAcc) = guarded(spark, incoming)
-    val inc = src.withColumn(BucketCol,
-      pmod(hash(col(keyCol)), lit(resolveBuckets(dir, requestedBuckets(spark, buckets)))))
-      .persist()
-    try {
-      val touched = touchedBuckets(inc)
-      val unioned = readTouched(spark, touched, dir) match {
-        case Some(ex) => ex.unionByName(inc, allowMissingColumns = false)
-        case None     => inc
-      }
-      overwriteTouched(merge(unioned), touched, dir)
-      assertExecutedOnce("mergeTouched", inc, guardAcc)
-    } finally { inc.unpersist(); () }
-  }
+      merge: DataFrame => DataFrame): Unit =
+    mergeKeyed("mergeTouchedKeyed", spark, incoming, keyCol, dir, buckets,
+      (stored, inc) => stored.unionByName(inc))(merge)
 
   /** Probe-read a keyed store at O(touched buckets) IO: read back ONLY
     * the buckets `keys`' values hash into, bucket column dropped. The
-    * read half of [[mergeTouched]] for ingest tiers whose per-batch
+    * read half of [[mergeTouchedKeyed]] for ingest tiers whose per-batch
     * emission joins batch rows against stored state (the SimHash pair
     * tier's roster and doc-expansion probes) — the store never re-reads
     * whole. None when none of the touched buckets exist yet.
     */
   def readTouchedFor(spark: SparkSession, keys: DataFrame, keyCol: String,
-      dir: String, buckets: Int = DefaultBuckets): Option[DataFrame] = {
-    val inc = keys.withColumn(BucketCol,
-      pmod(hash(col(keyCol)), lit(resolveBuckets(dir, requestedBuckets(spark, buckets)))))
-    readTouched(spark, touchedBuckets(inc), dir).map(_.drop(BucketCol))
-  }
+      dir: String, buckets: Int = DefaultBuckets): Option[DataFrame] =
+    readTouched(spark,
+      touchedBuckets(withBucket(spark, keys, keyCol, dir, buckets)), dir)
+      .map(_.drop(BucketCol))
 
   /** K8 streaming tier: SCD Type-2 history maintenance — the VERSIONED
     * sibling of [[upsert]] (which keeps only the latest row per key).
@@ -357,44 +342,20 @@ object Sinks {
     * `k8_scd2_history` query. History is therefore always exactly the
     * batch query over the union of all changelog rows seen so far, which
     * is what StreamingSpec pins. Scale shape matches the other tiers:
-    * only touched buckets are read/rewritten, per-key work is bounded by
-    * that key's change count, and the window shuffle is on the key.
-    * `seqCol` must order a key's changes (globally unique per key);
-    * `tsCol` supplies the interval bounds.
+    * only touched buckets are read/rewritten, only the keys a batch
+    * changes re-run the dedup + window (every other key's history rows,
+    * presentation columns included, ride through exactly as stored),
+    * per-key work is bounded by that key's change count, and the window
+    * shuffle is on the key. `seqCol` must order a key's changes
+    * (globally unique per key); `tsCol` supplies the interval bounds.
     */
   def scd2Upsert(spark: SparkSession, incoming: DataFrame, keyCol: String,
       seqCol: String, tsCol: String, dir: String, buckets: Int = DefaultBuckets): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    val srcCols = incoming.columns.toSeq
-    // persist for the same double-execution reason as [[mergeTouched]];
-    // everything from bucket discovery on sits INSIDE the try so the
-    // persisted block is released on every failure path too (a leak here
-    // accumulates across a long-running streaming driver's batches)
-    val (src, guardAcc) = guarded(spark, incoming)
-    val inc = src.withColumn(BucketCol,
-      pmod(hash(col(keyCol)), lit(resolveBuckets(dir, requestedBuckets(spark, buckets)))))
-      .persist()
-    var release: () => Unit = () => ()
-    try {
-      val touched = touchedBuckets(inc)
-      // changed-key split (r16, see [[splitByBatchKeys]]): only the keys
-      // this batch changes re-run the dedup + window recompute; every
-      // other key's history rows — presentation columns included — ride
-      // through exactly as stored (the store IS their recomputed form)
-      val (unioned, passthrough) = readTouched(spark, touched, dir) match {
-        case Some(ex) => splitByBatchKeys(spark, ex, inc, keyCol) match {
-          case Some((chEx, pass, rel)) =>
-            release = rel
-            (chEx.select((srcCols :+ BucketCol).map(col): _*)
-              .unionByName(inc), Some(pass))
-          case None => // bulk-backfill gate: every stored row re-windows
-            (ex.select((srcCols :+ BucketCol).map(col): _*)
-              .unionByName(inc), None)
-        }
-        case None => (inc, None)
-      }
-      val w = Window.partitionBy(col(keyCol)).orderBy(col(seqCol).asc)
-      val hist = unioned.dropDuplicates(keyCol, seqCol)
+    val srcCols = (incoming.columns.toSeq :+ BucketCol).map(col)
+    val w = Window.partitionBy(col(keyCol)).orderBy(col(seqCol).asc)
+    mergeKeyed("scd2Upsert", spark, incoming, keyCol, dir, buckets,
+      (stored, inc) => stored.select(srcCols: _*).unionByName(inc))(
+      _.dropDuplicates(keyCol, seqCol)
         .withColumn("version", row_number().over(w).cast("long"))
         .withColumn("__valid_to_ts", lead(col(tsCol), 1).over(w))
         .withColumn("valid_from",
@@ -402,51 +363,27 @@ object Sinks {
         .withColumn("valid_to",
           date_format(col("__valid_to_ts"), "yyyy-MM-dd HH:mm:ss"))
         .withColumn("is_current", col("__valid_to_ts").isNull)
-        .drop("__valid_to_ts")
-      overwriteTouched(passthrough.fold(hist)(hist.unionByName(_)),
-        touched, dir)
-      assertExecutedOnce("scd2Upsert", inc, guardAcc)
-    } finally { release(); inc.unpersist(); () }
+        .drop("__valid_to_ts"))
   }
 
-  /** K6: dim MERGE — apply a put/delete changelog (op column: 'd' deletes,
-    * anything else upserts) to a keyed dim table. Bucketed like `upsert`:
-    * only the buckets the changelog touches are read or rewritten.
+  /** K6: dim MERGE — apply a put/delete changelog to a keyed dim table:
+    * per key the newest change (by `seqCol`, stored rows included) wins;
+    * an op of 'd' deletes the key, and so does a NULL op (the keep filter
+    * `op <> 'd'` is null there, as in `k6_dim_merge_state` and its
+    * oracle); any other op upserts. Stored rows carry no op and join the
+    * merge as 'r', so a stale change never evicts a newer stored row.
+    * Bucketed like `upsert`: only the buckets the changelog touches are
+    * read or rewritten.
     */
   def mergeDim(spark: SparkSession, changes: DataFrame, keyCol: String,
       seqCol: String, opCol: String, dir: String, buckets: Int = DefaultBuckets): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    // persist for the same double-execution reason as [[mergeTouched]]
-    val (src, guardAcc) = guarded(spark, changes)
-    val inc = src.withColumn(BucketCol,
-      pmod(hash(col(keyCol)), lit(resolveBuckets(dir, requestedBuckets(spark, buckets)))))
-      .persist()
-    var release: () => Unit = () => ()
-    try {
-      val touched = touchedBuckets(inc)
-      // changed-key split (r16, see [[splitByBatchKeys]]): only keys in
-      // this changelog batch enter the latest-wins window; other keys'
-      // dim rows pass through as stored
-      val (unioned, passthrough) = readTouched(spark, touched, dir) match {
-        case Some(ex) => splitByBatchKeys(spark, ex, inc, keyCol) match {
-          case Some((chEx, pass, rel)) =>
-            release = rel
-            (chEx.withColumn(opCol, lit("r"))
-              .unionByName(inc, allowMissingColumns = true), Some(pass))
-          case None => // bulk-backfill gate: all stored rows re-window
-            (ex.withColumn(opCol, lit("r"))
-              .unionByName(inc, allowMissingColumns = true), None)
-        }
-        case None => (inc, None)
-      }
-      val w = Window.partitionBy(col(keyCol)).orderBy(col(seqCol).desc)
-      val merged = unioned.withColumn("__rn", row_number().over(w))
+    val w = Window.partitionBy(col(keyCol)).orderBy(col(seqCol).desc)
+    mergeKeyed("mergeDim", spark, changes, keyCol, dir, buckets,
+      (stored, inc) => stored.withColumn(opCol, lit("r"))
+        .unionByName(inc, allowMissingColumns = true))(
+      _.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1 && col(opCol) =!= "d")
-        .drop("__rn", opCol)
-      overwriteTouched(passthrough.fold(merged)(merged.unionByName(_)),
-        touched, dir)
-      assertExecutedOnce("mergeDim", inc, guardAcc)
-    } finally { release(); inc.unpersist(); () }
+        .drop("__rn", opCol))
   }
 
   /** Distinct bucket ids of a batch — bounded by the constant bucket

@@ -946,7 +946,7 @@ object StatefulStreaming {
     *      batch of its later-arriving member;
     *   3. re-rank ONLY touched vertices' top-K lists: the scored new
     *      pairs merge into a [[Sinks]]-bucketed list store via
-    *      `mergeTouched` — top-K of (stored top-K ∪ new candidates)
+    *      `mergeTouchedKeyed` — top-K of (stored top-K ∪ new candidates)
     *      equals top-K over all candidates ever seen (the standard
     *      streaming top-K merge), so lists are always exactly the batch
     *      `knnGraph` ranking over the ingested corpus. Untouched
@@ -990,13 +990,12 @@ object StatefulStreaming {
         expr("cosine_sim(ea, eb)").as("sim"))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("sim").desc, col("neighbor_id").asc)
-    // keyed merge (r16): the step-3 doc above always promised
-    // "re-rank ONLY touched vertices"; mergeTouched delivered that at
-    // BUCKET granularity (untouched vertices sharing a bucket with a
-    // touched one still re-ranked). The keyed form is the promise kept
-    // at key granularity — all seven ingest-tier merges moved together,
-    // every closure being a per-key dropDuplicates/rank whose stored
-    // rows are already their own merged state.
+    // keyed merge (r16): the step-3 doc above promises "re-rank ONLY
+    // touched vertices" at KEY granularity — untouched vertices that
+    // share a bucket with a touched one are not re-ranked. That holds
+    // because this closure, like those of all seven ingest-tier merges,
+    // is a per-key dropDuplicates/rank whose stored rows are already
+    // their own merged state.
     Sinks.mergeTouchedKeyed(spark, scored, "vec_id",
       s"$storeDir/topk") { unioned =>
       unioned.dropDuplicates("vec_id", "neighbor_id")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.udf
 import org.apache.spark.util.LongAccumulator
 
 /** Test device for the r15 double-execution bug class: the bucketed store
-  * merges (`Sinks.mergeTouched` / `scd2Upsert` / `mergeDim`) take TWO
+  * merges (`Sinks.mergeTouchedKeyed` / `scd2Upsert` / `mergeDim`) take TWO
   * actions over the incoming micro-batch plan — the touched-bucket
   * discovery collect and the rewrite's localCheckpoint — and without the
   * self-contained persist each action re-executes the whole incoming

@@ -18,6 +18,9 @@ class SinksSpec extends SparkSpec {
     // replay the same batch (micro-batch retry) — result must not change
     Sinks.upsert(spark, Seq((1L, "a2", 2L), (3L, "c", 2L))
       .toDF("k", "v", "seq"), "k", "seq", dir)
+    // a late, older version of a stored key must not displace it
+    Sinks.upsert(spark, Seq((1L, "a-stale", 1L)).toDF("k", "v", "seq"),
+      "k", "seq", dir)
     val out = Sinks.readStore(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out === Map(1L -> "a2", 2L -> "b", 3L -> "c"))
@@ -75,7 +78,7 @@ class SinksSpec extends SparkSpec {
     def batch(n: Int, seq: Long) = spark.range(n)
       .select(col("id").as("k"), concat(lit("v"), col("id")).as("v"),
         lit(seq).as("seq"))
-    // mergeTouched (via upsert): fresh store, then an existing-store merge
+    // mergeTouchedKeyed (via upsert): fresh store, then an existing-store merge
     // (the union-with-read path must not change the execution count)
     val (b1, a1) = LineageExecGuard.counted(batch(64, 1L))
     Sinks.upsert(spark, b1, "k", "seq", s"$root/t")
@@ -236,6 +239,10 @@ class SinksSpec extends SparkSpec {
     Sinks.mergeDim(spark, Seq((1L, "x", 1L, "c"), (2L, "y", 1L, "c"))
       .toDF("k", "v", "seq", "op"), "k", "seq", "op", dir)
     Sinks.mergeDim(spark, Seq((1L, "x2", 2L, "u"), (2L, "y", 2L, "d"))
+      .toDF("k", "v", "seq", "op"), "k", "seq", "op", dir)
+    // a late, older change of a stored key must not displace it (the
+    // stored row joins the merge as a put, never as a null op)
+    Sinks.mergeDim(spark, Seq((1L, "x-stale", 1L, "u"))
       .toDF("k", "v", "seq", "op"), "k", "seq", "op", dir)
     val out = Sinks.readStore(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
