@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,8 +8,7 @@ object Verify {
     // optional 3rd arg: comma-separated query-name filter for fast
     // targeted re-checks while iterating (driver passes 2 args = all)
     val only = args.lift(2).map(_.split(",").toSet)
-    val spark = graft.core.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = graft.core.Sessions.local()
     val out = new java.io.File(outDir)
     out.mkdirs()
     // clear prior artifacts: a stale query dir from an earlier (possibly

@@ -53,7 +53,8 @@ import org.apache.spark.storage.StorageLevel
   */
 object Barrier {
 
-  val ConfKey = "spark.graft.reuseBarrier"
+  /** The mode conf, [[Knobs.ReuseBarrier]]. */
+  val ConfKey: String = Knobs.ReuseBarrier
 
   /** Default barrier mode when [[ConfKey]] is unset (OPTIMIZATION r18,
     * VERDICT r17 #3): `localCheckpoint` truncates lineage into the block

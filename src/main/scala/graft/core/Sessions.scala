@@ -2,28 +2,33 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** One place for the engine's session defaults: UTC (oracle parity), AQE
-  * (runtime re-plan + skew split), shuffle partitions sized to the env
-  * (32 locally; cluster-sized in prod), graft extensions registered.
+/** The one session builder of the engine and its CLI mains: UTC (oracle
+  * parity), AQE (runtime re-plan + skew split), shuffle partitions = the
+  * core count, graft extensions registered. The core count is the only
+  * environment setting (`SPARK_GRAFT_CPUS`, else every available core);
+  * every other setting is a Spark conf, and a `spark.*` JVM system
+  * property that this builder does not set reaches the session, e.g.
+  * `JAVA_TOOL_OPTIONS=-Dspark.graft.reuseBarrier=persist` (the knobs are
+  * listed in [[Knobs]]).
   */
 object Sessions {
 
-  /** The RocksDB streaming state store — the CLUSTER tier, conf-gated like
-    * the reuse barrier. The default HDFS-backed provider keeps every
-    * stateful operator's state ON-HEAP per executor: fine for local[n]
-    * tests, an OOM at 100 TB ingest where per-key dedup/join state runs to
-    * hundreds of GB per executor. RocksDB spills to local disk with an
-    * off-heap block cache, which is what the StatefulStreaming scale notes
-    * assume. Select with SPARK_GRAFT_STATESTORE=rocksdb (or set the Spark
-    * conf directly before starting a query — the provider is read per
-    * query start). StreamingSpec runs the A4 state machine under it.
+  /** The RocksDB streaming state store — the CLUSTER tier. The default
+    * HDFS-backed provider keeps every stateful operator's state ON-HEAP
+    * per executor: fine for local[n] tests, an OOM at 100 TB ingest where
+    * per-key dedup/join state runs to hundreds of GB per executor.
+    * RocksDB spills to local disk with an off-heap block cache, which is
+    * what the StatefulStreaming scale notes assume. Select it by setting
+    * `spark.sql.streaming.stateStore.providerClass` to this class (read
+    * per query start), e.g. as a `-D` system property. StreamingSpec runs
+    * the A4 state machine under it.
     */
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      : SparkSession = {
-    val b = SparkSession.builder()
+  def local(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)): SparkSession = {
+    val s = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
@@ -35,19 +40,7 @@ object Sessions {
       // deployment points this at its warehouse)
       .config("spark.sql.warehouse.dir",
         s"${sys.props("java.io.tmpdir")}/graft_warehouse")
-    if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb"))
-      b.config("spark.sql.streaming.stateStore.providerClass",
-        RocksDbProvider)
-    // cluster-profile reuse barrier (persist(DISK_ONLY) instead of
-    // localCheckpoint — see core.Barrier): SPARK_GRAFT_BARRIER=persist
-    // lets the whole Verify/perfbench surface run under the cluster tier
-    sys.env.get("SPARK_GRAFT_BARRIER").foreach(m => b.config(Barrier.ConfKey, m))
-    // prefix-sum bucket-count override (TextAnalysis.prefixBuckets) —
-    // output-invariant by design; the env hook lets the whole
-    // Verify/localcheck gate run under a different count to prove it
-    sys.env.get("SPARK_GRAFT_PREFIX_BUCKETS")
-      .foreach(n => b.config("spark.graft.prefixSumBuckets", n))
-    val s = b.getOrCreate()
+      .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.functions.Text
+import graft.core.Knobs
 import graft.core.Barrier.BarrierOps
 
 /** Deduplication suite over `documents` — exact, MinHash/LSH banded,
@@ -1484,8 +1485,8 @@ object Dedup extends OpModule {
     * ADVICE r13 gate-tautology point — the composed oracle replicates
     * the banding, so only this engine-vs-engine diagnostic certifies
     * recall): at sf0.1, composed = 492 of exact = 548 directed pairs —
-    * 89.8% recall, 0 spurious (`Scaling containmentrecall`, SCALING.md
-    * r14). The default therefore trades ~10% of low-Jaccard directed
+    * 89.8% recall, 0 spurious (SCALING.md r14; the DedupSimilaritySpec
+    * "composed containment recall floor" test now pins it). The default therefore trades ~10% of low-Jaccard directed
     * pairs at that corpus for the 3.5–6.3× cost cut;
     * `dedup_containment_exact` IS the recall-1 path when quote-shaped
     * asymmetry must not be missed. */
@@ -1732,8 +1733,8 @@ object Dedup extends OpModule {
     // is conf-tunable for an operator facing a legitimately deeper batch,
     // and the failure message carries the remaining pair count so the
     // caller can size a batch split.
-    val maxRounds = spark.conf.getOption("spark.graft.greedyMaxRounds")
-      .map(_.toInt).getOrElse(64)
+    val maxRounds = Knobs.positiveInt(spark, Knobs.GreedyMaxRounds)
+      .getOrElse(64)
     var rounds = 0
     // one isEmpty action per round, reused by the loop guard AND the
     // post-loop check (re-running the action would add a Spark job per
@@ -1760,7 +1761,7 @@ object Dedup extends OpModule {
       s"greedy keep-first did not settle in $rounds rounds " +
         s"(${remaining.count()} pairs still undecided) — a pathological dup " +
         "chain in one ingest batch; split the batch or raise " +
-        "spark.graft.greedyMaxRounds")
+        Knobs.GreedyMaxRounds)
     dropped
   }
 

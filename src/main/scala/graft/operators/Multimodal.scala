@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 import java.awt.image.BufferedImage
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import javax.imageio.ImageIO
+import graft.core.Knobs
 
 /** Multimodal column handling: opaque `binary` payloads + typed metadata,
   * with a REAL decode stage: payloads are genuine PNG bytes and the decoder
@@ -309,12 +310,7 @@ object Multimodal extends OpModule {
     // and audit cost — stay CONSTANT at any corpus size.
     "mm_phash_band_coverage_sampled" -> ((s, dir) => {
       import graft.core.Barrier.BarrierOps
-      // validated like storeBuckets (ADVICE r16): a typo'd conf fails
-      // naming its key, not as a bare NumberFormatException
-      val mod = s.conf.getOption("spark.graft.bandAuditMod")
-        .map(raw => raw.trim.toIntOption.filter(_ > 0).getOrElse(sys.error(
-          s"spark.graft.bandAuditMod must be a positive int, got '$raw'")))
-        .getOrElse(2)
+      val mod = Knobs.positiveInt(s, Knobs.BandAuditMod).getOrElse(2)
       val hc = phashes(s, dir).select(col("phash")).distinct()
         .filter(expr("pmod(CAST(conv(substring(md5(concat('bc|', phash))" +
           s", 1, 15), 16, 10) AS BIGINT), $mod) = 0"))
@@ -553,11 +549,7 @@ object Multimodal extends OpModule {
     // measures the fixture's k² clone growth, not the operator
     // (VERDICT r15 #2). Captured as a value — the closure must not drag
     // the session into the task.
-    // validated like storeBuckets (ADVICE r16): fail naming the conf key
-    val classes = s.conf.getOption("spark.graft.mmClasses")
-      .map(raw => raw.trim.toLongOption.filter(_ > 0).getOrElse(sys.error(
-        s"spark.graft.mmClasses must be a positive long, got '$raw'")))
-      .getOrElse(100L)
+    val classes = Knobs.positiveLong(s, Knobs.MmClasses).getOrElse(100L)
     spreadToCores(t(s, dir, "documents").select(col("doc_id"))).as[Long]
       .mapPartitions { it =>
         it.map { id =>

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.functions.Vectors
+import graft.core.Knobs
 import graft.core.Barrier.BarrierOps
 
 /** Similarity search over the `embeddings` fixture (64-d float vectors).
@@ -96,33 +97,22 @@ object Similarity extends OpModule {
   private val UpperRounds = 3
 
   /** Signature width for EVERY hyperplane-LSH consumer (`sim_lsh_ann`,
-    * `dedup_embedding_lsh`, the whole kNN-graph family): an explicit conf
-    * override if a run sets one, else DERIVED from the corpus count via
-    * [[Vectors.occupancyBits]] — bits ≈ log₂(N/8), so expected bucket
-    * occupancy (and with it the candidate join's volume) stays flat as
-    * the corpus grows, with NO knob to remember. The count is one cheap
-    * metadata-light job over the id column; at the fixtures (N=500/2000)
-    * the derivation lands on the oracle-pinned widths, so the DuckDB
-    * gate (whose `oraLshSigs` CTE runs the same integer search over
-    * `generate_series`) pins the derived path itself, at every SF.
-    *
-    * The legacy `spark.graft.knnLshBits` conf (set by Scaling's
-    * SPARK_GRAFT_KNN_BITS sweep knob) is honored ONLY when
-    * `knnFamily = true` — i.e. only by the kNN-graph family it was
-    * introduced for. `sim_lsh_ann` / `dedup_embedding_lsh` oracles
-    * derive the width unconditionally from count(*), so letting the
-    * knob reach them would fail a gated run that happens to set the
-    * env var (ADVICE r10).
+    * `dedup_embedding_lsh`, the whole kNN-graph family): the
+    * [[graft.core.Knobs.LshBits]] override if a run sets one, else DERIVED
+    * from the corpus count via [[Vectors.occupancyBits]] — bits ≈
+    * log₂(N/8), so expected bucket occupancy (and with it the candidate
+    * join's volume) stays flat as the corpus grows, with NO knob to
+    * remember. The count is one cheap metadata-light job over the id
+    * column; at the fixtures (N=500/2000) the derivation lands on the
+    * oracle-pinned widths, so the DuckDB gate (whose `oraLshSigs` CTE
+    * runs the same integer search over `generate_series`) pins the
+    * derived path itself, at every SF. The oracle gate never sets the
+    * override.
     */
   private[graft] def lshBits(s: org.apache.spark.sql.SparkSession,
-      emb: org.apache.spark.sql.DataFrame,
-      knnFamily: Boolean = false): Int =
-    s.conf.getOption("spark.graft.lshBits")
-      .orElse(if (knnFamily) s.conf.getOption("spark.graft.knnLshBits")
-              else None)
-      .map(_.toInt)
-      .getOrElse(Vectors.occupancyBits(
-        emb.select(col("vec_id")).count()))
+      emb: org.apache.spark.sql.DataFrame): Int =
+    Knobs.positiveInt(s, Knobs.LshBits).getOrElse(
+      Vectors.occupancyBits(emb.select(col("vec_id")).count()))
 
   def queries: Map[String, Q] =
     baseQueries ++ queriesIvf ++ queriesSq ++ queriesKmeans ++ queriesPca
@@ -857,7 +847,7 @@ object Similarity extends OpModule {
     // (dim, bit, table), independent of the width), so widening only
     // PRUNES candidates — recall at the derived width is ≥ recall at
     // any wider width (pinned by KnnWidthSpec).
-    knnCandidatesOf(s, emb, lshBits(s, emb, knnFamily = true))
+    knnCandidatesOf(s, emb, lshBits(s, emb))
   }
 
   /** The LSH candidate build over an arbitrary embedding relation at an
@@ -1029,7 +1019,7 @@ object Similarity extends OpModule {
     import org.apache.spark.sql.expressions.Window
     graft.plans.GraftFunctions.register(s)
     val emb = t(s, dir, "embeddings")
-    val baseBits = lshBits(s, emb, knnFamily = true)
+    val baseBits = lshBits(s, emb)
     // minSim: the base layer keeps the flat walk's 0.3 edge pruning; the
     // upper layer keeps EVERY ranked edge — HNSW upper layers are
     // NAVIGATION graphs whose long-range (low-similarity) links are the
@@ -1204,7 +1194,7 @@ object Similarity extends OpModule {
           count(lit(1)).as("n"))
     }),
     "sim_ivf_ann" -> ((s, dir) => {
-      val (assigned, probes) = ivf(s, dir, ivfC(s, t(s, dir, "embeddings").count()), 4)
+      val (assigned, probes) = ivf(s, dir, ivfC(s), 4)
       ivfTopK(assigned, probes)
     }),
     // IVF ANN over TRAINED coarse centroids — the deployment shape
@@ -1214,7 +1204,7 @@ object Similarity extends OpModule {
     // the trained family next to sim_pq_ann_trained and
     // dedup_semantic_trained.
     "sim_ivf_ann_trained" -> ((s, dir) => {
-      val (assigned, probes) = ivfTrained(s, dir, ivfC(s, t(s, dir, "embeddings").count()), 4, 2)
+      val (assigned, probes) = ivfTrained(s, dir, ivfC(s), 4, 2)
       ivfTopK(assigned, probes)
     }))
 
@@ -1256,23 +1246,27 @@ object Similarity extends OpModule {
     * method scales C ≈ √N with the corpus so expected cluster size stays
     * √N and the within-cluster pair join never degenerates toward
     * all-pairs. The fixture DEFAULT (16) is what every oracle pins;
-    * `spark.graft.semanticCentroids` lets a scale run (or a deployment)
+    * [[Knobs.SemanticCentroids]] lets a scale run (or a deployment)
     * supply the corpus-appropriate C — same plan, different blocking
-    * granularity. Mirrors the prefixSumBuckets parameterization, except
-    * C is a quality/scale knob, not output-invariant: the oracle gate
-    * always runs at the default.
+    * granularity. Unlike prefixSumBuckets, C is a quality/scale knob,
+    * not output-invariant: the oracle gate always runs at the default.
     */
-  /** Inverted-list count for the IVF ANN family — the [[semanticC]]
-    * contract: the fixture DEFAULT (16) is what every oracle pins;
-    * `spark.graft.ivfCentroids` lets a scale run supply C ≈ √N so
-    * expected list length stays √N and the probed-list candidate scan
+  private def semanticC(s: org.apache.spark.sql.SparkSession): Int =
+    Knobs.positiveInt(s, Knobs.SemanticCentroids).getOrElse(16)
+
+  /** Inverted-list count for the IVF ANN serving queries — the
+    * [[semanticC]] contract: the fixture DEFAULT (16) is what every
+    * oracle pins; [[Knobs.IvfCentroids]] lets a scale run supply C ≈ √N
+    * so expected list length stays √N and the probed-list candidate scan
     * stays output-bounded as the corpus grows. Quality/scale knob (more
     * lists at fixed nprobe searches a narrower fraction — the standard
-    * IVF recall/speed trade); the oracle gate always runs at the
-    * default. Applies to the ANN serving queries only — the k-means
-    * TRAINING primitives keep their pinned C (their oracles emit
-    * per-(cluster, dim) state, so C is part of their output contract).
+    * IVF recall/speed trade). The k-means TRAINING primitives keep their
+    * pinned C (their oracles emit per-(cluster, dim) state, so C is part
+    * of their output contract).
     */
+  private def ivfC(s: org.apache.spark.sql.SparkSession): Int =
+    Knobs.positiveInt(s, Knobs.IvfCentroids).getOrElse(16)
+
   private[graft] def isqrt(x: Long): Long = {
     var r = math.sqrt(x.toDouble).toLong
     while (r > 0 && r * r > x) r -= 1
@@ -1280,41 +1274,23 @@ object Similarity extends OpModule {
     r
   }
 
-  /** Load-and-data-derived IVF list count — the occupancyBits discipline
-    * applied to the IVF knob (r10 verdict #4). Balancing the per-build
+  /** The IVF list count a known query volume calls for — what `Scaling
+    * ivfsweep` marks in its (Q × C) grid. Balancing the per-build
     * assignment cost N·C against the serving candidate-scan cost
     * Q·nprobe·N/C gives C* = √(Q·nprobe) — N cancels, so the crossover
     * is a QUERY-VOLUME property, which is exactly what the measured
     * 8-query fixture panel showed (C ≈ √N slower) and the 1k-panel
     * sweep shows flipping (SCALING.md). Clamped to [16, √N]: the floor
-    * is the fixture default every oracle pins (Q=8, nprobe=4 → √32 ≈ 5
-    * → 16, so the oracle gate IS the derived gate), the √N ceiling is
-    * the published IVF geometry — expected list length stays ≥ √N, so
-    * assignment never dominates the build. Deterministic integer math.
+    * is the fixture default (Q=8, nprobe=4 → √32 ≈ 5 → 16), the √N
+    * ceiling is the published IVF geometry — expected list length stays
+    * ≥ √N, so assignment never dominates the build. Deterministic
+    * integer math.
     */
   private[graft] def ivfDerivedC(n: => Long, q: Long, nProbe: Int): Int = {
     val cStar = isqrt(q * nProbe)
     if (cStar <= 16) 16
     else math.max(16L, math.min(cStar, isqrt(n))).toInt
   }
-
-  /** List count for the serving queries: explicit override
-    * (spark.graft.ivfCentroids) wins; otherwise derived from the
-    * expected per-build query volume (spark.graft.ivfQueryVolume,
-    * default = the fixture panel's 8 — which derives the pinned 16, so
-    * gated runs never move). `n` is only forced when the volume is
-    * large enough that √(Q·nprobe) clears the floor. */
-  private def ivfC(s: org.apache.spark.sql.SparkSession,
-      n: => Long): Int =
-    s.conf.getOption("spark.graft.ivfCentroids").map(_.toInt).getOrElse {
-      val q = s.conf.getOption("spark.graft.ivfQueryVolume")
-        .map(_.toLong).getOrElse(8L)
-      ivfDerivedC(n, q, 4)
-    }
-
-  private def semanticC(s: org.apache.spark.sql.SparkSession): Int =
-    s.conf.getOption("spark.graft.semanticCentroids").map(_.toInt)
-      .getOrElse(16)
 
   /** SemDeDup keep-first canonicalization WITHIN each coarse cluster of a
     * (vec_id, embedding, cluster) assignment: drop every vector whose
@@ -1906,7 +1882,7 @@ object Similarity extends OpModule {
       import org.apache.spark.sql.expressions.Window
       graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
-      val (assigned, probes) = ivf(s, dir, ivfC(s, t(s, dir, "embeddings").count()), 4)
+      val (assigned, probes) = ivf(s, dir, ivfC(s), 4)
       val aug = assigned.join(broadcast(sqScale(emb)), lit(true))
         .select(col("vec_id"), col("cluster"), expr(codesExpr).as("codes"))
         .select(col("vec_id"), col("cluster"), col("codes"),
@@ -1941,7 +1917,7 @@ object Similarity extends OpModule {
     // rescore exactly via the id-only join. All-integer up to one
     // division, so every cut is bit-exact under the oracle.
     "sim_ivfpq_ann" -> ((s, dir) => {
-      val (assigned, probes) = ivf(s, dir, ivfC(s, t(s, dir, "embeddings").count()), 4)
+      val (assigned, probes) = ivf(s, dir, ivfC(s), 4)
       val withCodes = pqWithCodes(s, dir)
       ivfPqBody(s, dir, assigned, probes, withCodes, pqInitCbs(withCodes))
     }),
@@ -1953,7 +1929,7 @@ object Similarity extends OpModule {
     // sim_ivfpq_ann. The oracle chains BOTH training ladders as CTEs —
     // every assignment, mean, rounding and cut is hash-exact.
     "sim_ivfpq_ann_trained" -> ((s, dir) => {
-      val (assigned, probes) = ivfTrained(s, dir, ivfC(s, t(s, dir, "embeddings").count()), 4, 2)
+      val (assigned, probes) = ivfTrained(s, dir, ivfC(s), 4, 2)
       val withCodes = pqWithCodes(s, dir)
       ivfPqBody(s, dir, assigned, probes, withCodes,
         pqTrainCbs(withCodes, 2))

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.functions.Text
+import graft.core.Knobs
 import graft.core.Barrier.BarrierOps
 
 /** Text analysis over `documents` — the tokenizer UDTF family (U1/J6,
@@ -3352,7 +3353,7 @@ object TextAnalysis extends OpModule {
     * same bucket — so the oracles are unaffected by the choice.
     */
   private def prefixBuckets(s: org.apache.spark.sql.SparkSession): Int =
-    s.conf.getOption("spark.graft.prefixSumBuckets").map(_.toInt)
+    Knobs.positiveInt(s, Knobs.PrefixSumBuckets)
       .getOrElse(math.max(32, s.sparkContext.defaultParallelism))
 
   /** The prefix-sum core of [[packIndex]] over an arbitrary thin

@@ -48,8 +48,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * it (both engines agree bit-for-bit by design). The random-prefix
   * bound only holds against inputs chosen WITHOUT knowing the base.
   * Mitigation: the base is a deployment-time SEED —
-  * `-Dgraft.rollingFpsBase=<2..2^40>` (or env GRAFT_ROLLING_FPS_BASE) —
-  * read once at JVM init by BOTH the engine walk and the oracle-SQL
+  * `-Dgraft.rollingFpsBase=<2..2^40>` (e.g. through `JAVA_TOOL_OPTIONS`)
+  * — read once at JVM init by BOTH the engine walk and the oracle-SQL
   * generators (TextAnalysis.oraRollingCtes / rollingFpsSpecCol derive
   * base and modular inverse from [[RollingFps.Base]]/[[BaseInv]]), so a
   * production run picks an unguessable base per corpus while the two
@@ -105,9 +105,8 @@ object RollingFps {
     * seed space serves the threat model (non-targeted corpus poisoning
     * by documents authored without knowing the seed). */
   val Base: Long = {
-    val b = sys.props.get("graft.rollingFpsBase")
-      .orElse(sys.env.get("GRAFT_ROLLING_FPS_BASE"))
-      .map(_.toLong).getOrElse(131L)
+    val b = sys.props.get("graft.rollingFpsBase").map(_.toLong)
+      .getOrElse(131L)
     require(b >= 2 && b <= (1L << 40),
       s"rollingFpsBase must be in [2, 2^40], got $b")
     b

@@ -102,26 +102,25 @@ object Jobs {
     }
 
   /** The DwdBaseDb job in STREAMING mode: readStream over orders, CDC
-    * envelope + broadcast config routing per micro-batch, one routed write
-    * per batch partitioned by `sink_table` (K2 dynamic-topic analog; for
-    * Kafka the partition column becomes the per-row `topic` column).
+    * envelope + broadcast config routing, written through Spark's parquet
+    * file sink partitioned by `sink_table` (K2 dynamic-topic analog; for
+    * Kafka the partition column becomes the per-row `topic` column). The
+    * sink's `_spark_metadata` log records each committed batch, so a batch
+    * replayed after a crash between its write and its commit is skipped,
+    * not appended twice: exactly-once end to end.
     */
   def runRoutedStreaming(spark: SparkSession, sfDir: String,
       outDir: String): Unit = {
     import spark.implicits._
     val config = LogSplit.routingConfig
       .toDF("cfg_table", "cfg_type", "sink_table")
-    val stream = Tables.loadStream(spark, sfDir, "orders")
-    val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val routed = Cdc.envelopeFromOrders(batch.toDF())
-          .join(org.apache.spark.sql.functions.broadcast(config),
-            col("tbl") === col("cfg_table") && col("type") === col("cfg_type"))
-          .select(element_at(col("data"), "id").cast("bigint").as("id"),
-            col("sink_table"))
-        Sinks.writeRouted(routed, outDir)
-        ()
-      }
+    val q = Cdc.envelopeFromOrders(Tables.loadStream(spark, sfDir, "orders"))
+      .join(org.apache.spark.sql.functions.broadcast(config),
+        col("tbl") === col("cfg_table") && col("type") === col("cfg_type"))
+      .select(element_at(col("data"), "id").cast("bigint").as("id"),
+        col("sink_table"))
+      .writeStream.format("parquet").partitionBy("sink_table")
+      .option("path", outDir)
       .option("checkpointLocation", s"$outDir/_chk")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .start()

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.core.Knobs
 
 /** Sink library — the K1-K7 surface of the reference re-expressed for
   * Spark's micro-batch model. The reference writes to Kafka/Doris/HBase;
@@ -10,7 +11,8 @@ import org.apache.spark.sql.functions._
   * Kafka broker in this environment).
   *
   * K1 exactly-once topic sink     (ref FlinkSinkUtil.java:31-42)
-  * K2 dynamic-topic routing       (ref FlinkSinkUtil.java:44-60)
+  * K2 dynamic-topic routing       (ref FlinkSinkUtil.java:44-60) — the
+  *                                file sink in `Jobs.runRoutedStreaming`
   * K3/K4 Doris serving tables     (ref FlinkSinkUtil.java:63-86)
   * K5 upsert latest-per-key       (ref SQLUtil.java:54-62)
   * K6 dim MERGE put/delete        (ref DimHBaseSinkFunction.java:33-70)
@@ -27,13 +29,6 @@ import org.apache.spark.sql.functions._
   * by `spark.graft.keyedSplitMaxKeys`).
   */
 object Sinks {
-
-  /** K2: dynamic routing — the `sink_table` column becomes the partition
-    * (for Kafka: rename to `topic` and omit the fixed topic option; the
-    * Spark Kafka sink routes per-row natively).
-    */
-  def writeRouted(df: DataFrame, outDir: String): Unit =
-    df.write.mode(SaveMode.Append).partitionBy("sink_table").parquet(outDir)
 
   /** Hash-bucket partition column of the keyed stores (K5/K6). The store
     * is laid out as `dir/__bucket=N/...`; a micro-batch reads and rewrites
@@ -60,17 +55,7 @@ object Sinks {
   // created after it, never an existing one
   private def requestedBuckets(spark: SparkSession, buckets: Int): Int =
     if (buckets > 0) buckets
-    else positiveIntConf(spark, "spark.graft.storeBuckets", 16)
-
-  /** A positive-int `spark.graft.*` conf, validated where it is read so a
-    * typo'd value fails naming its key rather than with a
-    * NumberFormatException from deep inside a merge.
-    */
-  private def positiveIntConf(spark: SparkSession, key: String,
-      default: Int): Int =
-    spark.conf.getOption(key).fold(default)(raw =>
-      raw.trim.toIntOption.filter(_ > 0).getOrElse(
-        sys.error(s"$key must be a positive int, got '$raw'")))
+    else Knobs.positiveInt(spark, Knobs.StoreBuckets).getOrElse(16)
 
   /** The store's bucket count is LAYOUT, not a per-call knob: it is
     * pinned in a `_graft_buckets` marker on first write and reused on
@@ -145,7 +130,7 @@ object Sinks {
     * per deployment like `storeBuckets`.
     */
   private def keyedSplitMaxKeys(spark: SparkSession): Int =
-    positiveIntConf(spark, "spark.graft.keyedSplitMaxKeys", 1000000)
+    Knobs.positiveInt(spark, Knobs.KeyedSplitMaxKeys).getOrElse(1000000)
 
   /** Diagnostic: how many keyed merges fell back to the unsplit path this
     * JVM (bulk-backfill gate above). A test hook: SinksSpec reads it.
@@ -198,7 +183,7 @@ object Sinks {
     if (keyRows.length > maxKeys) {
       keyedSplitFallbacks.incrementAndGet()
       System.err.println(s"[graft] keyed split: batch exceeds $maxKeys " +
-        s"distinct '$keyCol' keys (spark.graft.keyedSplitMaxKeys); " +
+        s"distinct '$keyCol' keys (${Knobs.KeyedSplitMaxKeys}); " +
         "merging unsplit")
       None
     } else {
@@ -229,8 +214,7 @@ object Sinks {
     */
   private def guarded(spark: SparkSession, incoming: DataFrame)
       : (DataFrame, Option[org.apache.spark.util.LongAccumulator]) =
-    if (!spark.conf.getOption("spark.graft.lineageGuard")
-        .exists(_.trim.equalsIgnoreCase("true"))) (incoming, None)
+    if (!Knobs.flag(spark, Knobs.LineageGuard)) (incoming, None)
     else {
       val acc = spark.sparkContext.longAccumulator("graft-lineage-guard")
       val tick = udf(() => { acc.add(1L); true }).asNondeterministic()

@@ -17,10 +17,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * partitioned by the group key — the same layout Flink keeps in keyed
   * state. TTL bounds the store exactly like the reference's 1-day
   * StateTtlConfig. At 100 TB the state store is RocksDB-backed per
-  * executor (the conf-gated cluster tier in `Sessions` —
-  * SPARK_GRAFT_STATESTORE=rocksdb sets the provider class, and
-  * StreamingSpec runs this file's A4 machine under it); nothing here is
-  * driver-resident.
+  * executor (the conf-gated cluster tier, `Sessions.RocksDbProvider` as
+  * `spark.sql.streaming.stateStore.providerClass`; StreamingSpec runs
+  * this file's A4 machine under it); nothing here is driver-resident.
   */
 object StatefulStreaming {
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.streaming.Jobs
 
 /** CLI entry: run one (or all) of the 13 reference jobs in batch.
@@ -9,8 +8,7 @@ import graft.streaming.Jobs
 object RunJob {
   def main(args: Array[String]): Unit = {
     val Array(job, sfDir, outDir) = args.take(3)
-    val spark = graft.core.Sessions.local(
-      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
+    val spark = graft.core.Sessions.local()
     val names = if (job == "all") Jobs.jobs.keys.toSeq.sorted else Seq(job)
     names.foreach { n =>
       val counts = Jobs.run(n, spark, sfDir, outDir)

@@ -13,8 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * site fails here until its author states (and thereby reviews) the
   * bound.
   *
-  * The same walk pins the per-micro-batch store layout to one module:
-  * only `streaming.BatchStore` may spell its directory names.
+  * The same walk pins three things to one module each: only
+  * `streaming.BatchStore` may spell the per-micro-batch store layout,
+  * only `core.Knobs` a `spark.graft.*` conf key, and only `core.Sessions`
+  * may build a session or read the environment.
   */
 class BoundedWindowLintSpec extends AnyFunSuite {
 
@@ -78,6 +80,37 @@ class BoundedWindowLintSpec extends AnyFunSuite {
     }
     assert(bad.isEmpty,
       "store layout literal outside streaming.BatchStore:\n" +
+        bad.mkString("\n"))
+  }
+
+  /** `file:line: text` of each non-comment line matching `bad` in every
+    * `src/main` file except `owner`. */
+  private def outside(owner: String)(bad: String => Boolean): Seq[String] = {
+    val found = scala.collection.mutable.ListBuffer.empty[String]
+    scanMain { (p, lines) =>
+      if (p.getFileName.toString != owner)
+        for (i <- 0 until lines.size()) {
+          val l = lines.get(i)
+          val t = l.trim
+          val comment = t.startsWith("//") || t.startsWith("*") ||
+            t.startsWith("/**")
+          if (!comment && bad(l)) found += s"$p:${i + 1}: $l"
+        }
+    }
+    found.toList
+  }
+
+  test("only core.Knobs spells a spark.graft conf key") {
+    val bad = outside("Knobs.scala")(_.contains("\"spark.graft."))
+    assert(bad.isEmpty,
+      "spark.graft.* key literal outside core.Knobs:\n" + bad.mkString("\n"))
+  }
+
+  test("only core.Sessions builds a session or reads the environment") {
+    val bad = outside("Sessions.scala")(l =>
+      l.contains("sys.env") || l.contains("SparkSession.builder"))
+    assert(bad.isEmpty,
+      "session builder or env read outside core.Sessions:\n" +
         bad.mkString("\n"))
   }
 }

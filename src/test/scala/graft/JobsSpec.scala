@@ -33,13 +33,26 @@ class JobsSpec extends SparkSpec {
       .filter(_.startsWith("sink_table=")).toSet
     assert(parts === Set("sink_table=dwd_trade_order_add",
       "sink_table=dwd_trade_order_upd"))
-    val streamed = spark.read.parquet(out)
-      .select(col("id"), col("sink_table").cast("string"))
     val batch = graft.operators.LogSplit
       .queries("x2_fact_router")(spark, sfDir)
-    assert(streamed.exceptAll(batch).count() === 0 &&
-      batch.exceptAll(streamed).count() === 0,
-      "streaming routed output must equal the batch router")
+    def assertEqualsBatch(what: String): Unit = {
+      val streamed = spark.read.parquet(out)
+        .select(col("id"), col("sink_table").cast("string"))
+      assert(streamed.exceptAll(batch).count() === 0 &&
+        batch.exceptAll(streamed).count() === 0,
+        s"streaming routed output must equal the batch router ($what)")
+    }
+    assertEqualsBatch("first run")
+    // a crash between the newest batch's write and its commit: drop the
+    // commit and restart — the replayed batch must not append twice
+    val commits = new java.io.File(out, "_chk/commits").listFiles()
+      .filter(_.getName.forall(_.isDigit))
+    assert(commits.nonEmpty, "the stream committed no batch")
+    val newest = commits.maxBy(_.getName.toLong)
+    assert(newest.delete())
+    new java.io.File(newest.getParent, s".${newest.getName}.crc").delete()
+    Jobs.runRoutedStreaming(spark, sfDir, out)
+    assertEqualsBatch("after replaying the uncommitted batch")
   }
 
   test("all 13 reference jobs run and write non-empty outputs") {

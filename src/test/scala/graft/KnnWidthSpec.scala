@@ -94,16 +94,4 @@ class KnnWidthSpec extends SparkSpec {
     assert(derivedRecall > 0.1,
       s"fixture recall sanity floor breached: $derivedRecall")
   }
-
-  test("explicit conf override still beats the derivation") {
-    spark.conf.set("spark.graft.knnLshBits", "9")
-    try {
-      val overridden = Similarity.knnCandidates(spark, sfDir)
-        .select(col("vec_id"), col("neighbor_id"))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val nine = candidates(Some(9))
-      assert(overridden === nine,
-        "legacy spark.graft.knnLshBits must still pin the width")
-    } finally spark.conf.unset("spark.graft.knnLshBits")
-  }
 }

@@ -293,15 +293,6 @@ class SinksSpec extends SparkSpec {
     // (schema would come from the catalog in a production deployment)
   }
 
-  test("K2 routed write partitions by sink_table") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("route").toString + "/r"
-    Sinks.writeRouted(Seq((1L, "dwd_page"), (2L, "dwd_err"))
-      .toDF("id", "sink_table"), dir)
-    val parts = new java.io.File(dir).list().filter(_.startsWith("sink_table="))
-    assert(parts.toSet === Set("sink_table=dwd_page", "sink_table=dwd_err"))
-  }
-
   test("K7 dim DDL: create / drop / update") {
     val base = Files.createTempDirectory("ddl").toString
     Sinks.applyDimDdl(spark, base, "dim_user", "c")
