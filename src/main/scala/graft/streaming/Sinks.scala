@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 import graft.core.Knobs
 
 /** Sink library — the K1-K7 surface of the reference re-expressed for
@@ -23,10 +24,11 @@ import graft.core.Knobs
   * layers) are written from foreachBatch and are replay-idempotent — the
   * same batch merged twice leaves the same store — which makes
   * micro-batch retries exactly-once in effect. Scale: every write is a
-  * distributed `DataFrame` write, and each keyed merge runs three bounded
-  * driver collects: the touched bucket ids and the present bucket ids
-  * (both at most the bucket count) and the batch's distinct keys (capped
-  * by `spark.graft.keyedSplitMaxKeys`).
+  * distributed `DataFrame` write, and each keyed merge runs one bounded
+  * driver collect: the batch's distinct (bucket, key) pairs, capped by
+  * `spark.graft.keyedSplitMaxKeys`, which give both the touched buckets
+  * and the key set (a bulk backfill past the cap adds the touched-bucket
+  * collect, at most the bucket count).
   */
 object Sinks {
 
@@ -144,14 +146,14 @@ object Sinks {
     * window work is ∝ the changed keys' history, not the touched buckets'
     * whole content — the difference between "reprocess every key that
     * shares a bucket with a change" and "reprocess what changed" once
-    * buckets hold many keys (always true at 100 TB sizing). The key set is
-    * broadcast: a micro-batch's distinct keys are bounded by batch size.
-    * A bulk backfill past [[keyedSplitMaxKeys]] returns None — the caller
-    * merges through its unsplit form instead; the gate is a LIMIT on the
-    * distinct collect, so driver memory is bounded by the cap even when
-    * the batch holds millions of keys (r16 VERDICT #2). With that many
-    * changed keys the split buys little anyway: most stored rows are in
-    * the merge either way.
+    * buckets hold many keys (always true at 100 TB sizing).
+    *
+    * `keyRows` are the (bucket, key) rows of [[mergeKeyed]]'s one
+    * discovery collect, so the split collects nothing itself. That
+    * collect is capped at [[keyedSplitMaxKeys]]; a bulk backfill past the
+    * cap never reaches here (the caller merges unsplit), and with that
+    * many changed keys the split buys little anyway: most stored rows are
+    * in the merge either way.
     *
     * The key set is materialized on the DRIVER and re-planted as a
     * LocalRelation rather than broadcast-joined straight off the batch
@@ -174,28 +176,16 @@ object Sinks {
     * releases that cache; callers run it after [[overwriteTouched]].
     */
   private def splitByBatchKeys(spark: SparkSession, ex: DataFrame,
-      inc: DataFrame, keyCol: String)
-      : Option[(DataFrame, DataFrame, () => Unit)] = {
+      keyRows: Seq[Row], field: StructField)
+      : (DataFrame, DataFrame, () => Unit) = {
     import scala.jdk.CollectionConverters._
-    val maxKeys = keyedSplitMaxKeys(spark)
-    val field = inc.schema(keyCol)
-    val keyRows = inc.select(col(keyCol)).distinct().limit(maxKeys + 1).collect()
-    if (keyRows.length > maxKeys) {
-      keyedSplitFallbacks.incrementAndGet()
-      System.err.println(s"[graft] keyed split: batch exceeds $maxKeys " +
-        s"distinct '$keyCol' keys (${Knobs.KeyedSplitMaxKeys}); " +
-        "merging unsplit")
-      None
-    } else {
-      val keys = spark.createDataFrame(keyRows.toSeq.asJava,
-        org.apache.spark.sql.types.StructType(Seq(field.copy(name = "__mk"))))
-        .withColumn("__ch", lit(true))
-      val marked = ex.join(broadcast(keys), col(keyCol) <=> col("__mk"), "left")
-        .persist()
-      Some((marked.filter(col("__ch").isNotNull).drop("__mk", "__ch"),
-        marked.filter(col("__ch").isNull).drop("__mk", "__ch"),
-        () => { marked.unpersist(); () }))
-    }
+    val keys = spark.createDataFrame(keyRows.map(r => Row(r.get(1))).asJava,
+      StructType(Seq(field.copy(name = "__mk")))).withColumn("__ch", lit(true))
+    val marked = ex.join(broadcast(keys), col(field.name) <=> col("__mk"), "left")
+      .persist()
+    (marked.filter(col("__ch").isNotNull).drop("__mk", "__ch"),
+      marked.filter(col("__ch").isNull).drop("__mk", "__ch"),
+      () => { marked.unpersist(); () })
   }
 
   /** Opt-in production twin of the test-scope LineageExecGuard (r16
@@ -238,15 +228,21 @@ object Sinks {
 
   /** The one keyed-merge body every bucketed store runs through. It
     * buckets the incoming rows by `keyCol` and persists them: the batch
-    * lineage feeds several actions below, and inside a streaming
-    * foreachBatch that lineage is the micro-batch's whole stateful plan
-    * (measured 2–4 s per re-execution in the r15 soak DWS stages), so it
-    * must execute once. It then reads ONLY the touched buckets' stored
-    * rows, splits them around the batch's keys ([[splitByBatchKeys]]),
-    * hands `merge` the rows `combine(stored rows of the changed keys,
-    * batch)` returns — or the batch alone on a fresh bucket set — and
-    * dynamically overwrites just the touched buckets with the merged rows
-    * plus the untouched keys' stored rows. Everything from bucket
+    * lineage feeds two actions below (the discovery collect and the
+    * staged write), and inside a streaming foreachBatch that lineage is
+    * the micro-batch's whole stateful plan (measured 2–4 s per
+    * re-execution in the r15 soak DWS stages), so it must execute once.
+    * One collect of the batch's distinct (bucket, key) pairs, capped at
+    * [[keyedSplitMaxKeys]] + 1, yields both the touched buckets and the
+    * key set. The merge then reads ONLY the touched buckets' stored rows,
+    * splits them around the batch's keys ([[splitByBatchKeys]]), hands
+    * `merge` the rows `combine(stored rows of the changed keys, batch)`
+    * returns — or the batch alone on a fresh bucket set — and rewrites
+    * just the touched buckets with the merged rows plus the untouched
+    * keys' stored rows ([[overwriteTouched]]). Past the cap the key set
+    * is incomplete, so the touched buckets come from their own collect
+    * and, when the store holds any of them, every stored row of those
+    * buckets re-merges (the bulk-backfill gate). Everything from bucket
     * discovery on sits inside the try, so the persisted blocks are
     * released on every failure path too (a leak here accumulates across
     * a long-running streaming driver's batches).
@@ -259,16 +255,25 @@ object Sinks {
     val inc = withBucket(spark, src, keyCol, dir, buckets).persist()
     var release: () => Unit = () => ()
     try {
-      val touched = touchedBuckets(inc)
+      val maxKeys = keyedSplitMaxKeys(spark)
+      val keyRows = inc.select(col(BucketCol), col(keyCol)).distinct()
+        .limit(maxKeys + 1).collect().toSeq
+      val bulk = keyRows.length > maxKeys
+      val touched = if (bulk) touchedBuckets(inc)
+        else keyRows.map(_.getInt(0)).distinct.sorted
       val (changed, passthrough) = readTouched(spark, touched, dir) match {
-        case Some(ex) => splitByBatchKeys(spark, ex, inc, keyCol) match {
-          case Some((chEx, pass, rel)) =>
-            release = rel
-            (combine(chEx, inc), Some(pass))
-          case None => // bulk-backfill gate: every stored row re-merges
-            (combine(ex, inc), None)
-        }
         case None => (inc, None)
+        case Some(ex) if bulk => // every stored row re-merges
+          keyedSplitFallbacks.incrementAndGet()
+          System.err.println(s"[graft] keyed split: batch exceeds $maxKeys " +
+            s"distinct '$keyCol' keys (${Knobs.KeyedSplitMaxKeys}); " +
+            "merging unsplit")
+          (combine(ex, inc), None)
+        case Some(ex) =>
+          val (chEx, pass, rel) =
+            splitByBatchKeys(spark, ex, keyRows, inc.schema(keyCol))
+          release = rel
+          (combine(chEx, inc), Some(pass))
       }
       val merged = merge(changed)
       overwriteTouched(passthrough.fold(merged)(merged.unionByName(_)),
@@ -390,29 +395,43 @@ object Sinks {
     else Some(spark.read.option("basePath", dir).parquet(dirs: _*))
   }
 
-  /** Rewrite only the touched buckets: dynamic partition overwrite
-    * replaces exactly the partitions present in the output (Spark's
-    * commit protocol stages then swaps per-partition). Deliberately
-    * localCheckpoint (NOT the pluggable core.Barrier): lineage must be
-    * SEVERED here so the rewrite can never re-read the files it is about
-    * to replace — on block loss mid-write, failing the job is the safe
-    * outcome, recomputing from replaced inputs is not.
-    * A touched bucket whose every key was deleted yields no output rows —
-    * dynamic overwrite leaves absent partitions alone, so those are
-    * dropped explicitly.
+  /** Name of the staging directory [[overwriteTouched]] writes inside a
+    * store. It starts with `_` and holds no `=`, so Spark's file index and
+    * [[resolveBuckets]] both skip it: a leftover from a crash is never
+    * read as store rows.
+    */
+  private[graft] val StagingDir = "_graft_staging"
+
+  /** Rewrite only the touched buckets: write the merged rows once,
+    * partitioned by bucket, into [[StagingDir]], then on the driver swap
+    * each touched bucket — delete `__bucket=b`, move the staged
+    * `__bucket=b` into its place if one was staged — and delete the
+    * staging directory. A touched bucket with nothing staged (every key
+    * deleted by a K6 merge) is thereby dropped. A staging directory left
+    * over from a crash is deleted before the write.
+    *
+    * The rewrite never reads the files it replaces: the write job reads
+    * the old bucket files and commits before any swap starts, so a task
+    * retry or a lost cache block inside it recomputes from old files
+    * only. A crash before the swap leaves the store as it was, and the
+    * replayed batch re-merges idempotently. The swap is the same
+    * delete-then-rename per partition that Spark's dynamic partition
+    * overwrite does at job commit, with the same exposure: a crash
+    * between one bucket's delete and its rename loses that bucket.
     */
   private def overwriteTouched(merged: DataFrame, touched: Seq[Int],
       dir: String): Unit = {
-    val out = merged.localCheckpoint()
-    out.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(BucketCol).parquet(dir)
-    val present = out.select(BucketCol).distinct().collect()
-      .map(_.getInt(0)).toSet
-    touched.filterNot(present).foreach { b =>
-      val d = new java.io.File(dir, s"$BucketCol=$b")
-      if (d.exists()) { d.listFiles().foreach(deleteRec); d.delete() }
+    val staging = new java.io.File(dir, StagingDir)
+    deleteRec(staging)
+    merged.write.partitionBy(BucketCol).parquet(staging.getPath)
+    touched.foreach { b =>
+      val target = new java.io.File(dir, s"$BucketCol=$b")
+      val staged = new java.io.File(staging, s"$BucketCol=$b")
+      deleteRec(target)
+      if (staged.exists()) java.nio.file.Files.move(staged.toPath,
+        target.toPath, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     }
+    deleteRec(staging)
   }
 
   /** K7: DDL side effects driven by config-change events — create/drop of

@@ -6,10 +6,10 @@ import org.apache.spark.util.LongAccumulator
 
 /** Test device for the r15 double-execution bug class: the bucketed store
   * merges (`Sinks.mergeTouchedKeyed` / `scd2Upsert` / `mergeDim`) take TWO
-  * actions over the incoming micro-batch plan — the touched-bucket
-  * discovery collect and the rewrite's localCheckpoint — and without the
-  * self-contained persist each action re-executes the whole incoming
-  * lineage. Inside a streaming foreachBatch that lineage is the
+  * actions over the incoming micro-batch plan — the (bucket, key)
+  * discovery collect and the staged write of the merged rows — and
+  * without the self-contained persist each action re-executes the whole
+  * incoming lineage. Inside a streaming foreachBatch that lineage is the
   * micro-batch's entire stateful plan (complete-mode state read + agg):
   * the re-execution cost 2–4 s per batch and hid for FOUR rounds because
   * every operator-level gate only checks RESULTS, which re-execution

@@ -115,8 +115,7 @@ class RollingFpsSpec extends SparkSpec {
     // at JVM init by design); with a seed override present the inverse
     // property above is still the real check, so cancel rather than
     // fail spuriously (ADVICE r14)
-    val overridden = sys.props.contains("graft.rollingFpsBase") ||
-      sys.env.contains("GRAFT_ROLLING_FPS_BASE")
+    val overridden = sys.props.contains("graft.rollingFpsBase")
     assume(!overridden,
       "rolling-fps seed overridden; skipping default-seed 131 pin")
     assert(b === 131L && inv === 1372944692508917009L)

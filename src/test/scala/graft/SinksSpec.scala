@@ -279,6 +279,29 @@ class SinksSpec extends SparkSpec {
       keysB.head -> "b0"))
   }
 
+  test("K5 a staging directory left over from a crash is never read and " +
+      "the next merge clears it") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, hash, lit, pmod}
+    val dir = Files.createTempDirectory("staging").toString + "/t"
+    Sinks.upsert(spark, Seq((1L, "a", 1L), (2L, "b", 1L))
+      .toDF("k", "v", "seq"), "k", "seq", dir)
+    // a crashed rewrite left a staged copy of key 1's bucket whose row
+    // would win the merge (higher seq) if the store ever read it
+    val b1 = Seq(1L).toDF("k").select(pmod(hash(col("k")), lit(16)))
+      .first().getInt(0)
+    val staging = new java.io.File(dir, Sinks.StagingDir)
+    Seq((1L, "crash", 9L)).toDF("k", "v", "seq")
+      .write.parquet(s"$staging/__bucket=$b1")
+    def store() = Sinks.readStore(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(store() === Map(1L -> "a", 2L -> "b"))
+    Sinks.upsert(spark, Seq((1L, "a2", 2L)).toDF("k", "v", "seq"),
+      "k", "seq", dir)
+    assert(store() === Map(1L -> "a2", 2L -> "b"))
+    assert(!staging.exists(), s"staging directory left behind: $staging")
+  }
+
   test("K6 deleting every key of a bucket drops the bucket directory") {
     import spark.implicits._
     val dir = Files.createTempDirectory("dimdrop").toString + "/d"

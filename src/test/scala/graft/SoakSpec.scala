@@ -217,7 +217,8 @@ class SoakSpec extends SparkSpec {
 
   test("the full soak is green under the RocksDB state store (cluster tier)") {
     // provider class is read at query start, so setting it on the shared
-    // session configures exactly what SPARK_GRAFT_STATESTORE=rocksdb
+    // session configures exactly what
+    // -Dspark.sql.streaming.stateStore.providerClass=…RocksDBStateStoreProvider
     // would — every streaming aggregate in the soak then keeps its state
     // in RocksDB while all the store-vs-batch-twin assertions still hold
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",

@@ -50,7 +50,8 @@ class StreamingSpec extends SparkSpec {
     implicit val ctx = spark.sqlContext
     // the provider class is read at QUERY start, so setting it on the
     // shared session here exercises exactly what the cluster profile
-    // (SPARK_GRAFT_STATESTORE=rocksdb in Sessions) would configure
+    // (-Dspark.sql.streaming.stateStore.providerClass=…RocksDBStateStoreProvider)
+    // would configure
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       graft.core.Sessions.RocksDbProvider)
     var q: StreamingQuery = null
