@@ -88,13 +88,27 @@ object Sinks {
         s"store $dir has bucket directories but no _graft_buckets marker; " +
           "write the marker matching the existing layout before merging")
       d.mkdirs()
-      val tmp = java.nio.file.Files.createTempFile(d.toPath, "_graft_buckets", ".tmp")
-      java.nio.file.Files.write(tmp, requested.toString.getBytes("UTF-8"))
-      java.nio.file.Files.move(tmp, marker.toPath,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      writeMarker(d, "_graft_buckets", requested.toString)
       requested
     }
   }
+
+  /** Write a marker file `d/name`: staged next to it, then atomically
+    * moved over it, so a reader or a crash never sees half a marker.
+    */
+  private def writeMarker(d: java.io.File, name: String, text: String): Unit = {
+    val tmp = java.nio.file.Files.createTempFile(d.toPath, name, ".tmp")
+    java.nio.file.Files.write(tmp, text.getBytes("UTF-8"))
+    java.nio.file.Files.move(tmp, new java.io.File(d, name).toPath,
+      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  }
+
+  /** The store's columns (bucket column excluded) as a DDL string,
+    * rewritten by every merge before its bucket swap. A K6 merge that
+    * deletes every key leaves no parquet footer to infer a schema from;
+    * [[readStore]] then takes the columns from this marker.
+    */
+  private val SchemaMarker = "_graft_schema"
 
   /** `df` plus the store's bucket column: `keyCol` hashed into the
     * store's marker-pinned bucket count (created on first use).
@@ -104,9 +118,18 @@ object Sinks {
     df.withColumn(BucketCol, pmod(hash(col(keyCol)),
       lit(resolveBuckets(dir, requestedBuckets(spark, buckets)))))
 
-  /** Read a keyed store back without its internal bucket column. */
-  def readStore(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(dir).drop(BucketCol)
+  /** Read a keyed store back without its internal bucket column. A store
+    * with no bucket left (every key deleted) reads as an empty relation
+    * with the columns its [[SchemaMarker]] names.
+    */
+  def readStore(spark: SparkSession, dir: String): DataFrame = {
+    val marker = new java.io.File(dir, SchemaMarker)
+    val emptied = marker.exists() &&
+      !new java.io.File(dir).list().exists(_.startsWith(s"$BucketCol="))
+    val reader = if (!emptied) spark.read else spark.read.schema(new String(
+      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8"))
+    reader.parquet(dir).drop(BucketCol)
+  }
 
   /** K5: upsert-by-key into a keyed store: merge incoming rows with the
     * existing rows OF THE TOUCHED BUCKETS ONLY, keep the newest version
@@ -407,8 +430,10 @@ object Sinks {
     * each touched bucket — delete `__bucket=b`, move the staged
     * `__bucket=b` into its place if one was staged — and delete the
     * staging directory. A touched bucket with nothing staged (every key
-    * deleted by a K6 merge) is thereby dropped. A staging directory left
-    * over from a crash is deleted before the write.
+    * deleted by a K6 merge) is thereby dropped; the [[SchemaMarker]],
+    * written between the write and the swap, keeps such a store
+    * readable. A staging directory left over from a crash is deleted
+    * before the write.
     *
     * The rewrite never reads the files it replaces: the write job reads
     * the old bucket files and commits before any swap starts, so a task
@@ -424,6 +449,8 @@ object Sinks {
     val staging = new java.io.File(dir, StagingDir)
     deleteRec(staging)
     merged.write.partitionBy(BucketCol).parquet(staging.getPath)
+    writeMarker(new java.io.File(dir), SchemaMarker,
+      merged.drop(BucketCol).schema.toDDL)
     touched.foreach { b =>
       val target = new java.io.File(dir, s"$BucketCol=$b")
       val staged = new java.io.File(staging, s"$BucketCol=$b")

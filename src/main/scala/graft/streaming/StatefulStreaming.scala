@@ -608,13 +608,16 @@ object StatefulStreaming {
       .filter(col("toks") > 0L)
       .barrier() // read by the index, the slice join, the meta write
     val counts = toks.select(col("doc_id"), col("toks"))
-    // ONE scalar: a 1-row driver fetch over an O(batches) relation —
-    // bounded by design, the same class as Sinks' touched-bucket lists
-    val base = BatchStore.readPrior(spark, s"$storeDir/__meta", batchId,
-        StructType(Seq(StructField("toks_total", LongType))))
-      .agg(coalesce(sum(col("toks_total")), lit(0L))).first().getLong(0)
     val meta = counts.agg(coalesce(sum(col("toks")), lit(0L)).as("toks_total"))
-    val batchToks = meta.first().getLong(0)
+    // ONE action for both scalars: the prior corpus total (an O(batches)
+    // relation) beside the batch total, a 1-row cross join fetched to the
+    // driver — bounded by design, like Sinks' touched-bucket lists
+    val totals = BatchStore.readPrior(spark, s"$storeDir/__meta", batchId,
+        StructType(Seq(StructField("toks_total", LongType))))
+      .agg(coalesce(sum(col("toks_total")), lit(0L)).as("base"))
+      .crossJoin(meta).first()
+    val base = totals.getLong(0)
+    val batchToks = totals.getLong(1)
     // the batch's own prefix-sum shifted by the global base: no plan node
     // ever touches the already-indexed corpus
     val shifted = graft.operators.TextAnalysis.packIndexFromCounts(counts, L)

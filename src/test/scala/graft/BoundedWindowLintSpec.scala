@@ -16,13 +16,17 @@ import org.scalatest.funsuite.AnyFunSuite
   * The same walk pins three things to one module each: only
   * `streaming.BatchStore` may spell the per-micro-batch store layout,
   * only `core.Knobs` a `spark.graft.*` conf key, and only `core.Sessions`
-  * may build a session or read the environment.
+  * may build a session or read the environment — in the tests too, so
+  * the suites run on the engine's own session.
   */
 class BoundedWindowLintSpec extends AnyFunSuite {
 
-  /** Every `.scala` file under `src/main/scala` with its lines; fails
-    * unless at least one file was scanned. */
   private def scanMain(check: (java.nio.file.Path,
+      java.util.List[String]) => Unit): Unit = scan("src/main/scala")(check)
+
+  /** Every `.scala` file under the build's source tree `tree` with its
+    * lines; fails unless at least one file was scanned. */
+  private def scan(tree: String)(check: (java.nio.file.Path,
       java.util.List[String]) => Unit): Unit = {
     // anchor to the build (the directory holding build.sbt above this
     // suite's compiled classes), not to whatever cwd the JVM started in
@@ -31,7 +35,7 @@ class BoundedWindowLintSpec extends AnyFunSuite {
     val base = Iterator.iterate(classes)(_.getParent).takeWhile(_ != null)
       .find(d => java.nio.file.Files.exists(d.resolve("build.sbt")))
       .getOrElse(fail(s"no build.sbt above $classes"))
-    val root = base.resolve("src/main/scala")
+    val root = base.resolve(tree)
     var scanned = 0
     val walk = java.nio.file.Files.walk(root)
     try walk.forEach { p =>
@@ -84,10 +88,11 @@ class BoundedWindowLintSpec extends AnyFunSuite {
   }
 
   /** `file:line: text` of each non-comment line matching `bad` in every
-    * `src/main` file except `owner`. */
-  private def outside(owner: String)(bad: String => Boolean): Seq[String] = {
+    * file of `tree` (default `src/main`) except `owner`. */
+  private def outside(owner: String, tree: String = "src/main/scala")(
+      bad: String => Boolean): Seq[String] = {
     val found = scala.collection.mutable.ListBuffer.empty[String]
-    scanMain { (p, lines) =>
+    scan(tree) { (p, lines) =>
       if (p.getFileName.toString != owner)
         for (i <- 0 until lines.size()) {
           val l = lines.get(i)
@@ -107,8 +112,11 @@ class BoundedWindowLintSpec extends AnyFunSuite {
   }
 
   test("only core.Sessions builds a session or reads the environment") {
-    val bad = outside("Sessions.scala")(l =>
-      l.contains("sys.env") || l.contains("SparkSession.builder"))
+    def sessionOrEnv(l: String) =
+      l.contains("sys.env") || l.contains("SparkSession.builder")
+    // the tests as well (this file spells the literals it looks for)
+    val bad = outside("Sessions.scala")(sessionOrEnv) ++
+      outside("BoundedWindowLintSpec.scala", "src/test/scala")(sessionOrEnv)
     assert(bad.isEmpty,
       "session builder or env read outside core.Sessions:\n" +
         bad.mkString("\n"))

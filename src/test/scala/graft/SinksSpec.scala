@@ -307,13 +307,17 @@ class SinksSpec extends SparkSpec {
     val dir = Files.createTempDirectory("dimdrop").toString + "/d"
     Sinks.mergeDim(spark, Seq((1L, "x", 1L, "c"))
       .toDF("k", "v", "seq", "op"), "k", "seq", "op", dir)
+    val stored = Sinks.readStore(spark, dir).schema
     Sinks.mergeDim(spark, Seq((1L, "x", 2L, "d"))
       .toDF("k", "v", "seq", "op"), "k", "seq", "op", dir)
     val buckets = new java.io.File(dir).listFiles()
       .filter(_.getName.startsWith("__bucket="))
     assert(buckets.isEmpty, buckets.mkString(","))
-    // a fully-emptied store has no parquet footers left → nothing to read
-    // (schema would come from the catalog in a production deployment)
+    // no parquet footer is left, yet the emptied store reads back as an
+    // empty table with the columns it had before the delete
+    val emptied = Sinks.readStore(spark, dir)
+    assert(emptied.schema === stored)
+    assert(emptied.count() === 0L)
   }
 
   test("K7 dim DDL: create / drop / update") {

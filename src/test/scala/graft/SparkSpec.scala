@@ -4,23 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session keeps
-  * `sbt test` fast).
+  * `sbt test` fast): the engine's own session, `core.Sessions.local` at
+  * four cores, so the suites run under the confs the engine runs under
+  * (graft extensions, generated-code cache size included).
   */
 object TestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // bucketed-table tests write through the catalog — keep the
-      // warehouse out of the working tree (mirrors core.Sessions)
-      .config("spark.sql.warehouse.dir",
-        s"${sys.props("java.io.tmpdir")}/graft_test_warehouse")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Sessions.local("4")
 }
 
 abstract class SparkSpec extends AnyFunSuite {
