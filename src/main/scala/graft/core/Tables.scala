@@ -175,10 +175,12 @@ object Tables {
     */
   def loadStream(spark: SparkSession, dir: String, name: String): DataFrame = {
     // same ns-long vs real-timestamp dual case as load(): probe the actual
-    // file schema, since library-written events copies carry a TIMESTAMP
+    // file schema, since library-written events copies carry a TIMESTAMP;
+    // `read` serves the probe from the session schema cache
     val tsIsLong = name == "events" && {
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      spark.read.parquet(s"$dir/$name.parquet")
+      val path = s"$dir/$name.parquet"
+      read(spark, path, pathStamp(spark, path))
         .schema("ts").dataType == LongType
     }
     if (tsIsLong) {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Skew-mitigation utilities. AQE's skew-join split is the first line of
-  * defense (enabled in the session builders); explicit salting is the
+  * defense (enabled in `core.Sessions.local`); explicit salting is the
   * fallback for the shapes AQE can't fix — e.g. a shuffle join where one
   * hot key dominates a partition, or a groupBy on a power-law key.
   */

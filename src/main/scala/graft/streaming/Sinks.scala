@@ -1,9 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameReader, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 import graft.core.Knobs
 
 /** Sink library — the K1-K7 surface of the reference re-expressed for
@@ -23,7 +23,11 @@ import graft.core.Knobs
   * the write-ahead commit log; the keyed stores (K3-K6, the DWS and DIM
   * layers) are written from foreachBatch and are replay-idempotent — the
   * same batch merged twice leaves the same store — which makes
-  * micro-batch retries exactly-once in effect. Scale: every write is a
+  * micro-batch retries exactly-once in effect. Layout: a keyed store
+  * owns its layout through two markers, `_graft_buckets` (the bucket
+  * count, pinned when the store is created from
+  * `spark.graft.storeBuckets`) and `_graft_schema` (its columns); no call
+  * passes either, and no read infers a schema. Scale: every write is a
   * distributed `DataFrame` write, and each keyed merge runs one bounded
   * driver collect: the batch's distinct (bucket, key) pairs, capped by
   * `spark.graft.keyedSplitMaxKeys`, which give both the touched buckets
@@ -36,100 +40,98 @@ object Sinks {
     * is laid out as `dir/__bucket=N/...`; a micro-batch reads and rewrites
     * ONLY the buckets its keys hash into — O(touched buckets), not
     * O(table), per batch. At 100 TB, size the bucket count so one bucket
-    * is a few GB — set `spark.graft.storeBuckets` once per deployment
-    * (see [[DefaultBuckets]]); the built-in fallback 16 keeps local
-    * tests fast.
+    * is a few GB — set `spark.graft.storeBuckets` once per deployment; a
+    * store reads it once, when it is created, and the built-in fallback
+    * 16 keeps local tests fast.
     */
   private val BucketCol = "__bucket"
 
-  /** Sentinel default for the `buckets` parameters: "use the session
-    * conf". A NEW store created with the default sizes itself from
-    * `spark.graft.storeBuckets` (falling back to 16 — right for local
-    * tests); an EXISTING store always keeps its marker-pinned layout
-    * regardless. This is the 100 TB sizing knob: one conf sets every
-    * ingest tier's store fan-out (size so one bucket is a few GB)
-    * without threading a parameter through every call site. An explicit
-    * `buckets` argument still wins over the conf.
+  /** The store's bucket count, pinned on first write and reused by every
+    * later call, so a conf change only affects stores created after it.
+    * Without the pin, a count differing from the one the store was
+    * written with would hash keys into buckets `readTouched` never looks
+    * at and silently break the latest-per-key invariant with duplicates.
     */
-  val DefaultBuckets: Int = -1
-  // a NEW store reads the conf exactly once (its count is then
-  // marker-pinned), so a mid-stream conf change only affects stores
-  // created after it, never an existing one
-  private def requestedBuckets(spark: SparkSession, buckets: Int): Int =
-    if (buckets > 0) buckets
-    else Knobs.positiveInt(spark, Knobs.StoreBuckets).getOrElse(16)
+  private val BucketsMarker = "_graft_buckets"
 
-  /** The store's bucket count is LAYOUT, not a per-call knob: it is
-    * pinned in a `_graft_buckets` marker on first write and reused on
-    * every later call (parquet readers skip `_`-prefixed files). Without
-    * this, a caller passing a different count than the store was written
-    * with would hash keys into buckets `readTouched` never looks at and
-    * silently break the latest-per-key invariant with duplicates.
-    * The marker is staged then atomically moved, so a crash mid-write
-    * can't leave a half-written count. A store that has bucket
-    * directories but no marker (foreign or pre-marker layout) is
-    * refused loudly rather than guessed at. Single writer per store is
-    * the operating model (one foreachBatch owns a store), as with any
-    * file-based sink.
+  /** The store's columns (bucket column excluded) as a DDL string,
+    * rewritten by every merge before its bucket swap. Every read of the
+    * store takes its columns from here, so no read runs a footer-inference
+    * job, and a K6 merge that deletes every key still leaves a store that
+    * reads back as an empty table with these columns.
     */
-  private def resolveBuckets(dir: String, requested: Int): Int = {
-    val d = new java.io.File(dir)
-    val marker = new java.io.File(d, "_graft_buckets")
-    if (marker.exists()) {
-      val txt = new String(java.nio.file.Files.readAllBytes(marker.toPath),
-        "UTF-8").trim
-      require(txt.nonEmpty && txt.forall(_.isDigit),
-        s"corrupt bucket marker $marker: '$txt'")
-      txt.toInt
-    } else {
-      require(!d.exists() ||
-          d.listFiles() == null ||
-          !d.listFiles().exists(_.getName.startsWith(s"$BucketCol=")),
-        s"store $dir has bucket directories but no _graft_buckets marker; " +
-          "write the marker matching the existing layout before merging")
-      d.mkdirs()
-      writeMarker(d, "_graft_buckets", requested.toString)
-      requested
+  private val SchemaMarker = "_graft_schema"
+
+  /** The layout `dir`'s two markers record: its bucket count and its
+    * columns, each None until first written (parquet readers skip
+    * `_`-prefixed files). A store that has bucket directories but lacks
+    * either marker (foreign or pre-marker layout) is refused loudly
+    * rather than guessed at. Single writer per store is the operating
+    * model (one foreachBatch owns a store), as with any file-based sink.
+    */
+  private def layout(dir: String): (Option[Int], Option[StructType]) = {
+    val bucketed = Option(new java.io.File(dir).list())
+      .exists(_.exists(_.startsWith(s"$BucketCol=")))
+    def read(name: String): Option[String] = {
+      val f = new java.io.File(dir, name)
+      require(f.exists() || !bucketed, s"store $dir has bucket directories " +
+        s"but no $name marker; write the marker matching the existing layout")
+      Option.when(f.exists())(new String(
+        java.nio.file.Files.readAllBytes(f.toPath), "UTF-8").trim)
     }
+    (read(BucketsMarker).map(t => t.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(s"corrupt bucket marker $dir: '$t'"))),
+      read(SchemaMarker).map(StructType.fromDDL))
   }
 
-  /** Write a marker file `d/name`: staged next to it, then atomically
-    * moved over it, so a reader or a crash never sees half a marker.
+  /** The store's bucket count: its marker's, or on a new store the
+    * `spark.graft.storeBuckets` conf (16 when unset), pinned here.
+    */
+  private def resolveBuckets(spark: SparkSession, dir: String): Int =
+    layout(dir)._1.getOrElse {
+      val n = Knobs.positiveInt(spark, Knobs.StoreBuckets).getOrElse(16)
+      writeMarker(new java.io.File(dir), BucketsMarker, n.toString)
+      n
+    }
+
+  /** Write a marker file `d/name` (creating `d`): staged next to it, then
+    * atomically moved over it, so a reader or a crash never sees half a
+    * marker.
     */
   private def writeMarker(d: java.io.File, name: String, text: String): Unit = {
+    d.mkdirs()
     val tmp = java.nio.file.Files.createTempFile(d.toPath, name, ".tmp")
     java.nio.file.Files.write(tmp, text.getBytes("UTF-8"))
     java.nio.file.Files.move(tmp, new java.io.File(d, name).toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** The store's columns (bucket column excluded) as a DDL string,
-    * rewritten by every merge before its bucket swap. A K6 merge that
-    * deletes every key leaves no parquet footer to infer a schema from;
-    * [[readStore]] then takes the columns from this marker.
-    */
-  private val SchemaMarker = "_graft_schema"
-
   /** `df` plus the store's bucket column: `keyCol` hashed into the
     * store's marker-pinned bucket count (created on first use).
     */
   private def withBucket(spark: SparkSession, df: DataFrame, keyCol: String,
-      dir: String, buckets: Int): DataFrame =
-    df.withColumn(BucketCol, pmod(hash(col(keyCol)),
-      lit(resolveBuckets(dir, requestedBuckets(spark, buckets)))))
+      dir: String): DataFrame =
+    df.withColumn(BucketCol,
+      pmod(hash(col(keyCol)), lit(resolveBuckets(spark, dir))))
+
+  /** The one reader of a keyed store's files: the [[SchemaMarker]]'s
+    * columns plus the bucket column, so building the relation only lists
+    * files and runs no Spark job. Every column reads as nullable; a column
+    * that a bucket's older files lack reads as null, and one whose type
+    * changed fails at scan time unless Spark's parquet reader widens it.
+    */
+  private def storeReader(spark: SparkSession, dir: String): DataFrameReader = {
+    val columns = layout(dir)._2.getOrElse(throw new IllegalArgumentException(
+      s"store $dir has no $SchemaMarker marker: no merge has written it"))
+    spark.read.schema(columns.add(BucketCol, IntegerType))
+      .option("basePath", dir)
+  }
 
   /** Read a keyed store back without its internal bucket column. A store
-    * with no bucket left (every key deleted) reads as an empty relation
-    * with the columns its [[SchemaMarker]] names.
+    * with no bucket left (every key deleted) reads as an empty relation.
     */
-  def readStore(spark: SparkSession, dir: String): DataFrame = {
-    val marker = new java.io.File(dir, SchemaMarker)
-    val emptied = marker.exists() &&
-      !new java.io.File(dir).list().exists(_.startsWith(s"$BucketCol="))
-    val reader = if (!emptied) spark.read else spark.read.schema(new String(
-      java.nio.file.Files.readAllBytes(marker.toPath), "UTF-8"))
-    reader.parquet(dir).drop(BucketCol)
-  }
+  def readStore(spark: SparkSession, dir: String): DataFrame =
+    storeReader(spark, dir).parquet(dir).drop(BucketCol)
 
   /** K5: upsert-by-key into a keyed store: merge incoming rows with the
     * existing rows OF THE TOUCHED BUCKETS ONLY, keep the newest version
@@ -138,9 +140,9 @@ object Sinks {
     * makes micro-batch retries exactly-once in effect.
     */
   def upsert(spark: SparkSession, incoming: DataFrame, keyCol: String,
-      seqCol: String, dir: String, buckets: Int = DefaultBuckets): Unit = {
+      seqCol: String, dir: String): Unit = {
     val w = Window.partitionBy(col(keyCol)).orderBy(col(seqCol).desc)
-    mergeTouchedKeyed(spark, incoming, keyCol, dir, buckets)(changed =>
+    mergeTouchedKeyed(spark, incoming, keyCol, dir)(changed =>
       changed.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn"))
   }
@@ -269,13 +271,21 @@ object Sinks {
     * discovery on sits inside the try, so the persisted blocks are
     * released on every failure path too (a leak here accumulates across
     * a long-running streaming driver's batches).
+    *
+    * The stored rows are read with the [[SchemaMarker]]'s columns, never
+    * inferred, and `combine` meets them with the batch's: where the
+    * incoming columns differ from the stored ones, `unionByName` fails
+    * (`upsert`, `mergeTouchedKeyed`), `scd2Upsert` keeps the batch's
+    * columns and fails on one the store lacks, and `mergeDim` fills the
+    * missing side with nulls (`allowMissingColumns`). The merged columns
+    * become the new marker.
     */
   private def mergeKeyed(site: String, spark: SparkSession,
-      incoming: DataFrame, keyCol: String, dir: String, buckets: Int,
+      incoming: DataFrame, keyCol: String, dir: String,
       combine: (DataFrame, DataFrame) => DataFrame)(
       merge: DataFrame => DataFrame): Unit = {
     val (src, guardAcc) = guarded(spark, incoming)
-    val inc = withBucket(spark, src, keyCol, dir, buckets).persist()
+    val inc = withBucket(spark, src, keyCol, dir).persist()
     var release: () => Unit = () => ()
     try {
       val maxKeys = keyedSplitMaxKeys(spark)
@@ -320,9 +330,9 @@ object Sinks {
     * executes exactly once (LineageExecGuard covers this path).
     */
   def mergeTouchedKeyed(spark: SparkSession, incoming: DataFrame,
-      keyCol: String, dir: String, buckets: Int = DefaultBuckets)(
+      keyCol: String, dir: String)(
       merge: DataFrame => DataFrame): Unit =
-    mergeKeyed("mergeTouchedKeyed", spark, incoming, keyCol, dir, buckets,
+    mergeKeyed("mergeTouchedKeyed", spark, incoming, keyCol, dir,
       (stored, inc) => stored.unionByName(inc))(merge)
 
   /** Probe-read a keyed store at O(touched buckets) IO: read back ONLY
@@ -333,9 +343,9 @@ object Sinks {
     * whole. None when none of the touched buckets exist yet.
     */
   def readTouchedFor(spark: SparkSession, keys: DataFrame, keyCol: String,
-      dir: String, buckets: Int = DefaultBuckets): Option[DataFrame] =
+      dir: String): Option[DataFrame] =
     readTouched(spark,
-      touchedBuckets(withBucket(spark, keys, keyCol, dir, buckets)), dir)
+      touchedBuckets(withBucket(spark, keys, keyCol, dir)), dir)
       .map(_.drop(BucketCol))
 
   /** K8 streaming tier: SCD Type-2 history maintenance — the VERSIONED
@@ -362,10 +372,10 @@ object Sinks {
     * (globally unique per key); `tsCol` supplies the interval bounds.
     */
   def scd2Upsert(spark: SparkSession, incoming: DataFrame, keyCol: String,
-      seqCol: String, tsCol: String, dir: String, buckets: Int = DefaultBuckets): Unit = {
+      seqCol: String, tsCol: String, dir: String): Unit = {
     val srcCols = (incoming.columns.toSeq :+ BucketCol).map(col)
     val w = Window.partitionBy(col(keyCol)).orderBy(col(seqCol).asc)
-    mergeKeyed("scd2Upsert", spark, incoming, keyCol, dir, buckets,
+    mergeKeyed("scd2Upsert", spark, incoming, keyCol, dir,
       (stored, inc) => stored.select(srcCols: _*).unionByName(inc))(
       _.dropDuplicates(keyCol, seqCol)
         .withColumn("version", row_number().over(w).cast("long"))
@@ -388,9 +398,9 @@ object Sinks {
     * read or rewritten.
     */
   def mergeDim(spark: SparkSession, changes: DataFrame, keyCol: String,
-      seqCol: String, opCol: String, dir: String, buckets: Int = DefaultBuckets): Unit = {
+      seqCol: String, opCol: String, dir: String): Unit = {
     val w = Window.partitionBy(col(keyCol)).orderBy(col(seqCol).desc)
-    mergeKeyed("mergeDim", spark, changes, keyCol, dir, buckets,
+    mergeKeyed("mergeDim", spark, changes, keyCol, dir,
       (stored, inc) => stored.withColumn(opCol, lit("r"))
         .unionByName(inc, allowMissingColumns = true))(
       _.withColumn("__rn", row_number().over(w))
@@ -406,21 +416,22 @@ object Sinks {
     inc.select(BucketCol).distinct().collect().map(_.getInt(0)).toSeq.sorted
 
   /** Read only the touched buckets' directories (partition pruning by
-    * construction). Existence check, NOT try/catch: a transient read
-    * error on a real table must propagate, or the merge would silently
-    * drop existing rows.
+    * construction) through [[storeReader]], so the read runs no
+    * footer-inference job. Existence check, NOT try/catch: a transient
+    * read error on a real table must propagate, or the merge would
+    * silently drop existing rows.
     */
   private def readTouched(spark: SparkSession, touched: Seq[Int],
       dir: String): Option[DataFrame] = {
     val dirs = touched.map(b => new java.io.File(dir, s"$BucketCol=$b"))
       .filter(_.exists()).map(_.getPath)
     if (dirs.isEmpty) None
-    else Some(spark.read.option("basePath", dir).parquet(dirs: _*))
+    else Some(storeReader(spark, dir).parquet(dirs: _*))
   }
 
   /** Name of the staging directory [[overwriteTouched]] writes inside a
     * store. It starts with `_` and holds no `=`, so Spark's file index and
-    * [[resolveBuckets]] both skip it: a leftover from a crash is never
+    * [[layout]] both skip it: a leftover from a crash is never
     * read as store rows.
     */
   private[graft] val StagingDir = "_graft_staging"

@@ -8,6 +8,12 @@ import graft.streaming.Sinks
   */
 class SinksSpec extends SparkSpec {
 
+  /** Runs `body` with every store it creates laid out in ONE bucket. */
+  private def oneBucket(body: => Unit): Unit = {
+    spark.conf.set("spark.graft.storeBuckets", "1")
+    try body finally spark.conf.unset("spark.graft.storeBuckets")
+  }
+
   test("K5 upsert keeps the newest version per key and is idempotent") {
     import spark.implicits._
     val dir = Files.createTempDirectory("upsert").toString + "/t"
@@ -24,21 +30,6 @@ class SinksSpec extends SparkSpec {
     val out = Sinks.readStore(spark, dir).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out === Map(1L -> "a2", 2L -> "b", 3L -> "c"))
-  }
-
-  test("K5 bucket count is pinned by the store, not the caller") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("buckpin").toString + "/t"
-    Sinks.upsert(spark, Seq((1L, "a", 1L)).toDF("k", "v", "seq"),
-      "k", "seq", dir, buckets = 16)
-    // a later caller passing a different count must keep hashing into the
-    // 16-bucket layout — otherwise the old row is never merged and the
-    // store ends up with two versions of key 1
-    Sinks.upsert(spark, Seq((1L, "a2", 2L)).toDF("k", "v", "seq"),
-      "k", "seq", dir, buckets = 32)
-    val out = Sinks.readStore(spark, dir).collect()
-      .map(r => r.getLong(0) -> r.getString(1))
-    assert(out.toSeq === Seq(1L -> "a2"), s"latest-per-key broken: ${out.toList}")
   }
 
   test("K5 default bucket count comes from spark.graft.storeBuckets for " +
@@ -112,43 +103,41 @@ class SinksSpec extends SparkSpec {
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val root = Files.createTempDirectory("keysplit").toString
-    // ONE bucket forces every key into the touched bucket — the split,
-    // not bucket pruning, is what must protect the unchanged keys
-    // upsert: update key 1 only; 2 and 3 keep their stored state
-    Sinks.upsert(spark, Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L))
-      .toDF("k", "v", "seq"), "k", "seq", s"$root/t", buckets = 1)
-    Sinks.upsert(spark, Seq((1L, "a2", 2L)).toDF("k", "v", "seq"),
-      "k", "seq", s"$root/t", buckets = 1)
-    assert(Sinks.readStore(spark, s"$root/t").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap ===
-      Map(1L -> "a2", 2L -> "b", 3L -> "c"))
-    // scd2: extend key 1's history; key 2's history rows — presentation
-    // columns included — must come back BYTE-IDENTICAL from passthrough
-    def ts(n: Int) = java.sql.Timestamp.valueOf(f"2024-01-0$n%d 00:00:00")
-    Sinks.scd2Upsert(spark,
-      Seq((1L, 1L, ts(1), "x"), (1L, 2L, ts(2), "y"), (2L, 1L, ts(1), "z"))
-        .toDF("k", "seq", "ts", "v"), "k", "seq", "ts", s"$root/h",
-      buckets = 1)
-    val key2Before = Sinks.readStore(spark, s"$root/h")
-      .filter(col("k") === 2L).collect().map(_.toString).toSet
-    Sinks.scd2Upsert(spark, Seq((1L, 3L, ts(3), "w"))
-      .toDF("k", "seq", "ts", "v"), "k", "seq", "ts", s"$root/h",
-      buckets = 1)
-    val after = Sinks.readStore(spark, s"$root/h")
-    assert(after.filter(col("k") === 2L).collect().map(_.toString).toSet
-      === key2Before, "unchanged key's history must pass through as stored")
-    assert(after.filter(col("k") === 1L).count() === 3L &&
-      after.filter(col("k") === 1L && col("is_current")).collect()
-        .map(_.getAs[Long]("version")).toSeq === Seq(3L))
-    // mergeDim: delete key 1 only; key 2 survives from passthrough
-    Sinks.mergeDim(spark, Seq((1L, "x", 1L, "c"), (2L, "y", 1L, "c"))
-      .toDF("k", "v", "seq", "op"), "k", "seq", "op", s"$root/d",
-      buckets = 1)
-    Sinks.mergeDim(spark, Seq((1L, "x", 2L, "d"))
-      .toDF("k", "v", "seq", "op"), "k", "seq", "op", s"$root/d",
-      buckets = 1)
-    assert(Sinks.readStore(spark, s"$root/d").collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap === Map(2L -> "y"))
+    oneBucket {
+      // ONE bucket forces every key into the touched bucket — the split,
+      // not bucket pruning, is what must protect the unchanged keys
+      // upsert: update key 1 only; 2 and 3 keep their stored state
+      Sinks.upsert(spark, Seq((1L, "a", 1L), (2L, "b", 1L), (3L, "c", 1L))
+        .toDF("k", "v", "seq"), "k", "seq", s"$root/t")
+      Sinks.upsert(spark, Seq((1L, "a2", 2L)).toDF("k", "v", "seq"),
+        "k", "seq", s"$root/t")
+      assert(Sinks.readStore(spark, s"$root/t").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap ===
+        Map(1L -> "a2", 2L -> "b", 3L -> "c"))
+      // scd2: extend key 1's history; key 2's history rows — presentation
+      // columns included — must come back BYTE-IDENTICAL from passthrough
+      def ts(n: Int) = java.sql.Timestamp.valueOf(f"2024-01-0$n%d 00:00:00")
+      Sinks.scd2Upsert(spark,
+        Seq((1L, 1L, ts(1), "x"), (1L, 2L, ts(2), "y"), (2L, 1L, ts(1), "z"))
+          .toDF("k", "seq", "ts", "v"), "k", "seq", "ts", s"$root/h")
+      val key2Before = Sinks.readStore(spark, s"$root/h")
+        .filter(col("k") === 2L).collect().map(_.toString).toSet
+      Sinks.scd2Upsert(spark, Seq((1L, 3L, ts(3), "w"))
+        .toDF("k", "seq", "ts", "v"), "k", "seq", "ts", s"$root/h")
+      val after = Sinks.readStore(spark, s"$root/h")
+      assert(after.filter(col("k") === 2L).collect().map(_.toString).toSet
+        === key2Before, "unchanged key's history must pass through as stored")
+      assert(after.filter(col("k") === 1L).count() === 3L &&
+        after.filter(col("k") === 1L && col("is_current")).collect()
+          .map(_.getAs[Long]("version")).toSeq === Seq(3L))
+      // mergeDim: delete key 1 only; key 2 survives from passthrough
+      Sinks.mergeDim(spark, Seq((1L, "x", 1L, "c"), (2L, "y", 1L, "c"))
+        .toDF("k", "v", "seq", "op"), "k", "seq", "op", s"$root/d")
+      Sinks.mergeDim(spark, Seq((1L, "x", 2L, "d"))
+        .toDF("k", "v", "seq", "op"), "k", "seq", "op", s"$root/d")
+      assert(Sinks.readStore(spark, s"$root/d").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap === Map(2L -> "y"))
+    }
   }
 
   test("r17 bulk-backfill gate: a batch past spark.graft.keyedSplitMaxKeys " +
@@ -160,24 +149,20 @@ class SinksSpec extends SparkSpec {
     // the default cap, `bulk` with the cap forced below the second
     // batch's key count — the gate must route through the unsplit merge
     // (bounded driver collect) and the stores must not differ in any row
-    def drive(suffix: String): Unit = {
+    def drive(suffix: String): Unit = oneBucket {
       Sinks.upsert(spark, (1L to 6L).map(k => (k, s"v$k", 1L))
-        .toDF("k", "v", "seq"), "k", "seq", s"$root/t$suffix", buckets = 1)
+        .toDF("k", "v", "seq"), "k", "seq", s"$root/t$suffix")
       Sinks.upsert(spark, (1L to 4L).map(k => (k, s"w$k", 2L))
-        .toDF("k", "v", "seq"), "k", "seq", s"$root/t$suffix", buckets = 1)
+        .toDF("k", "v", "seq"), "k", "seq", s"$root/t$suffix")
       Sinks.scd2Upsert(spark, (1L to 6L).map(k => (k, 1L, ts(1), s"v$k"))
-        .toDF("k", "seq", "ts", "v"), "k", "seq", "ts", s"$root/h$suffix",
-        buckets = 1)
+        .toDF("k", "seq", "ts", "v"), "k", "seq", "ts", s"$root/h$suffix")
       Sinks.scd2Upsert(spark, (1L to 4L).map(k => (k, 2L, ts(2), s"w$k"))
-        .toDF("k", "seq", "ts", "v"), "k", "seq", "ts", s"$root/h$suffix",
-        buckets = 1)
+        .toDF("k", "seq", "ts", "v"), "k", "seq", "ts", s"$root/h$suffix")
       Sinks.mergeDim(spark, (1L to 6L).map(k => (k, s"v$k", 1L, "c"))
-        .toDF("k", "v", "seq", "op"), "k", "seq", "op", s"$root/d$suffix",
-        buckets = 1)
+        .toDF("k", "v", "seq", "op"), "k", "seq", "op", s"$root/d$suffix")
       Sinks.mergeDim(spark,
         ((1L to 3L).map(k => (k, s"w$k", 2L, "u")) :+ ((4L, "x", 2L, "d")))
-          .toDF("k", "v", "seq", "op"), "k", "seq", "op", s"$root/d$suffix",
-        buckets = 1)
+          .toDF("k", "v", "seq", "op"), "k", "seq", "op", s"$root/d$suffix")
     }
     drive("split")
     val before = Sinks.keyedSplitFallbacks.get()
@@ -200,7 +185,7 @@ class SinksSpec extends SparkSpec {
     try {
       val e = intercept[RuntimeException] {
         Sinks.upsert(spark, Seq((1L, "a", 3L)).toDF("k", "v", "seq"),
-          "k", "seq", s"$root/tsplit", buckets = 1)
+          "k", "seq", s"$root/tsplit")
       }
       assert(e.getMessage.contains("keyedSplitMaxKeys"), e.getMessage)
     } finally spark.conf.unset("spark.graft.keyedSplitMaxKeys")
@@ -318,6 +303,87 @@ class SinksSpec extends SparkSpec {
     val emptied = Sinks.readStore(spark, dir)
     assert(emptied.schema === stored)
     assert(emptied.count() === 0L)
+  }
+
+  test("K5/K6 merges and readStore take a store's columns from its " +
+      "marker: no parquet footer-inference job") {
+    import org.apache.spark.sql.functions._
+    val root = Files.createTempDirectory("noinfer").toString
+    def batch(seq: Long) = spark.range(64)
+      .select(col("id").as("k"), concat(lit("v"), col("id")).as("v"),
+        lit(seq).as("seq"))
+    def withTs(b: org.apache.spark.sql.DataFrame) = b.withColumn("ts",
+      timestamp_seconds(lit(1700000000L) + col("seq") * 1000L + col("k")))
+    def mergeAll(seq: Long, op: String): Unit = {
+      Sinks.upsert(spark, batch(seq), "k", "seq", s"$root/t")
+      Sinks.scd2Upsert(spark, withTs(batch(seq)), "k", "seq", "ts",
+        s"$root/h")
+      Sinks.mergeDim(spark, batch(seq).withColumn("op", lit(op)),
+        "k", "seq", "op", s"$root/d")
+      Sinks.mergeTouchedKeyed(spark, batch(seq), "k", s"$root/m")(
+        _.dropDuplicates("k", "seq"))
+    }
+    mergeAll(1L, "c") // fresh stores: nothing to read yet
+    // every job's stage call sites; the schema-inference job of a parquet
+    // read is named after the read's call site ("parquet at Sinks.scala")
+    // and runs at analysis time, outside any SQL execution — the staged
+    // writes carry the same call site but run inside one
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val sql = Option(j.properties)
+          .exists(_.getProperty("spark.sql.execution.id") != null)
+        jobs.add(j.stageInfos.map(_.name).mkString("|") +
+          (if (sql) "" else " (no SQL execution)"))
+        ()
+      }
+    }
+    def settle(): Seq[String] = {
+      var last = -1
+      while (last != jobs.size) { last = jobs.size; Thread.sleep(300) }
+      import scala.jdk.CollectionConverters._
+      val got = jobs.asScala.toSeq
+      jobs.clear()
+      got
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      mergeAll(2L, "d") // existing stores; mergeDim deletes every key
+      val inferred = settle().filter(j =>
+        j.contains("parquet at Sinks.scala") &&
+          j.endsWith("(no SQL execution)"))
+      assert(inferred.isEmpty,
+        s"existing-store merges inferred a schema: ${inferred.mkString("; ")}")
+      val store = Sinks.readStore(spark, s"$root/t")
+      val readJobs = settle()
+      assert(readJobs.isEmpty,
+        s"building readStore's relation ran jobs: ${readJobs.mkString("; ")}")
+      assert(store.count() === 64L && store.filter(col("seq") =!= 2L).isEmpty)
+      assert(Sinks.readStore(spark, s"$root/d").count() === 0L)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("K5/K6 a store missing a layout marker is refused on merge and " +
+      "on read, naming the marker") {
+    import spark.implicits._
+    val root = Files.createTempDirectory("markers").toString
+    Seq("_graft_buckets", "_graft_schema").foreach { marker =>
+      val dir = s"$root/$marker/t"
+      Sinks.upsert(spark, Seq((1L, "a", 1L)).toDF("k", "v", "seq"),
+        "k", "seq", dir)
+      // the store keeps its __bucket= directories but loses one marker
+      assert(new java.io.File(dir, marker).delete(), s"no $marker written")
+      val merge = intercept[IllegalArgumentException] {
+        Sinks.upsert(spark, Seq((1L, "a2", 2L)).toDF("k", "v", "seq"),
+          "k", "seq", dir)
+      }
+      assert(merge.getMessage.contains(marker), merge.getMessage)
+      val read = intercept[IllegalArgumentException] {
+        Sinks.readStore(spark, dir)
+      }
+      assert(read.getMessage.contains(marker), read.getMessage)
+    }
   }
 
   test("K7 dim DDL: create / drop / update") {
