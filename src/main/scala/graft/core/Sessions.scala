@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 
 /** The one session builder of the engine and its CLI mains: UTC (oracle
   * parity), AQE (runtime re-plan + skew split), shuffle partitions = the
-  * core count, graft extensions registered, and a generated-code cache
-  * sized to the engine's working set ([[CodegenCacheEntries]]). The core
+  * core count, graft extensions registered, parquet NANOS timestamps read
+  * as longs (see `Tables.load`), and a generated-code cache sized to the
+  * engine's working set ([[CodegenCacheEntries]]). The core
   * count is the only environment setting (`SPARK_GRAFT_CPUS`, else every
   * available core); every other setting is a Spark conf, and a `spark.*`
   * JVM system property that this builder does not set reaches the
@@ -58,6 +59,9 @@ object Sessions {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries",
         CodegenCacheEntries.toString)
+      // parquet TIMESTAMP(NANOS) columns read as longs, which
+      // `Tables.load`/`loadStream` convert (Spark 4 refuses them otherwise)
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // bucketed-table metadata (Tables.writeBucketed) needs a catalog
       // location; keep it out of the working tree in local runs (a real
       // deployment points this at its warehouse)

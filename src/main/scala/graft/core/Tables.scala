@@ -86,20 +86,21 @@ object Tables {
   /** Batch read of one fixture table. Parquet is self-describing; the scan
     * gets column pruning + predicate pushdown from Catalyst for free.
     *
-    * `events.ts` is parquet TIMESTAMP(NANOS), which Spark 4 refuses to read
-    * natively — read it as a long (legacy conf) and convert. Integer `div`
-    * (not `/`): ns-epoch values exceed 2^53, double division would corrupt
-    * the low bits. The fixture's timestamps are micro-aligned, so the
-    * conversion is lossless.
+    * `events.ts` comes in two flavors. The fixtures store it as parquet
+    * TIMESTAMP(MICROS, isAdjustedToUTC=false), which Spark reads
+    * natively. A TIMESTAMP(NANOS) file, which Spark 4 refuses to read
+    * natively, arrives as a long (`Sessions.local` sets
+    * `spark.sql.legacy.parquet.nanosAsLong`) and is converted here.
+    * Integer `div` (not `/`): ns-epoch values exceed 2^53, double division
+    * would corrupt the low bits; micro-aligned values convert losslessly.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     val path = s"$dir/$name.parquet"
     val stamp = pathStamp(spark, path)
     if (name == "events") {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val r = read(spark, path, stamp)
-      // ns-fixture: ts arrives as a nanos long (convert); derived copies
-      // written by this library already carry a real timestamp
+      // a NANOS file: ts arrives as a nanos long (convert); the MICROS
+      // fixtures and copies written by this library carry a timestamp
       if (r.schema("ts").dataType == LongType)
         r.withColumn("ts", org.apache.spark.sql.functions.timestamp_micros(
           org.apache.spark.sql.functions.expr("ts div 1000")))
@@ -178,7 +179,6 @@ object Tables {
     // file schema, since library-written events copies carry a TIMESTAMP;
     // `read` serves the probe from the session schema cache
     val tsIsLong = name == "events" && {
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val path = s"$dir/$name.parquet"
       read(spark, path, pathStamp(spark, path))
         .schema("ts").dataType == LongType

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.functions._
 import graft.core.Barrier.BarrierOps
+import graft.functions.Natives
 
 /** Relational core: scans, joins, aggregations over the TPC-H-ish fixtures.
   *
@@ -55,7 +56,6 @@ object Relational extends OpModule {
     // NativeExprSpec) instead of 16 independent md5→hex→substring→isin
     // Column chains per row per side.
     "q_join_size_sketches" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val Seq(ca, cb) = Seq(
         t(s, dir, "orders")
           .select(col("o_orderkey").cast("string").as("k")),
@@ -63,7 +63,7 @@ object Relational extends OpModule {
           .select(col("l_orderkey").cast("string").as("k")))
         .map(graft.core.Barrier(_))
       def sketch(side: org.apache.spark.sql.DataFrame, p: String) =
-        side.select(expr("agms_signs(k)").as("sg"))
+        side.select(Natives.agmsSigns(col("k")).as("sg"))
           .agg(sum(element_at(col("sg"), 1)).as(s"${p}0"),
             (1 until 16).map(j =>
               sum(element_at(col("sg"), j + 1)).as(s"$p$j")): _*)

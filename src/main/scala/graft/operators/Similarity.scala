@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.functions.Vectors
+import graft.functions.{Natives, Vectors}
 import graft.core.Knobs
 import graft.core.Barrier.BarrierOps
 
@@ -120,7 +120,6 @@ object Similarity extends OpModule {
   private val baseQueries: Map[String, Q] = Map(
     "sim_topk_bruteforce" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -128,7 +127,8 @@ object Similarity extends OpModule {
           col("embedding").as("nv"))
         .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
         .select(col("query_id"), col("neighbor_id"),
-          expr("cosine_sim(qv, nv)").as("sim")) // native codegen'd expression
+          // native codegen'd expression
+          Natives.cosineSim(col("qv"), col("nv")).as("sim"))
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("sim").desc, col("neighbor_id").asc)
       scored.withColumn("rank", row_number().over(w))
@@ -144,24 +144,22 @@ object Similarity extends OpModule {
     // scan's codegen stage. The cosine boundary is the same predicate
     // device sim_pairs_threshold already pins under the gate.
     "sim_range_search" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
       emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("nv"))
         .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-        .filter(expr("cosine_sim(qv, nv)") >= 0.3)
+        .filter(Natives.cosineSim(col("qv"), col("nv")) >= 0.3)
         .select(col("query_id"), col("neighbor_id"))
     }),
     "sim_pairs_threshold" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val a = emb.select(col("vec_id").as("vec_a"), col("label").as("lab_a"),
         col("embedding").as("ea"))
       val b = emb.select(col("vec_id").as("vec_b"), col("label").as("lab_b"),
         col("embedding").as("eb"))
       a.join(b, col("lab_a") === col("lab_b") && col("vec_a") < col("vec_b"))
-        .filter(expr("cosine_sim(ea, eb)") >= 0.3)
+        .filter(Natives.cosineSim(col("ea"), col("eb")) >= 0.3)
         .select(col("vec_a"), col("vec_b"))
     }),
     // embedding-cosine near-dup as a DEDUP op: keep-first canonicalization
@@ -187,7 +185,6 @@ object Similarity extends OpModule {
     // signature aggregate's shuffle size. Width tracks log₂N (lshBits),
     // so bucket occupancy — and the verify join — stays flat at scale.
     "dedup_embedding_lsh" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val sigs = Vectors.lshSignaturesAgg(emb, "vec_id", "embedding",
         lshBits(s, emb), 4)
@@ -209,7 +206,7 @@ object Similarity extends OpModule {
       // function of the pair). Measured 31s -> materially less at 16x.
       val pairs = a.join(b,
           col("sig_a") === col("sig_b") && col("vec_a") < col("vec_b"))
-        .filter(expr("cosine_sim(ea, eb)") >= 0.3)
+        .filter(Natives.cosineSim(col("ea"), col("eb")) >= 0.3)
         .select(col("vec_a"), col("vec_b")).distinct()
       val dropped = pairs.select(col("vec_b").as("vec_id")).distinct()
       emb.select(col("vec_id"), col("label"))
@@ -217,7 +214,6 @@ object Similarity extends OpModule {
     }),
     "sim_lsh_ann" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftFunctions.register(s)
       // Multi-table LSH: 4 independent hyperplane tables at the
       // corpus-derived width (lshBits ≈ log₂(N/8)); candidate if ANY
       // table bucket matches (union via explode + distinct). At corpus
@@ -242,7 +238,7 @@ object Similarity extends OpModule {
         // and the distinct then moves (long, long, double) rows only.
         // sim is a pure function of the pair, so distinct keeps one copy.
         .select(col("query_id"), col("neighbor_id"),
-          expr("cosine_sim(qv, nv)").as("sim"))
+          Natives.cosineSim(col("qv"), col("nv")).as("sim"))
         .distinct()
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("sim").desc, col("neighbor_id").asc)
@@ -324,7 +320,6 @@ object Similarity extends OpModule {
     // all four walks (the recall_vs_beam device).
     "sim_graph_layered_recall" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -334,7 +329,7 @@ object Similarity extends OpModule {
           .as("nv"))
         .join(broadcast(q), col("query_id") =!= col("v"))
         .select(col("query_id"), col("v"),
-          expr("cosine_sim(qv, nv)").as("s"))
+          Natives.cosineSim(col("qv"), col("nv")).as("s"))
         .withColumn("rk", row_number().over(wq)).filter(col("rk") <= 10)
         .select(col("query_id"), col("v").as("neighbor_id"))
         .barrier() // one truth pass joined by every walk's rows
@@ -362,7 +357,6 @@ object Similarity extends OpModule {
     // graph build; per beam the walk adds constant-size rounds.
     "sim_graph_recall_vs_beam" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("qv"))
@@ -372,7 +366,7 @@ object Similarity extends OpModule {
           .as("nv"))
         .join(broadcast(q), col("query_id") =!= col("v"))
         .select(col("query_id"), col("v"),
-          expr("cosine_sim(qv, nv)").as("s"))
+          Natives.cosineSim(col("qv"), col("nv")).as("s"))
         .withColumn("rk", row_number().over(wq)).filter(col("rk") <= 10)
         .select(col("query_id"), col("v").as("neighbor_id"))
         .barrier() // one truth pass joined by every beam row
@@ -660,7 +654,6 @@ object Similarity extends OpModule {
     // recall harness.
     "sim_matryoshka_recall" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       def topkAt(d: Int): org.apache.spark.sql.DataFrame = {
         val e = emb.select(col("vec_id"),
@@ -671,7 +664,7 @@ object Similarity extends OpModule {
             col("embedding").as("nv"))
           .join(broadcast(q), col("query_id") =!= col("neighbor_id"))
           .select(col("query_id"), col("neighbor_id"),
-            expr("cosine_sim(qv, nv)").as("sim"))
+            Natives.cosineSim(col("qv"), col("nv")).as("sim"))
         val w = Window.partitionBy(col("query_id"))
           .orderBy(col("sim").desc, col("neighbor_id").asc)
         scored.withColumn("rank", row_number().over(w))
@@ -860,7 +853,6 @@ object Similarity extends OpModule {
   private[graft] def knnCandidatesOf(s: org.apache.spark.sql.SparkSession,
       emb: org.apache.spark.sql.DataFrame,
       bits: Int): org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val sigs = Vectors.lshSignaturesAgg(emb, "vec_id", "embedding",
       bits, 4)
     val nPart = s.conf.get("spark.sql.shuffle.partitions").toInt
@@ -876,7 +868,7 @@ object Similarity extends OpModule {
     a.join(b,
         col("sig_a") === col("sig_b") && col("vec_a") =!= col("vec_b"))
       .select(col("vec_a").as("vec_id"), col("vec_b").as("neighbor_id"),
-        expr("cosine_sim(ea, eb)").as("sim"))
+        Natives.cosineSim(col("ea"), col("eb")).as("sim"))
       .distinct()
   }
 
@@ -889,7 +881,6 @@ object Similarity extends OpModule {
     */
   private def beamSearch(s: org.apache.spark.sql.SparkSession,
       dir: String, width: Int): org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     beamSearchOver(t(s, dir, "embeddings"),
       knnGraph(s, dir).filter(col("sim") >= 0.3), width)
   }
@@ -926,7 +917,7 @@ object Similarity extends OpModule {
         "v")
       .join(broadcast(queries), "query_id")
       .select(col("query_id"), col("v"),
-        expr("cosine_sim(qv, nv)").as("s"))
+        Natives.cosineSim(col("qv"), col("nv")).as("s"))
 
   /** The greedy beam loop shared by the flat walk, the layered walk's
     * base layer, and its upper layer: `rounds` barriered rounds of
@@ -1017,7 +1008,6 @@ object Similarity extends OpModule {
   private[graft] def layeredLadder(s: org.apache.spark.sql.SparkSession,
       dir: String): LayeredLadder = {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftFunctions.register(s)
     val emb = t(s, dir, "embeddings")
     val baseBits = lshBits(s, emb)
     // minSim: the base layer keeps the flat walk's 0.3 edge pruning; the
@@ -1115,8 +1105,10 @@ object Similarity extends OpModule {
     * argmax cosine with cent_id ASC tie-break, identical to
     * row_number(csim DESC, cid ASC) = 1. Shared by ivf and ivfsq.
     */
-  private[graft] val simsExpr = "transform(cents, c -> struct(" +
-    "cosine_sim(embedding, c.cv) AS csim, -c.cid AS negid, c.cid AS cid))"
+  private[graft] def sims: org.apache.spark.sql.Column =
+    transform(col("cents"), c => struct(
+      Natives.cosineSim(col("embedding"), c("cv")).as("csim"),
+      (-c("cid")).as("negid"), c("cid").as("cid")))
 
   /** The nProbe probe set for the query vectors (vec_id < 8) of a
     * relation already joined to the 1-row broadcast `cents` array —
@@ -1126,13 +1118,11 @@ object Similarity extends OpModule {
       nProbe: Int, qCount: Int = 8): org.apache.spark.sql.DataFrame =
     withC.filter(col("vec_id") < qCount)
       .select(col("vec_id").as("query_id"), col("embedding").as("qv"),
-        explode(expr(
-          s"transform(slice(reverse(array_sort($simsExpr)), 1, $nProbe)," +
-            " p -> p.cid)")).as("probe"))
+        explode(transform(slice(reverse(array_sort(sims)), 1, nProbe),
+          p => p("cid"))).as("probe"))
 
   private[graft] def ivf(s: org.apache.spark.sql.SparkSession, dir: String,
       cCentroids: Int, nProbe: Int, qCount: Int = 8) = {
-    graft.plans.GraftFunctions.register(s)
     val emb = t(s, dir, "embeddings")
     val centArr = emb.filter(col("vec_id") < cCentroids)
       .agg(collect_list(struct(col("vec_id").cast("int").as("cid"),
@@ -1140,7 +1130,7 @@ object Similarity extends OpModule {
     val withC = emb.join(broadcast(centArr), lit(true))
     val assigned = withC
       .select(col("vec_id"), col("embedding"),
-        expr(s"array_max($simsExpr).cid").as("cluster"))
+        array_max(sims)("cid").as("cluster"))
     (assigned, probesOf(withC, nProbe, qCount))
   }
 
@@ -1220,7 +1210,7 @@ object Similarity extends OpModule {
       .join(broadcast(probes), col("cluster") === col("probe") &&
         col("query_id") =!= col("neighbor_id"))
       .select(col("query_id"), col("neighbor_id"),
-        expr("cosine_sim(qv, nv)").as("sim"))
+        Natives.cosineSim(col("qv"), col("nv")).as("sim"))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     cand.withColumn("rank", row_number().over(w))
@@ -1239,7 +1229,7 @@ object Similarity extends OpModule {
       .agg(collect_list(struct(col("cid"), col("cv"))).as("cents"))
     emb.join(broadcast(centArr), lit(true))
       .select(col("vec_id"), col("embedding"),
-        expr(s"array_max($simsExpr).cid").as("cluster"))
+        array_max(sims)("cid").as("cluster"))
   }
 
   /** Coarse-cluster count for the semantic-dedup blocking — the published
@@ -1311,7 +1301,7 @@ object Similarity extends OpModule {
       col("embedding").as("eb"))
     val dropped = a.join(b, Seq("cluster"))
       .filter(col("vec_a") < col("vec_b") &&
-        expr("cosine_sim(ea, eb)") >= 0.3)
+        Natives.cosineSim(col("ea"), col("eb")) >= 0.3)
       .select(col("vec_b").as("vec_id")).distinct()
     m.select(col("vec_id"), col("cluster").cast("long").as("cluster"))
       .join(dropped, Seq("vec_id"), "left_anti")
@@ -1348,7 +1338,6 @@ object Similarity extends OpModule {
   private[graft] def kmeansTrain(s: org.apache.spark.sql.SparkSession,
       dir: String, cCentroids: Int, iters: Int)
       : org.apache.spark.sql.DataFrame = {
-    graft.plans.GraftFunctions.register(s)
     val emb = t(s, dir, "embeddings")
     var cents = emb.filter(col("vec_id") < cCentroids)
       .select(col("vec_id").cast("int").as("cid"), col("embedding").as("cv"))
@@ -1374,14 +1363,13 @@ object Similarity extends OpModule {
     * in DedupSimilaritySpec. */
   private[graft] def ivfTrained(s: org.apache.spark.sql.SparkSession,
       dir: String, cCentroids: Int, nProbe: Int, iters: Int) = {
-    graft.plans.GraftFunctions.register(s)
     val emb = t(s, dir, "embeddings")
     val centArr = kmeansTrain(s, dir, cCentroids, iters)
       .agg(collect_list(struct(col("cid"), col("cv"))).as("cents"))
     val withC = emb.join(broadcast(centArr), lit(true))
     val assigned = withC
       .select(col("vec_id"), col("embedding"),
-        expr(s"array_max($simsExpr).cid").as("cluster"))
+        array_max(sims)("cid").as("cluster"))
     (assigned, probesOf(withC, nProbe))
   }
 
@@ -1421,13 +1409,12 @@ object Similarity extends OpModule {
     // already proven by the assignment oracles.
     "sim_centroid_outliers" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val centArr = emb.filter(col("vec_id") < 16)
         .agg(collect_list(struct(col("vec_id").cast("int").as("cid"),
           col("embedding").as("cv"))).as("cents"))
       val thin = emb.join(broadcast(centArr), lit(true))
-        .select(col("vec_id"), expr(s"array_max($simsExpr)").as("b"))
+        .select(col("vec_id"), array_max(sims).as("b"))
         .select(col("vec_id"), col("b.cid").as("cluster"),
           col("b.csim").as("csim"))
       val w = Window.partitionBy(col("cluster"))
@@ -1454,14 +1441,13 @@ object Similarity extends OpModule {
     // the report is C rows. Everything after round(·1e6) is exact
     // integers, so the oracle pins the full train→assign→report chain.
     "sim_kmeans_quality" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val cents = kmeansTrain(s, dir, 16, 2)
         .barrier() // assignment + both sides of the separation matrix
       val centArr = cents
         .agg(collect_list(struct(col("cid"), col("cv"))).as("cents"))
       val thin = t(s, dir, "embeddings")
         .join(broadcast(centArr), lit(true))
-        .select(expr(s"array_max($simsExpr)").as("b"))
+        .select(array_max(sims).as("b"))
         .select(col("b.cid").cast("long").as("cluster"),
           expr("CAST(round(b.csim * 1000000D) AS BIGINT)").as("cm"))
       val coh = thin.groupBy(col("cluster"))
@@ -1471,8 +1457,8 @@ object Similarity extends OpModule {
       val b = cents.select(col("cid").as("ocid"), col("cv").as("cb"))
       val sep = a.join(broadcast(b), col("acid") =!= col("ocid"))
         .select(col("acid"), col("ocid"),
-          expr("CAST(round(cosine_sim(ca, cb) * 1000000D) AS BIGINT)")
-            .as("sm"))
+          round(Natives.cosineSim(col("ca"), col("cb")) * 1000000d)
+            .cast("bigint").as("sm"))
         .groupBy(col("acid"))
         .agg(max(struct(col("sm"), (-col("ocid")).as("negid"),
           col("ocid"))).as("m"))
@@ -1508,7 +1494,6 @@ object Similarity extends OpModule {
     // same bit-stable cosine/argmin devices every ANN oracle pins;
     // emitted values are micro-rounded integers.
     "sample_kcenter_diverse" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       var st = emb.select(col("vec_id"), col("embedding"),
         lit(-2.0d).as("sim")).barrier()
@@ -1527,8 +1512,8 @@ object Similarity extends OpModule {
             .select(col("cv"))
           st = st.join(broadcast(cEmb), lit(true))
             .select(col("vec_id"), col("embedding"),
-              greatest(col("sim"), expr("cosine_sim(embedding, cv)"))
-                .as("sim"))
+              greatest(col("sim"),
+                Natives.cosineSim(col("embedding"), col("cv"))).as("sim"))
             .barrier()
         }
       }
@@ -1599,7 +1584,7 @@ object Similarity extends OpModule {
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     cand.join(ne, "neighbor_id").join(broadcast(qe), "query_id")
       .select(col("query_id"), col("neighbor_id"),
-        expr("cosine_sim(qv, nv)").as("sim"))
+        Natives.cosineSim(col("qv"), col("nv")).as("sim"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= K)
       .select(col("query_id"), col("neighbor_id"),
@@ -1653,7 +1638,6 @@ object Similarity extends OpModule {
   /** The barriered int8-code relation every PQ path starts from. */
   private def pqWithCodes(s: org.apache.spark.sql.SparkSession,
       dir: String) = {
-    graft.plans.GraftFunctions.register(s)
     val emb = t(s, dir, "embeddings")
     emb.join(broadcast(sqScale(emb)), lit(true))
       .select(col("vec_id"), expr(codesExpr).as("codes"))
@@ -1768,7 +1752,6 @@ object Similarity extends OpModule {
     // FAISS IndexBinaryFlat) for a 100 TB first-cut filter.
     "sim_hamming_ann" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       // word count derives from the data (one limit-1 probe), so any
       // embedding width packs fully — a fixed 2-word layout would
@@ -1846,7 +1829,6 @@ object Similarity extends OpModule {
           col("dim").cast("long").as("dim"), col("code"))),
     "sim_sq_ann" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val withCodes = emb.join(broadcast(sqScale(emb)), lit(true))
         .select(col("vec_id"), expr(codesExpr).as("codes"))
@@ -1880,7 +1862,6 @@ object Similarity extends OpModule {
     // 1-row broadcasts (centroids, scale), no extra scan, no join.
     "sim_ivfsq_ann" -> ((s, dir) => {
       import org.apache.spark.sql.expressions.Window
-      graft.plans.GraftFunctions.register(s)
       val emb = t(s, dir, "embeddings")
       val (assigned, probes) = ivf(s, dir, ivfC(s), 4)
       val aug = assigned.join(broadcast(sqScale(emb)), lit(true))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.functions._
-import graft.functions.Text
+import graft.functions.{Natives, Text}
 import graft.core.Knobs
 import graft.core.Barrier.BarrierOps
 
@@ -137,9 +137,8 @@ object TextAnalysis extends OpModule {
       // struct is aliased once and field-expanded in a second projection;
       // CollapseProject keeps the non-cheap multi-referenced struct alias
       // as its own project, so the walk runs once per row.
-      graft.plans.GraftFunctions.register(s) // no-op under the extensions conf
       t(s, dir, "documents")
-        .select(col("doc_id"), expr("text_stats(text)").as("st"))
+        .select(col("doc_id"), Natives.textStats(col("text")).as("st"))
         .select(col("doc_id"), col("st.char_len"), col("st.ws_tokens"),
           col("st.bpe_tokens"), col("st.stopword_ratio"),
           col("st.punct_ratio"))
@@ -529,11 +528,10 @@ object TextAnalysis extends OpModule {
     // rows. At 100 TB this is the difference between three index scans
     // of depth p and a full-table sort.
     "q_topk_ta" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val k = 10
       val scores = t(s, dir, "documents")
         .select(col("doc_id"), col("n_chars"),
-          expr("text_stats(text)").as("st"), col("text"))
+          Natives.textStats(col("text")).as("st"), col("text"))
         .select(col("doc_id"), col("n_chars").as("s1"),
           col("st.ws_tokens").cast("long").as("s2"),
           size(Text.tokenizeDistinct(col("text"))).cast("long").as("s3"))
@@ -662,7 +660,6 @@ object TextAnalysis extends OpModule {
     // and a per-round 1-row existence probe (the BPE winner.isEmpty
     // discipline); the corpus never collects.
     "text_longest_dup" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val normed = t(s, dir, "documents")
         .select(Text.normalize(col("text")).as("norm"))
         .barrier() // 13 probe scans + the final report read it
@@ -678,7 +675,7 @@ object TextAnalysis extends OpModule {
       // oracle, so collisions — ~n²/2^61-improbable — steer both
       // engines' searches the same way, the same stance as before.
       def dupAt(l: Int): Boolean = !normed
-        .select(explode(expr(s"rolling_fps(norm, $l)")).as("fp"))
+        .select(explode(Natives.rollingFps(col("norm"), l)).as("fp"))
         .groupBy(col("fp")).agg(count(lit(1)).as("c"))
         .filter(col("c") >= 2).limit(1).isEmpty
       var (lo, hi) = (0, 8192)
@@ -719,12 +716,11 @@ object TextAnalysis extends OpModule {
     // The per-L report is 4 integers + one ppm DIV, so the
     // whole result is 8 rows.
     "text_dup_profile" -> ((s, dir) => {
-      graft.plans.GraftFunctions.register(s)
       val normed = t(s, dir, "documents")
         .select(Text.normalize(col("text")).as("norm"))
         .barrier() // 8 window scans read it
       Seq(8, 16, 32, 64, 128, 256, 512, 1024).map { l =>
-        normed.select(explode(expr(s"rolling_fps(norm, $l)")).as("fp"))
+        normed.select(explode(Natives.rollingFps(col("norm"), l)).as("fp"))
           .groupBy(col("fp")).agg(count(lit(1)).as("c"))
           .agg(coalesce(sum(col("c")), lit(0L)).as("n_windows"),
             count(lit(1)).as("n_distinct"),
@@ -3235,11 +3231,8 @@ object TextAnalysis extends OpModule {
     // values are bit-identical (ClassifierStatsSpec) so every dependent
     // oracle (text_quality_classifier, quality_threshold_sweep) and the
     // streaming gate parity specs are unchanged.
-    import org.apache.spark.sql.graft.ColumnBridge
-    val st = ColumnBridge.column(
-      graft.plans.ClassifierStats(ColumnBridge.expression(col("text"))))
     docs
-      .withColumn("__cs", st)
+      .withColumn("__cs", Natives.classifierStats(col("text")))
       .withColumn("n_feats", col("__cs.n_feats"))
       .withColumn("score",
         when(col("n_feats") === 0L, lit(null).cast("double"))

@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, 
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
-import org.apache.spark.sql.SparkSession
 
 /** Native Catalyst expression: cosine similarity over two
   * `ArrayType(FloatType)` columns, with whole-stage codegen.
@@ -19,8 +18,9 @@ import org.apache.spark.sql.SparkSession
   * calls. Same accumulation order (sequential, double-widened) → bit-equal
   * results, so the DuckDB oracles are unchanged.
   *
-  * Register with `GraftExtensions` (spark.sql.extensions) or
-  * `GraftFunctions.register(spark)`, then use `expr("cosine_sim(a, b)")`.
+  * Queries build it with `graft.functions.Natives.cosineSim(a, b)`; SQL
+  * text reaches it as `cosine_sim(a, b)` through `GraftExtensions`
+  * (spark.sql.extensions), which `core.Sessions.local` installs.
   */
 case class CosineSimilarity(left: Expression, right: Expression)
   extends BinaryExpression {
@@ -85,6 +85,11 @@ case class CosineSimilarity(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** The SQL-text surface of the native expressions and the Column helpers,
+  * for `spark.sql` users: `GraftExtensions` injects these builders into
+  * every session `core.Sessions.local` builds. Queries do not go through
+  * it; they bind the same expressions with `graft.functions.Natives`.
+  */
 object GraftFunctions {
 
   import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
@@ -177,12 +182,6 @@ object GraftFunctions {
       (children: Seq[Expression]) =>
         expression(graft.operators.Dedup.jaccard(
           column(children(0)), column(children(1))))))
-
-  /** Runtime registration for sessions created without the extensions conf. */
-  def register(spark: SparkSession): Unit =
-    functions.foreach { case (ident, info, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-    }
 }
 
 /** `--conf spark.sql.extensions=graft.plans.GraftExtensions` */

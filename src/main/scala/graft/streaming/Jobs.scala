@@ -482,17 +482,22 @@ object Jobs {
     * outputs written from one `foreachBatch` (the Spark shape of Flink's
     * side outputs, ref DwdBaseLog.java:76-92). The batch is persisted so
     * the parse runs once per micro-batch, not once per split — the X1
-    * one-parse invariant. Exactly-once: parquet append + the streaming
-    * commit log; checkpointed under `outDir/_chk`.
+    * one-parse invariant. Exactly-once: each split of batch `id` is
+    * written in Overwrite mode to its own `outDir/<split>/batch_<id>`
+    * directory (as `runSoak`'s DWD stage does), so a batch replayed after
+    * a crash between its writes and its commit rewrites its directories
+    * instead of appending twice; read a split back as
+    * `outDir/<split>/batch_*`. Checkpointed under `outDir/_chk`.
     */
   def runLogSplitStreaming(spark: SparkSession, sfDir: String,
       outDir: String): Unit = {
     val stream = Tables.loadStream(spark, sfDir, "events")
     val q = stream.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val b = batch.persist()
         try LogSplit.splits(b.toDF()).foreach { case (name, df) =>
-          df.write.mode("append").parquet(s"$outDir/$name")
+          df.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+            .parquet(s"$outDir/$name/batch_$id")
         } finally { b.unpersist(); () }
       }
       .option("checkpointLocation", s"$outDir/_chk")

@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import graft.functions.Natives
 
 /** Streaming twins of the batch stateful operators: the same
   * StateMachines transition functions executed incrementally via
@@ -264,6 +265,21 @@ object StatefulStreaming {
       probed.filter(col("__hit")).drop("fpl", "bm", "__hit"))
   }
 
+  /** Quality-classifier tier of the ingest hygiene chain — the stream
+    * form of `text_quality_classifier`'s keep filter (fastText/CCNet
+    * keep/drop). Purely narrow and stateless: one native
+    * `classifier_stats` walk per document (`Natives.classifierStats`), no
+    * join, no state, no shuffle — each micro-batch pays a
+    * codegen'd scan and nothing else, so the tier composes into the
+    * hygiene chain at zero structural cost. Batch parity pinned in
+    * StreamingSpec; identical keep set to the batch query by
+    * construction (shared scoring core).
+    */
+  def classifierGateBatch(docs: DataFrame): DataFrame =
+    graft.operators.TextAnalysis.withClassifierScore(docs)
+      .filter(col("keep"))
+      .drop("n_feats", "score", "keep")
+
   /** Bloom-gated tier of the exact decontamination gate — the batch
     * `text_decontam_bloom` pruning brought to the ingest stream: when the
     * benchmark union is large enough that its fp set is an expensive
@@ -276,20 +292,6 @@ object StatefulStreaming {
     * query, pinned in StreamingSpec. Both `benchFps` and `bloom` are
     * computed once per benchmark refresh and cached by the caller.
     */
-  /** Quality-classifier tier of the ingest hygiene chain — the stream
-    * form of `text_quality_classifier`'s keep filter (fastText/CCNet
-    * keep/drop). Purely narrow and stateless: one aggregate() HOF per
-    * document, no join, no state, no shuffle — each micro-batch pays a
-    * codegen'd scan and nothing else, so the tier composes into the
-    * hygiene chain at zero structural cost. Batch parity pinned in
-    * StreamingSpec; identical keep set to the batch query by
-    * construction (shared scoring core).
-    */
-  def classifierGateBatch(docs: DataFrame): DataFrame =
-    graft.operators.TextAnalysis.withClassifierScore(docs)
-      .filter(col("keep"))
-      .drop("n_feats", "score", "keep")
-
   def contaminationGateBloom(docs: DataFrame, benchFps: DataFrame,
       bloom: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.broadcast
@@ -389,7 +391,6 @@ object StatefulStreaming {
     */
   def ivfIngestBatch(batch: DataFrame, cents: DataFrame, storeDir: String,
       batchId: Long): Unit = {
-    graft.plans.GraftFunctions.register(batch.sparkSession)
     val assigned = graft.operators.Similarity.assignTo(batch, cents)
       .select(col("vec_id"), col("cluster").cast("long").as("cluster"),
         col("embedding"))
@@ -915,7 +916,6 @@ object StatefulStreaming {
   def ivfIngestBatch(batch: DataFrame, storeDir: String, batchId: Long,
       c: Int = 16): DataFrame = {
     val spark = batch.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     BatchStore.write(batch.filter(col("vec_id") < c)
       .select(col("vec_id"), col("embedding")),
       s"$storeDir/__cents", batchId)
@@ -964,7 +964,6 @@ object StatefulStreaming {
       bits: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val spark = batch.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val vecs = batch.select(col("vec_id"), col("embedding"))
     BatchStore.write(vecs, s"$storeDir/vecs", batchId)
     val sigs = graft.functions.Vectors
@@ -989,7 +988,7 @@ object StatefulStreaming {
       .join(storeVecs.select(col("vec_id").as("vb"),
         col("embedding").as("eb")), "vb")
       .select(col("va").as("vec_id"), col("vb").as("neighbor_id"),
-        expr("cosine_sim(ea, eb)").as("sim"))
+        Natives.cosineSim(col("ea"), col("eb")).as("sim"))
     val w = Window.partitionBy(col("vec_id"))
       .orderBy(col("sim").desc, col("neighbor_id").asc)
     // keyed merge (r16): the step-3 doc above promises "re-rank ONLY
@@ -1030,7 +1029,6 @@ object StatefulStreaming {
     */
   def graphSearchFrom(spark: SparkSession, storeDir: String,
       width: Int = 8): DataFrame = {
-    graft.plans.GraftFunctions.register(spark)
     val ke = Sinks.readStore(spark, s"$storeDir/topk")
       .filter(col("sim") >= 0.3)
     graft.operators.Similarity.beamSearchOver(
@@ -1080,11 +1078,10 @@ object StatefulStreaming {
   def simhashIngestBatch(batch: DataFrame, storeDir: String): DataFrame = {
     import graft.core.Barrier.BarrierOps
     val spark = batch.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     val allOnes = (1L << 60) - 1
     val sigs = batch
       .select(col("doc_id"),
-        coalesce(expr("simhash60(text)"), lit(allOnes)).as("sig"))
+        coalesce(Natives.simhash60(col("text")), lit(allOnes)).as("sig"))
       .barrier() // docs upsert, roster build, probe side, expansion
     Sinks.mergeTouchedKeyed(spark, sigs, "sig", s"$storeDir/docs")(
       _.dropDuplicates("sig", "doc_id"))
@@ -1222,7 +1219,6 @@ object StatefulStreaming {
   def containmentIngestBatch(batch: DataFrame, storeDir: String): DataFrame = {
     import graft.core.Barrier.BarrierOps
     val spark = batch.sparkSession
-    graft.plans.GraftFunctions.register(spark)
     // 1. the batch gramSetRels arithmetic, per batch row
     val d = batch
       .select(col("doc_id"),
@@ -1280,7 +1276,7 @@ object StatefulStreaming {
         col("n").as("n_b")), "fb")
       .filter(col("n_b") * 5 >= col("n_a") * 4)
       .withColumn("inter",
-        expr("sorted_intersect_count(g_a, g_b)").cast("long"))
+        Natives.sortedIntersectCount(col("g_a"), col("g_b")).cast("long"))
       .filter(col("inter") * 5 >= col("n_a") * 4)
       .select(col("fa"), col("fb"), col("n_a"), col("n_b"), col("inter"))
       .barrier() // emission A expansion AND the reach merge rows
@@ -1385,7 +1381,7 @@ object StatefulStreaming {
   }
 
   /** Query the maintained IVF index: probes rank the frozen quantizer's
-    * centroids for each stored query vector (same `simsExpr` argmax as
+    * centroids for each stored query vector (same `sims` argmax as
     * the batch plan), candidates come off the probed inverted lists
     * only — never the whole index — and the scoring tail is the SAME
     * `Similarity.ivfTopK` the batch query runs. After any ingest
@@ -1395,7 +1391,6 @@ object StatefulStreaming {
   def ivfSearchFrom(spark: SparkSession, storeDir: String,
       nProbe: Int = 4): DataFrame = {
     import org.apache.spark.sql.types._
-    graft.plans.GraftFunctions.register(spark)
     val assigned = BatchStore.readAll(spark, s"$storeDir/lists", StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(FloatType)),

@@ -17,7 +17,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `streaming.BatchStore` may spell the per-micro-batch store layout,
   * only `core.Knobs` a `spark.graft.*` conf key, and only `core.Sessions`
   * may build a session or read the environment — in the tests too, so
-  * the suites run on the engine's own session.
+  * the suites run on the engine's own session. And queries bind the
+  * native expressions only through `functions.Natives`: no SQL text in
+  * `src/main` outside the registry file names one, and nothing registers
+  * functions on a session while a query is built.
   */
 class BoundedWindowLintSpec extends AnyFunSuite {
 
@@ -120,5 +123,28 @@ class BoundedWindowLintSpec extends AnyFunSuite {
     assert(bad.isEmpty,
       "session builder or env read outside core.Sessions:\n" +
         bad.mkString("\n"))
+  }
+
+  test("queries bind native expressions through typed constructors, " +
+      "never through SQL text or a per-query registration") {
+    // the 13 registered names, spelled here rather than read from the
+    // registry so a name dropped from it is still policed
+    val names = Seq("cosine_sim", "sorted_intersect_count", "text_stats",
+      "classifier_stats", "minhash_sigs", "simhash16", "simhash60",
+      "cdc_chunks", "agms_signs", "rolling_fps", "tokenize_cjk",
+      "doc_fingerprint", "jaccard_sim")
+    // a call of one of them inside a string literal: `expr("cosine_sim(`
+    // and SQL fragments spliced into one
+    val sqlCall = ("\"[^\"]*\\b(" + names.mkString("|") + ")\\(").r
+    val sqlText = outside("CosineSimilarity.scala")(l =>
+      sqlCall.findFirstIn(l).nonEmpty)
+    assert(sqlText.isEmpty,
+      "native expression called through SQL text outside the registry:\n" +
+        sqlText.mkString("\n"))
+    val registers = Seq("src/main/scala", "src/test/scala").flatMap(tree =>
+      outside("BoundedWindowLintSpec.scala", tree)(
+        _.contains("GraftFunctions.register")))
+    assert(registers.isEmpty,
+      "per-query function registration:\n" + registers.mkString("\n"))
   }
 }

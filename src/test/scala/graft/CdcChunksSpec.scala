@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions
 
 /** The native cdc_chunks walk must match a from-scratch driver
   * recompute of the published rule (16-char window md5 ≡ 0 mod 64 cuts,
@@ -32,7 +31,6 @@ class CdcChunksSpec extends SparkSpec {
     s.toLowerCase.replaceAll("[^a-z0-9]+", " ").trim
 
   test("native walk == from-scratch reference on fixture docs + edges") {
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text")).limit(40).collect()
       .map(r => r.getLong(0) -> r.getString(1))
@@ -54,7 +52,6 @@ class CdcChunksSpec extends SparkSpec {
   }
 
   test("chunks conserve every character of every fixture doc") {
-    GraftFunctions.register(spark)
     val bad = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(graft.functions.Text.normalize(col("text")).as("norm"))
       .filter(length(col("norm")) > 0)
@@ -66,7 +63,6 @@ class CdcChunksSpec extends SparkSpec {
   }
 
   test("content-defined: a prefix insertion leaves tail chunks shared") {
-    GraftFunctions.register(spark)
     val base = norm((1 to 200).map(i => s"token$i value$i").mkString(" "))
     val shifted = "inserted preamble words here " + base
     import spark.implicits._

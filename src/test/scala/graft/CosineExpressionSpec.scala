@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.Vectors
-import graft.plans.GraftFunctions
 
 /** The native codegen'd cosine_sim expression must be bit-identical to the
   * composed higher-order-function form (same sequential double-widened
@@ -11,7 +10,6 @@ import graft.plans.GraftFunctions
 class CosineExpressionSpec extends SparkSpec {
 
   test("native cosine_sim == HOF cosine, bit-exact, on fixture embeddings") {
-    GraftFunctions.register(spark)
     val emb = graft.core.Tables.load(spark, sfDir, "embeddings")
     val a = emb.select(col("vec_id").as("ida"), col("embedding").as("ea"))
     val b = emb.select(col("vec_id").as("idb"), col("embedding").as("eb"))
@@ -25,7 +23,6 @@ class CosineExpressionSpec extends SparkSpec {
   }
 
   test("cosine_sim handles edge shapes: zero vector, empty, mismatched len") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq(
       (Array(0f, 0f), Array(1f, 2f)),          // zero norm -> 0.0
@@ -41,7 +38,6 @@ class CosineExpressionSpec extends SparkSpec {
   }
 
   test("cosine_sim runs inside WholeStageCodegen") {
-    GraftFunctions.register(spark)
     val emb = graft.core.Tables.load(spark, sfDir, "embeddings")
     val plan = emb.select(expr("cosine_sim(embedding, embedding)").as("s"))
       .queryExecution.executedPlan.toString

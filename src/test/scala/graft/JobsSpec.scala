@@ -9,20 +9,39 @@ import graft.streaming.Jobs
   */
 class JobsSpec extends SparkSpec {
 
+  /** Deletes the newest commit of the stream checkpointed at `chk`: a
+    * crash between that batch's writes and its commit, so the next run
+    * replays the batch. */
+  private def dropNewestCommit(chk: String): Unit = {
+    val commits = new java.io.File(chk, "commits").listFiles()
+      .filter(_.getName.forall(_.isDigit))
+    assert(commits.nonEmpty, "the stream committed no batch")
+    val newest = commits.maxBy(_.getName.toLong)
+    assert(newest.delete())
+    new java.io.File(newest.getParent, s".${newest.getName}.crc").delete()
+    ()
+  }
+
   test("log splitter: streaming run produces exactly the batch outputs") {
-    import org.apache.spark.sql.functions.col
     val out = Files.createTempDirectory("logstream").toString
     Jobs.runLogSplitStreaming(spark, sfDir, out)
     val batchSplits = graft.operators.LogSplit
       .splits(graft.core.Tables.load(spark, sfDir, "events"))
-    batchSplits.foreach { case (name, batchDf) =>
-      val streamed = spark.read.parquet(s"$out/$name")
-      assert(streamed.count() === batchDf.count(), s"split $name count")
-      // exact same rows, not just counts
-      assert(streamed.exceptAll(batchDf).count() === 0 &&
-        batchDf.exceptAll(streamed).count() === 0,
-        s"split $name rows differ between batch and streaming")
-    }
+    def assertEqualsBatch(what: String): Unit =
+      batchSplits.foreach { case (name, batchDf) =>
+        val streamed = spark.read.parquet(s"$out/$name/batch_*")
+        assert(streamed.count() === batchDf.count(),
+          s"split $name count ($what)")
+        // exact same rows, not just counts
+        assert(streamed.exceptAll(batchDf).count() === 0 &&
+          batchDf.exceptAll(streamed).count() === 0,
+          s"split $name rows differ between batch and streaming ($what)")
+      }
+    assertEqualsBatch("first run")
+    // the replayed batch must rewrite its splits, not append them twice
+    dropNewestCommit(s"$out/_chk")
+    Jobs.runLogSplitStreaming(spark, sfDir, out)
+    assertEqualsBatch("after replaying the uncommitted batch")
   }
 
   test("routed streaming sink partitions by sink_table and matches batch") {
@@ -43,14 +62,8 @@ class JobsSpec extends SparkSpec {
         s"streaming routed output must equal the batch router ($what)")
     }
     assertEqualsBatch("first run")
-    // a crash between the newest batch's write and its commit: drop the
-    // commit and restart — the replayed batch must not append twice
-    val commits = new java.io.File(out, "_chk/commits").listFiles()
-      .filter(_.getName.forall(_.isDigit))
-    assert(commits.nonEmpty, "the stream committed no batch")
-    val newest = commits.maxBy(_.getName.toLong)
-    assert(newest.delete())
-    new java.io.File(newest.getParent, s".${newest.getName}.crc").delete()
+    // the replayed batch must not append twice
+    dropNewestCommit(s"$out/_chk")
     Jobs.runRoutedStreaming(spark, sfDir, out)
     assertEqualsBatch("after replaying the uncommitted batch")
   }

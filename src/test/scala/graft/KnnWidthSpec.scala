@@ -58,7 +58,6 @@ class KnnWidthSpec extends SparkSpec {
 
   test("derived-width recall ≥ wider-width recall vs brute-force truth") {
     import org.apache.spark.sql.expressions.Window
-    graft.plans.GraftFunctions.register(spark)
     val emb = graft.core.Tables.load(spark, sfDir, "embeddings")
     val a = emb.select(col("vec_id"), col("embedding").as("ea"))
     val b = emb.select(col("vec_id").as("neighbor_id"),

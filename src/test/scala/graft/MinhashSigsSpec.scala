@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions
 
 /** The one-walk minhash_sigs expression must be bit-identical to the
   * explode → md5-hex → conv-slice → min-aggregate pipeline it replaced
@@ -59,7 +58,6 @@ class MinhashSigsSpec extends SparkSpec {
   }
 
   test("native plan has NO exchange and runs inside one projection") {
-    GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id"), col("text"))
     val plan = graft.operators.Dedup.minhashSlices(docs)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions
 
 /** The native sorted_intersect_count expression must equal
   * size(array_intersect) on every pair of sorted distinct string arrays,
@@ -11,7 +10,6 @@ class NativeExprSpec extends SparkSpec {
 
   test("sorted_intersect_count == size(array_intersect) on fuzzed " +
       "sorted distinct arrays") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // deterministic fuzz: 300 pairs of random-ish string sets with
     // varied overlap, lengths 0..60, unicode mixed in
@@ -45,7 +43,6 @@ class NativeExprSpec extends SparkSpec {
   }
 
   test("sorted_intersect_count runs inside WholeStageCodegen") {
-    GraftFunctions.register(spark)
     val docs = graft.core.Tables.load(spark, sfDir, "documents")
       .select(sort_array(graft.functions.Text.tokenizeDistinct(col("text")))
         .as("a"))
@@ -58,7 +55,6 @@ class NativeExprSpec extends SparkSpec {
 
   test("spark's array_sort order IS UTF8 binary order (the walk's " +
       "contract) on adversarial strings") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     // The decisive pair (ADVICE r11 -- the old self-intersection test
     // was vacuous: ANY consistent ordering self-intersects to full
@@ -129,7 +125,6 @@ class NativeExprSpec extends SparkSpec {
   test("native agms_signs == the composed md5-hex sign spec, " +
       "coordinate for coordinate") {
     import spark.implicits._
-    graft.plans.GraftFunctions.register(spark)
     // the composed form q_join_size_sketches used through r14 — kept
     // here as the executable spec the native walk must match bit for
     // bit (the DuckDB oracle mirrors this form)

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions
 
 /** The native rolling_fps walk must be bit-identical to (a) the
   * composed-builtin DECIMAL Horner spec on ASCII input (every normalize
@@ -28,7 +27,6 @@ class RollingFpsSpec extends SparkSpec {
 
   test("bit-identical to the DECIMAL-Horner builtin spec on the " +
       "fixture corpus at three window lengths") {
-    GraftFunctions.register(spark)
     val normed = graft.core.Tables.load(spark, sfDir, "documents")
       .select(graft.functions.Text.normalize(col("text")).as("norm"))
     Seq(8, 64, 200).foreach { l =>
@@ -43,7 +41,6 @@ class RollingFpsSpec extends SparkSpec {
 
   test("matches an independent BigInt recompute, including the " +
       "non-ASCII code-point path and edges") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val cases = Seq(
       "",                         // empty → empty array
@@ -68,7 +65,6 @@ class RollingFpsSpec extends SparkSpec {
   }
 
   test("null → null (row dropped through explode), and codegen") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val n = Seq((1L, "some text"), (2L, null))
       .toDF("doc_id", "norm")
@@ -88,7 +84,6 @@ class RollingFpsSpec extends SparkSpec {
 
   test("builder rejects non-integral / NULL window-length literals " +
       "with a descriptive message (ADVICE r13)") {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq("abcdef").toDF("norm")
     def fails(sql: String, needle: String): Unit = {

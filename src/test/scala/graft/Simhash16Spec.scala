@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions
 
 /** The one-walk simhash16 expression must be bit-identical to the
   * explode → md5 → majority-vote aggregate pipeline it replaced (the
@@ -12,7 +11,6 @@ import graft.plans.GraftFunctions
 class Simhash16Spec extends SparkSpec {
 
   private def native(df: org.apache.spark.sql.DataFrame) = {
-    GraftFunctions.register(spark)
     df.select(col("doc_id"),
       coalesce(expr("simhash16(text)"), lit("1" * 16)).as("simhash"))
   }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.plans.GraftFunctions
 
 /** The 60-bit simhash walk must match its composed-builtin spec
   * bit-for-bit, and dedup_simhash_pairs must return EXACTLY the
@@ -14,7 +13,6 @@ class SimhashPairsSpec extends SparkSpec {
   private val allOnes = (1L << 60) - 1
 
   private def native(df: org.apache.spark.sql.DataFrame) = {
-    GraftFunctions.register(spark)
     df.select(col("doc_id"),
       coalesce(expr("simhash60(text)"), lit(allOnes)).as("sig"))
   }

@@ -11,18 +11,58 @@ class SqlApiSpec extends SparkSpec {
 
   test("SQL-text forms of the native one-walk expressions equal the " +
       "Column forms") {
-    graft.plans.GraftFunctions.register(spark)
+    import graft.functions.{Natives, Text}
+    // two fixture views carrying every argument type the 13 names take:
+    // text, two sorted distinct token arrays, two array<float> vectors
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      .select(col("doc_id"), col("text"))
+      .select(col("doc_id").as("id"), col("text"))
+      .withColumn("ta", sort_array(Text.tokenizeDistinct(col("text"))))
+      .withColumn("tb", sort_array(Text.tokenizeDistinct(
+        substring(col("text"), 20, 400))))
+    val vecs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id").as("id"), col("embedding").as("ea"),
+        reverse(col("embedding")).as("eb"))
     docs.createOrReplaceTempView("sql_docs")
-    val sqlDf = spark.sql(
-      """SELECT doc_id, text_stats(text) AS ts, classifier_stats(text) AS cs
-        |FROM sql_docs""".stripMargin)
-    val colDf = docs.select(col("doc_id"),
-      expr("text_stats(text)").as("ts"),
-      expr("classifier_stats(text)").as("cs"))
-    assert(sqlDf.exceptAll(colDf).count() === 0 &&
-      colDf.exceptAll(sqlDf).count() === 0)
+    vecs.createOrReplaceTempView("sql_vecs")
+    // (registered name, its SQL call, the typed Column form, relation)
+    val cases = Seq(
+      ("cosine_sim", "cosine_sim(ea, eb)",
+        Natives.cosineSim(col("ea"), col("eb")), "sql_vecs"),
+      ("sorted_intersect_count", "sorted_intersect_count(ta, tb)",
+        Natives.sortedIntersectCount(col("ta"), col("tb")), "sql_docs"),
+      ("text_stats", "text_stats(text)",
+        Natives.textStats(col("text")), "sql_docs"),
+      ("classifier_stats", "classifier_stats(text)",
+        Natives.classifierStats(col("text")), "sql_docs"),
+      ("minhash_sigs", "minhash_sigs(text)",
+        Natives.minhashSigs(col("text")), "sql_docs"),
+      ("simhash16", "simhash16(text)",
+        Natives.simhash16(col("text")), "sql_docs"),
+      ("simhash60", "simhash60(text)",
+        Natives.simhash60(col("text")), "sql_docs"),
+      ("cdc_chunks", "cdc_chunks(text)",
+        Natives.cdcChunks(col("text")), "sql_docs"),
+      ("agms_signs", "agms_signs(text)",
+        Natives.agmsSigns(col("text")), "sql_docs"),
+      ("rolling_fps", "rolling_fps(text, 8)",
+        Natives.rollingFps(col("text"), 8), "sql_docs"),
+      ("tokenize_cjk", "tokenize_cjk(text)",
+        Text.tokenizeCjk(col("text")), "sql_docs"),
+      ("doc_fingerprint", "doc_fingerprint(text)",
+        Text.fingerprint(col("text")), "sql_docs"),
+      ("jaccard_sim", "jaccard_sim(ta, tb)",
+        graft.operators.Dedup.jaccard(col("ta"), col("tb")), "sql_docs"))
+    assert(cases.map(_._1).toSet ===
+      graft.plans.GraftFunctions.functions.map(_._1.funcName).toSet,
+      "every registered name has exactly one case")
+    cases.foreach { case (name, sqlCall, column, view) =>
+      val sqlDf = spark.sql(s"SELECT id, $sqlCall AS v FROM $view")
+      val colDf = spark.table(view).select(col("id"), column.as("v"))
+      assert(sqlDf.count() > 0, s"$name: empty fixture")
+      assert(sqlDf.exceptAll(colDf).count() === 0 &&
+        colDf.exceptAll(sqlDf).count() === 0,
+        s"$name: SQL text differs from its Column form")
+    }
   }
 
   test("SQL-text form of the cart-add filter equals the DataFrame form") {

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.Text
-import graft.plans.GraftFunctions
 
 /** The one-walk text_stats expression must be value-identical to the four
   * composed-builtin feature columns it replaced (the text_quality oracle
@@ -21,7 +20,6 @@ class TextStatsSpec extends SparkSpec {
       Text.punctRatio(col("text")).as("punct_ratio"))
 
   private def fused(df: org.apache.spark.sql.DataFrame) = {
-    GraftFunctions.register(spark)
     df.select(col("text"), expr("text_stats(text)").as("st"))
       .select(col("text"), col("st.char_len"), col("st.ws_tokens"),
         col("st.bpe_tokens"), col("st.stopword_ratio"),
