@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,25 +24,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * estimation; the deterministic md5-seeded sign family is the same
   * device the composed form and the oracle share.
   */
-case class AgmsSigns(child: Expression) extends UnaryExpression {
+case class AgmsSigns(child: Expression)
+    extends StringWalk("agms_signs", ArrayType(LongType, containsNull = false)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"agms_signs requires a string argument, got ${dt.simpleString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def foldable: Boolean = child.foldable
-  override def prettyName: String = "agms_signs"
-
-  override def nullSafeEval(input: Any): Any =
-    AgmsSigns.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.AgmsSigns.compute($c);")
+  override protected def walk(s: UTF8String): Any = AgmsSigns.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): AgmsSigns =
     copy(child = newChild)

@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
@@ -33,25 +31,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * array (the oracle's len > 0 guard); null → null (callers explode,
   * which drops both).
   */
-case class CdcChunks(child: Expression) extends UnaryExpression {
+case class CdcChunks(child: Expression)
+    extends StringWalk("cdc_chunks", CdcChunks.schema) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"cdc_chunks requires a string argument, got ${dt.simpleString}")
-  }
-
-  override def dataType: DataType = CdcChunks.schema
-  override def nullIntolerant: Boolean = true
-  override def foldable: Boolean = child.foldable
-  override def prettyName: String = "cdc_chunks"
-
-  override def nullSafeEval(input: Any): Any =
-    CdcChunks.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.CdcChunks.compute($c);")
+  override protected def walk(s: UTF8String): Any = CdcChunks.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): CdcChunks =
     copy(child = newChild)
@@ -60,7 +43,6 @@ case class CdcChunks(child: Expression) extends UnaryExpression {
 object CdcChunks {
 
   val Window = 16
-  val Modulus = 64 // expected chunk length
 
   val schema: DataType = ArrayType(StructType(Seq(
     StructField("fp", StringType, nullable = false),

@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -31,25 +29,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * edges); the text_quality_classifier / quality_threshold_sweep
   * oracles are unchanged.
   */
-case class ClassifierStats(child: Expression) extends UnaryExpression {
+case class ClassifierStats(child: Expression)
+    extends StringWalk("classifier_stats", ClassifierStats.schema) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"classifier_stats requires a string argument, got ${dt.simpleString}")
-  }
-
-  override def dataType: DataType = ClassifierStats.schema
-  override def nullIntolerant: Boolean = true
-  override def foldable: Boolean = child.foldable
-  override def prettyName: String = "classifier_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    ClassifierStats.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.ClassifierStats.compute($c);")
+  override protected def walk(s: UTF8String): Any = ClassifierStats.compute(s)
 
   override protected def withNewChildInternal(
       newChild: Expression): ClassifierStats =

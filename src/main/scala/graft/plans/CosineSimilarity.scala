@@ -5,7 +5,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType,
+  FloatType, IntegerType, LongType, ShortType}
 
 /** Native Catalyst expression: cosine similarity over two
   * `ArrayType(FloatType)` columns, with whole-stage codegen.
@@ -92,96 +93,73 @@ case class CosineSimilarity(left: Expression, right: Expression)
   */
 object GraftFunctions {
 
+  import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
   import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
 
-  val functions: Seq[(FunctionIdentifier, ExpressionInfo,
-      Seq[Expression] => Expression)] = Seq(
-    (FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (children: Seq[Expression]) =>
-        CosineSimilarity(children(0), children(1))),
+  type Entry = (FunctionIdentifier, ExpressionInfo, FunctionBuilder)
+
+  /** One registry entry: `name` with `arity` arguments, documented by
+    * `className`. A call with another argument count fails naming the
+    * function and both counts, before `build` sees its arguments. */
+  private def fn(name: String, className: String, arity: Int)(
+      build: FunctionBuilder): Entry =
+    (FunctionIdentifier(name), new ExpressionInfo(className, name),
+      children => {
+        require(children.size == arity, s"$name takes $arity argument" +
+          s"${if (arity == 1) "" else "s"}, got ${children.size}")
+        build(children)
+      })
+
+  val functions: Seq[Entry] = Seq(
+    fn("cosine_sim", classOf[CosineSimilarity].getName, 2)(c =>
+      CosineSimilarity(c(0), c(1))),
     // two-pointer intersection count over sorted string arrays (see
     // SortedIntersect scaladoc)
-    (FunctionIdentifier("sorted_intersect_count"),
-      new ExpressionInfo(classOf[SortedIntersectCount].getName,
-        "sorted_intersect_count"),
-      (children: Seq[Expression]) =>
-        SortedIntersectCount(children(0), children(1))),
-    // one-walk text-quality feature struct (see TextStats scaladoc)
-    (FunctionIdentifier("text_stats"),
-      new ExpressionInfo(classOf[TextStats].getName, "text_stats"),
-      (children: Seq[Expression]) => TextStats(children.head)),
-    // one-walk hashed-classifier struct (see ClassifierStats scaladoc)
-    (FunctionIdentifier("classifier_stats"),
-      new ExpressionInfo(classOf[ClassifierStats].getName, "classifier_stats"),
-      (children: Seq[Expression]) => ClassifierStats(children.head)),
-    // one-walk MinHash slice-minima struct (see MinhashSigs scaladoc)
-    (FunctionIdentifier("minhash_sigs"),
-      new ExpressionInfo(classOf[MinhashSigs].getName, "minhash_sigs"),
-      (children: Seq[Expression]) => MinhashSigs(children.head)),
-    // one-walk 16-bit SimHash string (see Simhash16 scaladoc)
-    (FunctionIdentifier("simhash16"),
-      new ExpressionInfo(classOf[Simhash16].getName, "simhash16"),
-      (children: Seq[Expression]) => Simhash16(children.head)),
-    // one-walk 60-bit SimHash BIGINT (see Simhash60 scaladoc)
-    (FunctionIdentifier("simhash60"),
-      new ExpressionInfo(classOf[Simhash60].getName, "simhash60"),
-      (children: Seq[Expression]) => Simhash60(children.head)),
-    // content-defined chunk fingerprints (see CdcChunks scaladoc)
-    (FunctionIdentifier("cdc_chunks"),
-      new ExpressionInfo(classOf[CdcChunks].getName, "cdc_chunks"),
-      (children: Seq[Expression]) => CdcChunks(children.head)),
-    // one-walk 16-coordinate AGMS sign vector (see AgmsSigns scaladoc)
-    (FunctionIdentifier("agms_signs"),
-      new ExpressionInfo(classOf[AgmsSigns].getName, "agms_signs"),
-      (children: Seq[Expression]) => AgmsSigns(children.head)),
+    fn("sorted_intersect_count", classOf[SortedIntersectCount].getName, 2)(
+      c => SortedIntersectCount(c(0), c(1))),
+    // the one-walk natives of one string column (see StringWalk)
+    fn("text_stats", classOf[TextStats].getName, 1)(c => TextStats(c(0))),
+    fn("classifier_stats", classOf[ClassifierStats].getName, 1)(c =>
+      ClassifierStats(c(0))),
+    fn("minhash_sigs", classOf[MinhashSigs].getName, 1)(c =>
+      MinhashSigs(c(0))),
+    fn("simhash16", classOf[Simhash16].getName, 1)(c => Simhash16(c(0))),
+    fn("simhash60", classOf[Simhash60].getName, 1)(c => Simhash60(c(0))),
+    fn("cdc_chunks", classOf[CdcChunks].getName, 1)(c => CdcChunks(c(0))),
+    fn("agms_signs", classOf[AgmsSigns].getName, 1)(c => AgmsSigns(c(0))),
     // rolling Rabin–Karp window fingerprints (see RollingFps scaladoc);
     // the window length must be a foldable integer literal
-    (FunctionIdentifier("rolling_fps"),
-      new ExpressionInfo(classOf[RollingFps].getName, "rolling_fps"),
-      (children: Seq[Expression]) => {
-        require(children.size == 2,
-          s"rolling_fps(str, L) takes 2 arguments, got ${children.size}")
-        require(children(1).foldable,
-          "rolling_fps window length must be a foldable integer literal")
-        // dtype + null validation BEFORE eval (ADVICE r13): a string or
-        // fractional literal must fail with the same descriptive style as
-        // the foldability check, not a raw ClassCastException; a DOUBLE
-        // like 4.9 must be rejected, not silently truncated to 4
-        children(1).dataType match {
-          case org.apache.spark.sql.types.ByteType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType => ()
-          case dt => throw new IllegalArgumentException(
-            s"rolling_fps window length must be an integral literal, " +
-              s"got ${dt.simpleString}")
-        }
-        val v = children(1).eval()
-        require(v != null, "rolling_fps window length must not be NULL")
-        RollingFps(children(0), v.asInstanceOf[Number].intValue())
-      }),
+    fn("rolling_fps", classOf[RollingFps].getName, 2) { c =>
+      require(c(1).foldable,
+        "rolling_fps window length must be a foldable integer literal")
+      // dtype + null validation BEFORE eval (ADVICE r13): a string or
+      // fractional literal must fail with the same descriptive style as
+      // the foldability check, not a raw ClassCastException; a DOUBLE
+      // like 4.9 must be rejected, not silently truncated to 4
+      c(1).dataType match {
+        case ByteType | ShortType | IntegerType | LongType => ()
+        case dt => throw new IllegalArgumentException(
+          s"rolling_fps window length must be an integral literal, " +
+            s"got ${dt.simpleString}")
+      }
+      val v = c(1).eval()
+      require(v != null, "rolling_fps window length must not be NULL")
+      RollingFps(c(0), v.asInstanceOf[Number].intValue())
+    },
     // SQL-text surface for the script-aware tokenizer — the analog of the
     // reference registering its KwSplit UDTF in the table environment
     // (ref DwsTrafficSourceKeywordPageViewWindow.java:36): the builder
     // routes through Text.tokenizeCjk (since r12 the native TokenizeCjk
     // walk), so `LATERAL VIEW explode(tokenize_cjk(text))` is
     // plan-identical to the DataFrame form.
-    (FunctionIdentifier("tokenize_cjk"),
-      new ExpressionInfo("graft.functions.Text", "tokenize_cjk"),
-      (children: Seq[Expression]) =>
-        expression(graft.functions.Text.tokenizeCjk(column(children.head)))),
+    fn("tokenize_cjk", "graft.functions.Text", 1)(c =>
+      expression(graft.functions.Text.tokenizeCjk(column(c(0))))),
     // content fingerprint (md5 of normalized text) as SQL text
-    (FunctionIdentifier("doc_fingerprint"),
-      new ExpressionInfo("graft.functions.Text", "doc_fingerprint"),
-      (children: Seq[Expression]) =>
-        expression(graft.functions.Text.fingerprint(column(children.head)))),
+    fn("doc_fingerprint", "graft.functions.Text", 1)(c =>
+      expression(graft.functions.Text.fingerprint(column(c(0))))),
     // word-set Jaccard of two token arrays — THE dedup verify expression
-    (FunctionIdentifier("jaccard_sim"),
-      new ExpressionInfo("graft.operators.Dedup", "jaccard_sim"),
-      (children: Seq[Expression]) =>
-        expression(graft.operators.Dedup.jaccard(
-          column(children(0)), column(children(1))))))
+    fn("jaccard_sim", "graft.operators.Dedup", 2)(c =>
+      expression(graft.operators.Dedup.jaccard(column(c(0)), column(c(1))))))
 }
 
 /** `--conf spark.sql.extensions=graft.plans.GraftExtensions` */

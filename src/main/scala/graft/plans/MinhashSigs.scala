@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
@@ -57,27 +55,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * through Flink keyBy (e.g. realtime-dws KeywordBean streams); this is
   * the sketch-signature scale path replacing content-key movement.
   */
-case class MinhashSigs(child: Expression) extends UnaryExpression {
+case class MinhashSigs(child: Expression)
+    extends StringWalk("minhash_sigs", MinhashSigs.schema) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sigs requires a string argument, got ${dt.simpleString}")
-  }
-
-  override def dataType: DataType = MinhashSigs.schema
-  override def nullIntolerant: Boolean = true
-  override def foldable: Boolean = child.foldable
-  override def prettyName: String = "minhash_sigs"
-
-  override def nullSafeEval(input: Any): Any =
-    MinhashSigs.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // one static call — the win is the fused walk + no exchange, not
-    // inlining the loop body into generated source
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.MinhashSigs.compute($c);")
+  override protected def walk(s: UTF8String): Any = MinhashSigs.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): MinhashSigs =
     copy(child = newChild)

@@ -1,8 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -62,27 +61,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * empty array (the callers' CASE guard, absorbed); null → null.
   */
 case class RollingFps(child: Expression, winLen: Int)
-    extends UnaryExpression {
+    extends StringWalk("rolling_fps", ArrayType(LongType, containsNull = false)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType if winLen >= 1 => TypeCheckResult.TypeCheckSuccess
-    case StringType => TypeCheckResult.TypeCheckFailure(
-      s"rolling_fps window length must be >= 1, got $winLen")
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"rolling_fps requires a string argument, got ${dt.simpleString}")
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    super.checkInputDataTypes() match {
+      case TypeCheckResult.TypeCheckSuccess if winLen < 1 =>
+        TypeCheckResult.TypeCheckFailure(
+          s"rolling_fps window length must be >= 1, got $winLen")
+      case r => r
+    }
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def foldable: Boolean = child.foldable
-  override def prettyName: String = "rolling_fps"
-
-  override def nullSafeEval(input: Any): Any =
-    RollingFps.compute(input.asInstanceOf[UTF8String], winLen)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.RollingFps.compute($c, $winLen);")
+  override protected def walk(s: UTF8String): Any = RollingFps.compute(s, winLen)
+  override protected def codegenArgs: Seq[Any] = Seq(winLen)
 
   override protected def withNewChildInternal(newChild: Expression): RollingFps =
     copy(child = newChild)

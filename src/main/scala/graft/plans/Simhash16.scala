@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -30,25 +28,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * strings (realtime-dws KwSplit pipeline); this is the
   * signature-sketch scale path.
   */
-case class Simhash16(child: Expression) extends UnaryExpression {
+case class Simhash16(child: Expression)
+    extends StringWalk("simhash16", StringType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"simhash16 requires a string argument, got ${dt.simpleString}")
-  }
-
-  override def dataType: DataType = StringType
-  override def nullIntolerant: Boolean = true
-  override def foldable: Boolean = child.foldable
-  override def prettyName: String = "simhash16"
-
-  override def nullSafeEval(input: Any): Any =
-    Simhash16.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Simhash16.compute($c);")
+  override protected def walk(s: UTF8String): Any = Simhash16.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): Simhash16 =
     copy(child = newChild)
@@ -98,25 +81,10 @@ object Simhash16 {
   * Bit-identity vs the composed explode + 60-conditional-sum spec form
   * is pinned in Simhash60Spec; the DuckDB oracle mirrors the spec.
   */
-case class Simhash60(child: Expression) extends UnaryExpression {
+case class Simhash60(child: Expression)
+    extends StringWalk("simhash60", LongType) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"simhash60 requires a string argument, got ${dt.simpleString}")
-  }
-
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def foldable: Boolean = child.foldable
-  override def prettyName: String = "simhash60"
-
-  override def nullSafeEval(input: Any): Any =
-    Simhash60.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.Simhash60.compute($c);")
+  override protected def walk(s: UTF8String): Any = Simhash60.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): Simhash60 =
     copy(child = newChild)

@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
@@ -37,27 +35,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - ratios divide exact int counts as doubles — the same single IEEE
   *     division the builtin columns perform.
   */
-case class TextStats(child: Expression) extends UnaryExpression {
+case class TextStats(child: Expression)
+    extends StringWalk("text_stats", TextStats.schema) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"text_stats requires a string argument, got ${dt.simpleString}")
-  }
-
-  override def dataType: DataType = TextStats.schema
-  override def nullIntolerant: Boolean = true
-  override def foldable: Boolean = child.foldable
-  override def prettyName: String = "text_stats"
-
-  override def nullSafeEval(input: Any): Any =
-    TextStats.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    // one static call — JIT inlines it; the win is the fused single walk,
-    // not the inlining of the loop body into generated source
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TextStats.compute($c);")
+  override protected def walk(s: UTF8String): Any = TextStats.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): TextStats =
     copy(child = newChild)

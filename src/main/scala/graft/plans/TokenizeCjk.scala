@@ -1,8 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -27,26 +25,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * directly. Null → null (explode drops, same as the composed form's
   * null propagation).
   */
-case class TokenizeCjk(child: Expression) extends UnaryExpression {
+case class TokenizeCjk(child: Expression)
+    extends StringWalk("tokenize_cjk",
+      ArrayType(StringType, containsNull = false)) {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case dt => TypeCheckResult.TypeCheckFailure(
-      s"tokenize_cjk requires a string argument, got ${dt.simpleString}")
-  }
-
-  override def dataType: DataType =
-    ArrayType(StringType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def foldable: Boolean = child.foldable
-  override def prettyName: String = "tokenize_cjk"
-
-  override def nullSafeEval(input: Any): Any =
-    TokenizeCjk.compute(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.plans.TokenizeCjk.compute($c);")
+  override protected def walk(s: UTF8String): Any = TokenizeCjk.compute(s)
 
   override protected def withNewChildInternal(newChild: Expression): TokenizeCjk =
     copy(child = newChild)

@@ -34,17 +34,6 @@ object StatefulStreaming {
   // twin (OpModule output discipline — review r13 finding #7)
   case class FunnelAdvance(user_id: Long, stage: Long)
 
-  /** Normalize the events stream to the keyed shape both operators consume. */
-  def keyedEvents(events: DataFrame): Dataset[KeyedEvent] = {
-    import events.sparkSession.implicits._
-    events
-      .filter(col("user_id").isNotNull && col("ts").isNotNull)
-      .select(col("event_id"), col("user_id"),
-        (unix_timestamp(col("ts")) * 1000).as("tsMillis"),
-        when(col("event_type") === "signup", 1).otherwise(0).as("claimed"))
-      .as[KeyedEvent]
-  }
-
   /** A4: emit one row per (user, day) first-seen, with the 7-day
     * returning-user flag. Works identically on a batch or streaming
     * Dataset (flatMapGroupsWithState runs in batch mode with

@@ -20,7 +20,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the suites run on the engine's own session. And queries bind the
   * native expressions only through `functions.Natives`: no SQL text in
   * `src/main` outside the registry file names one, and nothing registers
-  * functions on a session while a query is built.
+  * functions on a session while a query is built. Only `plans.StringWalk`
+  * spells the type check and the generated call of a native function of
+  * one string column, so a new walk cannot grow that scaffold back.
   */
 class BoundedWindowLintSpec extends AnyFunSuite {
 
@@ -146,5 +148,20 @@ class BoundedWindowLintSpec extends AnyFunSuite {
         _.contains("GraftFunctions.register")))
     assert(registers.isEmpty,
       "per-query function registration:\n" + registers.mkString("\n"))
+  }
+
+  test("only plans.StringWalk spells the contract of a native function " +
+      "of one string column") {
+    // the type check's message and the generated static call
+    // `...compute($c...)` of a walk; LshSigs takes an array and three
+    // parameters, so it keeps its own generated call
+    val tree = "src/main/scala/graft/plans"
+    val typeCheck = outside("StringWalk.scala", tree)(
+      _.contains("requires a string argument"))
+    val genCall = outside("StringWalk.scala", tree)(_.contains(".compute($"))
+      .filterNot(_.contains("LshSigs.scala:"))
+    assert(typeCheck.isEmpty && genCall.isEmpty,
+      "native string walk scaffold outside plans.StringWalk:\n" +
+        (typeCheck ++ genCall).mkString("\n"))
   }
 }

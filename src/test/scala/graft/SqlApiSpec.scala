@@ -9,11 +9,11 @@ import graft.core.SqlCatalog
   */
 class SqlApiSpec extends SparkSpec {
 
-  test("SQL-text forms of the native one-walk expressions equal the " +
-      "Column forms") {
-    import graft.functions.{Natives, Text}
-    // two fixture views carrying every argument type the 13 names take:
-    // text, two sorted distinct token arrays, two array<float> vectors
+  import graft.functions.{Natives, Text}
+
+  /** Two fixture views carrying every argument type the 13 names take:
+    * text, two sorted distinct token arrays, two array<float> vectors. */
+  private def nativeViews(): Unit = {
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select(col("doc_id").as("id"), col("text"))
       .withColumn("ta", sort_array(Text.tokenizeDistinct(col("text"))))
@@ -24,44 +24,74 @@ class SqlApiSpec extends SparkSpec {
         reverse(col("embedding")).as("eb"))
     docs.createOrReplaceTempView("sql_docs")
     vecs.createOrReplaceTempView("sql_vecs")
-    // (registered name, its SQL call, the typed Column form, relation)
-    val cases = Seq(
-      ("cosine_sim", "cosine_sim(ea, eb)",
-        Natives.cosineSim(col("ea"), col("eb")), "sql_vecs"),
-      ("sorted_intersect_count", "sorted_intersect_count(ta, tb)",
-        Natives.sortedIntersectCount(col("ta"), col("tb")), "sql_docs"),
-      ("text_stats", "text_stats(text)",
-        Natives.textStats(col("text")), "sql_docs"),
-      ("classifier_stats", "classifier_stats(text)",
-        Natives.classifierStats(col("text")), "sql_docs"),
-      ("minhash_sigs", "minhash_sigs(text)",
-        Natives.minhashSigs(col("text")), "sql_docs"),
-      ("simhash16", "simhash16(text)",
-        Natives.simhash16(col("text")), "sql_docs"),
-      ("simhash60", "simhash60(text)",
-        Natives.simhash60(col("text")), "sql_docs"),
-      ("cdc_chunks", "cdc_chunks(text)",
-        Natives.cdcChunks(col("text")), "sql_docs"),
-      ("agms_signs", "agms_signs(text)",
-        Natives.agmsSigns(col("text")), "sql_docs"),
-      ("rolling_fps", "rolling_fps(text, 8)",
-        Natives.rollingFps(col("text"), 8), "sql_docs"),
-      ("tokenize_cjk", "tokenize_cjk(text)",
-        Text.tokenizeCjk(col("text")), "sql_docs"),
-      ("doc_fingerprint", "doc_fingerprint(text)",
-        Text.fingerprint(col("text")), "sql_docs"),
-      ("jaccard_sim", "jaccard_sim(ta, tb)",
-        graft.operators.Dedup.jaccard(col("ta"), col("tb")), "sql_docs"))
+  }
+
+  // (registered name, its arity, its SQL call, the typed Column form,
+  // relation)
+  private lazy val cases = Seq(
+    ("cosine_sim", 2, "cosine_sim(ea, eb)",
+      Natives.cosineSim(col("ea"), col("eb")), "sql_vecs"),
+    ("sorted_intersect_count", 2, "sorted_intersect_count(ta, tb)",
+      Natives.sortedIntersectCount(col("ta"), col("tb")), "sql_docs"),
+    ("text_stats", 1, "text_stats(text)",
+      Natives.textStats(col("text")), "sql_docs"),
+    ("classifier_stats", 1, "classifier_stats(text)",
+      Natives.classifierStats(col("text")), "sql_docs"),
+    ("minhash_sigs", 1, "minhash_sigs(text)",
+      Natives.minhashSigs(col("text")), "sql_docs"),
+    ("simhash16", 1, "simhash16(text)",
+      Natives.simhash16(col("text")), "sql_docs"),
+    ("simhash60", 1, "simhash60(text)",
+      Natives.simhash60(col("text")), "sql_docs"),
+    ("cdc_chunks", 1, "cdc_chunks(text)",
+      Natives.cdcChunks(col("text")), "sql_docs"),
+    ("agms_signs", 1, "agms_signs(text)",
+      Natives.agmsSigns(col("text")), "sql_docs"),
+    ("rolling_fps", 2, "rolling_fps(text, 8)",
+      Natives.rollingFps(col("text"), 8), "sql_docs"),
+    ("tokenize_cjk", 1, "tokenize_cjk(text)",
+      Text.tokenizeCjk(col("text")), "sql_docs"),
+    ("doc_fingerprint", 1, "doc_fingerprint(text)",
+      Text.fingerprint(col("text")), "sql_docs"),
+    ("jaccard_sim", 2, "jaccard_sim(ta, tb)",
+      graft.operators.Dedup.jaccard(col("ta"), col("tb")), "sql_docs"))
+
+  test("SQL-text forms of the native one-walk expressions equal the " +
+      "Column forms") {
+    nativeViews()
     assert(cases.map(_._1).toSet ===
       graft.plans.GraftFunctions.functions.map(_._1.funcName).toSet,
       "every registered name has exactly one case")
-    cases.foreach { case (name, sqlCall, column, view) =>
+    cases.foreach { case (name, _, sqlCall, column, view) =>
       val sqlDf = spark.sql(s"SELECT id, $sqlCall AS v FROM $view")
       val colDf = spark.table(view).select(col("id"), column.as("v"))
       assert(sqlDf.count() > 0, s"$name: empty fixture")
       assert(sqlDf.exceptAll(colDf).count() === 0 &&
         colDf.exceptAll(sqlDf).count() === 0,
         s"$name: SQL text differs from its Column form")
+    }
+  }
+
+  test("every registered SQL function rejects one argument too many and " +
+      "one too few, naming itself and both counts") {
+    nativeViews()
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else String.valueOf(t.getMessage) +: messages(t.getCause)
+    cases.foreach { case (name, arity, sqlCall, _, view) =>
+      val args = sqlCall.stripPrefix(s"$name(").stripSuffix(")")
+        .split(", ").toSeq
+      assert(args.size === arity, s"$name: the table's call has $arity args")
+      Seq(args :+ args.last, args.init).foreach { wrong =>
+        val call = s"$name(${wrong.mkString(", ")})"
+        val e = intercept[Exception](
+          spark.sql(s"SELECT $call AS v FROM $view").collect())
+        val want = s"$name takes $arity argument"
+        assert(messages(e).exists(m => m.contains(want) &&
+            m.contains(s"got ${wrong.size}")),
+          s"$call: wanted '$want ..., got ${wrong.size}' in " +
+            messages(e).mkString(" | "))
+      }
     }
   }
 
