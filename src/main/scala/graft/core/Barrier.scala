@@ -94,7 +94,8 @@ object Barrier {
     // creation from ANY thread
     sweepDead(df.sparkSession)
     val scope = myScope()
-    df.sparkSession.conf.getOption(ConfKey)
+    if (holds(scope, df)) df
+    else df.sparkSession.conf.getOption(ConfKey)
       .getOrElse(defaultMode(df.sparkSession.sparkContext.master)) match {
       case "persist" =>
         val p = df.persist(StorageLevel.DISK_ONLY)
@@ -116,6 +117,18 @@ object Barrier {
         out
     }
   }
+
+  /** `df` is a barrier this scope already holds — a localCheckpoint's
+    * `LogicalRDD` or a persisted frame — so a second barrier over it
+    * would only copy blocks it already has. */
+  private def holds(scope: Scope, df: DataFrame): Boolean =
+    scope.synchronized {
+      scope.persisted.exists(_ eq df) || (df.queryExecution.logical match {
+        case lr: org.apache.spark.sql.execution.LogicalRDD =>
+          scope.ckptRddIds.contains(lr.rdd.id)
+        case _ => false
+      })
+    }
 
   /** `df.barrier()` chain syntax at call sites. */
   implicit class BarrierOps(private val df: DataFrame) extends AnyVal {

@@ -5,13 +5,34 @@ import org.apache.spark.sql.SparkSession
 /** The one session builder of the engine and its CLI mains: UTC (oracle
   * parity), AQE (runtime re-plan + skew split), shuffle partitions = the
   * core count, graft extensions registered, parquet NANOS timestamps read
-  * as longs (see `Tables.load`), and a generated-code cache sized to the
-  * engine's working set ([[CodegenCacheEntries]]). The core
+  * as longs (see `Tables.load`), a generated-code cache sized to the
+  * engine's working set ([[CodegenCacheEntries]]), and a local file
+  * system that starts no OS process (below). The core
   * count is the only environment setting (`SPARK_GRAFT_CPUS`, else every
   * available core); every other setting is a Spark conf, and a `spark.*`
   * JVM system property that this builder does not set reaches the
   * session, e.g. `JAVA_TOOL_OPTIONS=-Dspark.graft.reuseBarrier=persist`
   * (the knobs are listed in [[Knobs]]).
+  *
+  * The local file system. Without the native Hadoop library (`libhadoop`,
+  * which Spark's distribution does not ship), Hadoop's
+  * `RawLocalFileSystem` starts a `chmod` for every file and directory it
+  * creates, `.crc` files included, and a `readlink` for the link-status
+  * checks behind every `FileContext` rename, the way Spark commits each
+  * checkpoint file. Every `Sinks` store write, `BatchStore` contribution,
+  * streaming offset and commit log entry and state-store delta waited on
+  * those processes: one perfbench `reference_stream` run (seed 7, 4
+  * cores) started 3,378 of them, 1,945 `chmod` and 1,400 `readlink`
+  * (JFR `jdk.ProcessStart` events). The two `file:` confs below name
+  * [[LocalRawFileSystem]]'s wrappers, which do both through `java.nio`:
+  * same files, permission bits, `.crc` checksums, committers and
+  * checkpoint renames. The same run then starts 31, none of them
+  * Hadoop's `chmod` or `readlink` (29 are Spark's own `rm -rf` of its
+  * session artifact directories). Hadoop caches one `file:` FileSystem
+  * per JVM, keyed on scheme, authority and user, not on the conf, so
+  * these confs hold only when this builder runs before anything else
+  * touches a Hadoop FileSystem; every main, perfbench and the test
+  * suite's session call it first.
   */
 object Sessions {
 
@@ -62,6 +83,12 @@ object Sessions {
       // parquet TIMESTAMP(NANOS) columns read as longs, which
       // `Tables.load`/`loadStream` convert (Spark 4 refuses them otherwise)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      // the fork-free local file system (see above), for FileSystem and
+      // FileContext callers alike
+      .config("spark.hadoop.fs.file.impl",
+        classOf[LocalChecksumFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[LocalChecksumFs].getName)
       // bucketed-table metadata (Tables.writeBucketed) needs a catalog
       // location; keep it out of the working tree in local runs (a real
       // deployment points this at its warehouse)

@@ -94,19 +94,21 @@ case class CosineSimilarity(left: Expression, right: Expression)
 object GraftFunctions {
 
   import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
-  import org.apache.spark.sql.graft.ColumnBridge.{column, expression}
+  import org.apache.spark.sql.graft.ColumnBridge.{column, expression,
+    wrongNumArgs}
 
   type Entry = (FunctionIdentifier, ExpressionInfo, FunctionBuilder)
 
   /** One registry entry: `name` with `arity` arguments, documented by
-    * `className`. A call with another argument count fails naming the
-    * function and both counts, before `build` sees its arguments. */
+    * `className`. A call with another argument count fails before `build`
+    * sees its arguments, with the `AnalysisException` a built-in raises
+    * (`WRONG_NUM_ARGS`, naming the function and both counts). */
   private def fn(name: String, className: String, arity: Int)(
       build: FunctionBuilder): Entry =
     (FunctionIdentifier(name), new ExpressionInfo(className, name),
       children => {
-        require(children.size == arity, s"$name takes $arity argument" +
-          s"${if (arity == 1) "" else "s"}, got ${children.size}")
+        if (children.size != arity)
+          throw wrongNumArgs(name, arity, children.size)
         build(children)
       })
 

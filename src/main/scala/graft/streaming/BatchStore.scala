@@ -150,25 +150,17 @@ object BatchStore {
     * '=' (so partition dirs like `__bucket=5` stay visible),
     * '.'-prefixed always. A crashed write leaves part files under
     * `_temporary/...`; counting them would read a data-less dir and fail
-    * schema inference. */
-  private def hasData(f: FileSystem, d: Path): Boolean = {
-    val it = f.listFiles(d, true)
-    val dPath = d.toUri.getPath
-    var found = false
-    while (!found && it.hasNext) {
-      val file = it.next()
-      var p = file.getPath
-      var hidden = file.getLen <= 0
-      while (!hidden && p != null && p.toUri.getPath != dPath) {
-        val nm = p.getName
-        hidden = (nm.startsWith("_") && !nm.contains("=")) ||
-          nm.startsWith(".")
-        p = p.getParent
-      }
-      found = !hidden
+    * schema inference. The walk uses `listStatus`, not `listFiles`: each
+    * `LocatedFileStatus` the latter builds copies the file's permission,
+    * which a local file system without the native Hadoop library loads by
+    * running `ls -ld`. */
+  private def hasData(f: FileSystem, d: Path): Boolean =
+    f.listStatus(d).exists { s =>
+      val nm = s.getPath.getName
+      val hidden = (nm.startsWith("_") && !nm.contains("=")) ||
+        nm.startsWith(".")
+      !hidden && (if (s.isDirectory) hasData(f, s.getPath) else s.getLen > 0)
     }
-    found
-  }
 
   private def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, ExpressionUtils}
+import org.apache.spark.sql.errors.QueryCompilationErrors
 
 /** Column <-> Expression bridge.
   *
@@ -15,7 +16,7 @@ import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Expression
   * silently diverge from the Column form. A same-package shim is the
   * established extension pattern for this (Delta Lake and Frameless ship
   * the same bridge); it touches only the two conversions, nothing else
-  * behind the seal.
+  * behind the seal, plus the built-in arity error ([[wrongNumArgs]]).
   *
   * `expression` converts the whole node tree. Spark's own
   * `ExpressionUtils.expression` wraps a composed Column in a placeholder
@@ -26,4 +27,10 @@ import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Expression
 object ColumnBridge {
   def expression(c: Column): Expression = ColumnNodeToExpressionConverter(c.node)
   def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** The `AnalysisException` a built-in function raises when called with
+    * `actual` arguments instead of `expected` (`WRONG_NUM_ARGS`), for the
+    * registry builders that the same seal keeps from raising it. */
+  def wrongNumArgs(name: String, expected: Int, actual: Int): Throwable =
+    QueryCompilationErrors.wrongNumArgsError(name, Seq(expected), actual)
 }

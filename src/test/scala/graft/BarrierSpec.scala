@@ -127,4 +127,53 @@ class BarrierSpec extends SparkSpec {
       graft.core.Barrier.releaseAll(spark)
     }
   }
+
+  test("a barrier over a relation this thread's scope already holds runs " +
+      "no job and returns it, in both modes") {
+    // jobs submitted from this thread while `body` runs: a tag in this
+    // thread's local properties picks them out, and a marker job run after
+    // `body` is seen last, since the listener bus delivers in order
+    def jobsOf(body: => Unit): Int = {
+      val tag = "barrier-spec-" + System.nanoTime()
+      val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          Option(j.properties).flatMap(p => Option(p.getProperty(tag)))
+            .foreach(seen.add)
+          ()
+        }
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      try {
+        sc.setLocalProperty(tag, "body")
+        try body finally sc.setLocalProperty(tag, "marker")
+        sc.parallelize(Seq(1), 1).count()
+        def next(): String = Option(seen.poll(60,
+          java.util.concurrent.TimeUnit.SECONDS)).getOrElse(
+          fail("the marker job never reached the listener"))
+        Iterator.continually(next()).takeWhile(_ != "marker").size
+      } finally {
+        sc.setLocalProperty(tag, null)
+        sc.removeSparkListener(listener)
+      }
+    }
+    Seq("localCheckpoint", "persist").foreach { mode =>
+      spark.conf.set(graft.core.Barrier.ConfKey, mode)
+      try {
+        val first = graft.core.Barrier(
+          graft.core.Tables.load(spark, sfDir, "documents").select("doc_id"))
+        var second = first
+        assert(jobsOf { second = graft.core.Barrier(first) } === 0, mode)
+        assert(second.collect().toSet === first.collect().toSet, mode)
+        // a relation built on top of a barrier is not one: it gets its own
+        val derived = first.filter("doc_id % 2 = 0")
+        assert(jobsOf(graft.core.Barrier(derived)) > 0, mode)
+      } finally {
+        spark.conf.unset(graft.core.Barrier.ConfKey)
+        graft.core.Barrier.releaseAll(spark)
+      }
+    }
+  }
 }

@@ -97,7 +97,7 @@ class RollingFpsSpec extends SparkSpec {
     fails("rolling_fps(norm, '4')", "integral")
     fails("rolling_fps(norm, 4.9)", "integral")
     fails("rolling_fps(norm, CAST(NULL AS INT))", "NULL")
-    fails("rolling_fps(norm)", "2 arguments")
+    fails("rolling_fps(norm)", "requires 2 parameters")
   }
 
   test("seedable base: BaseInv is the true modular inverse, and the " +
